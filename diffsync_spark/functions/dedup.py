@@ -43,6 +43,20 @@ def content_key(text: Column) -> tuple[Column, Column]:
     return F.xxhash64(norm), F.xxhash64(norm, F.lit(0x9E3779B9))
 
 
+def _has_repartition(plan) -> bool:
+    """Whether a JVM logical plan holds a ``Repartition`` or
+    ``RepartitionByExpression`` node — matched on node classes, so a
+    column or path that merely spells "Repartition" does not count."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName().startswith("Repartition"):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
 def _spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin a narrow LOCAL-FILE-SCAN input across the cluster when
     the scan would give fewer partitions than cores. Spark sizes scan
@@ -66,7 +80,7 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
         # idempotence: a frame that already went through a repartition (this
         # helper upstream, or a caller's own) is spread — a second
         # round-robin would only add a shuffle of the same bytes
-        if "Repartition" in df._jdf.queryExecution().logical().toString():
+        if _has_repartition(df._jdf.queryExecution().logical()):
             return df
         files = df.inputFiles()
     except Exception:

@@ -49,11 +49,9 @@ def build_session(
         # execution pool). A threshold below the 64 MB coalescing
         # advisory never fires at all (AQE coalesces partitions up to
         # the advisory first), so there is no value that is both safe
-        # and effective here. Default stays off; the env knob remains
-        # for hosts with per-task memory to spare.
+        # and effective here: it stays off (extra_conf can still set it).
         .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "0"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0"
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1014,15 +1014,7 @@ class SnapshotTable:
         bucket_src = list(self.model.parent_key or self.model.identifiers)
         routed: set[int] | None = None
         if set(bucket_src) <= set(eq):
-            stored = {f.name: f.dataType for f in public.fields}
-            probe = self.spark.createDataFrame(
-                [tuple(eq[c] for c in bucket_src)],
-                T.StructType(
-                    [T.StructField(c, stored[c]) for c in bucket_src]),
-            )
-            routed = {probe.select(
-                F.pmod(F.xxhash64(*bucket_src), F.lit(man["n_buckets"]))
-                .cast("int").alias("b")).first()["b"]}
+            routed = {self._route_key(man, public, eq)[0]}
         stats = man.get("_file_stats") or {}
         bounds = [(c, op, self._stat_scalar(v)) for c, op, v in predicates]
 
@@ -1075,6 +1067,32 @@ class SnapshotTable:
             .select(*[f.name for f in public.fields])
         )
 
+    def _route_key(
+        self, man: dict, public: T.StructType, vals: dict
+    ) -> tuple[int, int | None]:
+        """``(bucket, full-key xxhash64)`` of one key, hashed exactly as
+        MERGE routes its writes: xxhash64 over each value as a literal cast
+        to its STORED type. The projection sits over a one-row ``VALUES``
+        LocalRelation that Catalyst's ConvertToLocalRelation folds, so
+        ``.first()`` is answered on the driver without a Spark job. The
+        hash is None when ``vals`` does not cover the full identifier key
+        (scan()'s parent-key routing needs only the bucket)."""
+        stored = {f.name: f.dataType for f in public.fields}
+        ids = list(self.model.identifiers)
+        bucket_src = self.model.parent_key or ids
+        lits = {c: F.lit(vals[c]).cast(stored[c])
+                for c in (*bucket_src, *ids) if c in vals}
+        full_key = (
+            F.xxhash64(*[lits[c] for c in ids]) if set(ids) <= set(lits)
+            else F.lit(None).cast("long")
+        )
+        r = self.spark.sql("VALUES (0)").select(
+            F.pmod(F.xxhash64(*[lits[c] for c in bucket_src]),
+                   F.lit(man["n_buckets"])).cast("int").alias("b"),
+            full_key.alias("h"),
+        ).first()
+        return r.b, r.h
+
     def _bucket_col(self):
         cols = self.model.parent_key or self.model.identifiers
         return F.pmod(F.xxhash64(*cols), F.lit(self._manifest()["n_buckets"])).cast(
@@ -1100,10 +1118,13 @@ class SnapshotTable:
         analog of the reference's ``store.get``, ``store/local.py:30-49``).
 
         The key's bucket is computed with the same xxhash64-over-stored-types
-        expression the MERGE routes writes with (a one-row local job — no
-        table scan), then the manifest prunes the read to that single
-        bucket's file set: at 1,024 buckets a lookup touches ~0.1% of the
-        table regardless of total size. Returns the row dict or None."""
+        expression the MERGE routes writes with (folded on the driver — no
+        Spark job, see :meth:`_route_key`), then the manifest prunes the
+        read to that single bucket's file set: at 1,024 buckets a lookup
+        touches ~0.1% of the table regardless of total size. The read is
+        then one Spark job on copy-on-write and merge-on-read tables alike
+        (unless a copy-on-write slot's files span several scan partitions,
+        when ``take(1)`` may scale up). Returns the row dict or None."""
         ids = list(self.model.identifiers)
         if len(key) != len(ids):
             raise DiffSyncSparkError(
@@ -1111,21 +1132,13 @@ class SnapshotTable:
             )
         man = self._manifest(version)
         public = T.StructType.fromJson(json.loads(man["schema"]))
-        stored = {f.name: f.dataType for f in public.fields}
-        probe = self.spark.createDataFrame(
-            [tuple(key)],
-            T.StructType([T.StructField(k, stored[k]) for k in ids]),
-        )
-        bucket_src = self.model.parent_key or ids
-        sel = probe.select(
-            F.pmod(F.xxhash64(*bucket_src), F.lit(man["n_buckets"]))
-            .cast("int").alias("b"),
-            # the writer's slot hash (over the FULL key) — Python % matches
-            # Spark pmod sign semantics for a positive modulus
-            F.xxhash64(*ids).alias("h"),
-        ).first()
-        files = self._lookup_files(man, sel.b, sel.h)
-        dfiles = self._lookup_delta_files(man, sel.b, sel.h)
+        bucket, key_hash = self._route_key(man, public, dict(zip(ids, key)))
+        # the writer's slot hash is over the FULL key — Python % matches
+        # Spark pmod sign semantics for a positive modulus
+        files = self._lookup_files(man, bucket, key_hash)
+        dfiles = self._lookup_delta_files(man, bucket, key_hash)
+        if not files and not dfiles:
+            return None
         full = self._full_schema(public)
         key_cond = F.lit(True)
         for k, v in zip(ids, key):
@@ -1134,22 +1147,20 @@ class SnapshotTable:
             # merge-on-read: the key's row may live in the base AND in any
             # layer — filter the key FIRST (parquet row-group pushdown on
             # the write-ordered files), then fold the handful of survivors
+            # (at most 1 + max_delta_layers files) in ONE task: a single
+            # partition already satisfies the window's clustering, so the
+            # fold needs no Exchange and the lookup no second job
             fold_schema = self._fold_schema(full)
-            base = (
-                self.spark.read.schema(full).parquet(*files)
-                .withColumn(META_COMMIT, F.lit(0).cast("long"))
-                if files else self.spark.createDataFrame([], fold_schema)
-            )
-            frame = self._fold(
-                base.unionByName(
-                    self.spark.read.schema(fold_schema).parquet(*dfiles)
-                ).filter(key_cond)
-            )
+            rows_src = self.spark.read.schema(fold_schema).parquet(*dfiles)
+            if files:
+                rows_src = (
+                    self.spark.read.schema(full).parquet(*files)
+                    .withColumn(META_COMMIT, F.lit(0).cast("long"))
+                    .unionByName(rows_src)
+                )
+            frame = self._fold(rows_src.filter(key_cond).coalesce(1))
         else:
-            frame = (
-                self.spark.read.schema(full).parquet(*files)
-                if files else self.spark.createDataFrame([], full)
-            ).filter(key_cond)
+            frame = self.spark.read.schema(full).parquet(*files).filter(key_cond)
         rows = (
             frame.filter(~F.coalesce(F.col(META_DELETED), F.lit(False)))
             .select(*[f.name for f in public.fields])
@@ -1935,14 +1946,16 @@ class SnapshotTable:
         # Columns on the handle (the Observation itself is per-merge).
         # Unlike the schema-keyed entries, the bucket-tuple key space is
         # unbounded on a long-lived handle whose batches touch varying
-        # subsets (each cached Column pins a JVM tree via py4j) — cap the
-        # whole cache and let a miss rebuild cheaply.
+        # subsets (each cached Column pins a JVM tree via py4j) — at the
+        # cap, evict the observe entries only (the schema-keyed merge
+        # entries are few and costly) and let a miss rebuild cheaply.
         _okey = ("observe", tuple(buckets), tuple(sorted(conds.items())))
         if _okey in self._expr_cache:
             (exprs,) = self._expr_cache[_okey]
         else:
             if len(self._expr_cache) > 256:
-                self._expr_cache.clear()
+                for k in [k for k in self._expr_cache if k[0] == "observe"]:
+                    del self._expr_cache[k]
             exprs = [
                 F.expr(
                     "array(" + ",".join(

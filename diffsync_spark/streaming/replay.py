@@ -14,6 +14,7 @@ transactional micro-batch epilogue.
 from __future__ import annotations
 
 import hashlib
+import json
 import time
 from typing import Iterable, Iterator
 
@@ -24,16 +25,27 @@ from diffsync_spark.model import ModelSchema
 from diffsync_spark.sinks.table import SnapshotTable
 
 
+def _signed_int64(col) -> bool:
+    """A parquet column whose INT64 values ARE signed integers: no logical
+    annotation (Spark's plain ``long``) or ``INT(64, signed)``."""
+    if col.physical_type != "INT64":
+        return False
+    lt = json.loads(col.logical_type.to_json())
+    return lt["Type"] == "None" or (lt["Type"] == "Int" and lt["isSigned"])
+
+
 def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
     """(min, max) of ``seq`` read from parquet ROW-GROUP FOOTER STATISTICS
     instead of a cluster scan — the Iceberg/Delta metadata-only min/max.
     Sound only for a BARE file scan (any Filter/Project above the relation
     changes the row set, so the guard below bails to the exact aggregate),
-    an INT64 physical column (parquet int64 stats are exact, never
-    truncated like string stats), and footers that all carry min/max
-    (a stats-less or all-NULL row group returns None → fallback). Both
-    paths ignore NULL seq values — parquet min/max exclude nulls exactly
-    as ``F.min``/``F.max`` do. Returns None on ANY doubt."""
+    a plain signed-integer INT64 column (parquet int64 stats are exact,
+    never truncated like string stats; a DECIMAL or TIMESTAMP column is
+    INT64 too, but its stats are not the integer seq values), and footers
+    that all carry min/max (a stats-less or all-NULL row group returns
+    None → fallback). Both paths ignore NULL seq values — parquet min/max
+    exclude nulls exactly as ``F.min``/``F.max`` do. Returns None on ANY
+    doubt."""
     try:
         plan = changelog._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -41,16 +53,22 @@ def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
         files = changelog.inputFiles()
         if not files:
             return None
-        from urllib.parse import unquote, urlparse
+        from urllib.parse import unquote
 
         import pyarrow.parquet as pq
 
         lo = hi = None
         for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("file", ""):
+            # inputFiles() gives percent-encoded file: URIs; strip the
+            # scheme and authority by hand — urlparse would cut a name at
+            # an unencoded '#' or '?'
+            if f.startswith("file:"):
+                path = unquote("/" + f[len("file:"):].lstrip("/"))
+            elif ":" in f.split("/", 1)[0]:
                 return None  # remote FS: the distributed agg is the tool
-            md = pq.ParquetFile(unquote(u.path)).metadata
+            else:
+                path = f
+            md = pq.ParquetFile(path).metadata
             # match the full dotted path, not .name: a NESTED field called
             # seq (e.g. meta.seq) also has .name == "seq" and can precede
             # the top-level column in footer order
@@ -58,7 +76,7 @@ def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
                 (i for i in range(md.num_columns)
                  if md.schema.column(i).path == "seq"), None,
             )
-            if idx is None or md.schema.column(idx).physical_type != "INT64":
+            if idx is None or not _signed_int64(md.schema.column(idx)):
                 return None
             for rg in range(md.num_row_groups):
                 grp = md.row_group(rg)
@@ -67,9 +85,11 @@ def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
                 st = grp.column(idx).statistics
                 if st is None or not st.has_min_max:
                     return None
+                if type(st.min) is not int or type(st.max) is not int:
+                    return None
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
-        return None if lo is None else (int(lo), int(hi))
+        return None if lo is None else (lo, hi)
     except Exception:
         return None
 

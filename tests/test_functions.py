@@ -1138,3 +1138,22 @@ def test_quantized_ivf_index_probe(spark, tmp_path):
              for r in ivf_cosine_topk(None, queries, k=5, n_probe=4,
                                       index_path=qp).collect()}
     assert len(full & quant) / len(full) >= 0.9
+
+
+def test_spread_small_input_checks_plan_nodes_not_names(spark, tmp_path):
+    """The spread helper's idempotence check looks for repartition NODES:
+    a column named ``Repartition`` must not pass for an already-spread
+    frame, while a real repartition upstream still does."""
+    from diffsync_spark.functions.dedup import _spread_small_input
+
+    d = str(tmp_path / "named")
+    spark.range(50).select(
+        F.col("id").alias("Repartition"), F.lit("doc").alias("text")
+    ).coalesce(1).write.parquet(d)
+    df = spark.read.parquet(d).filter(F.col("Repartition") >= 0)
+    spread = _spread_small_input(df)
+    assert spread is not df
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert _spread_small_input(spread) is spread
+    mine = df.repartition(3, "Repartition")
+    assert _spread_small_input(mine) is mine

@@ -284,6 +284,55 @@ def test_mor_delta_free_buckets_skip_the_fold(spark, tmp_path):
     assert "Window" in plan_l
 
 
+def _jobs_and_stages(spark, group, fn):
+    """Run ``fn`` under its own job group; return (result, jobs, stages)."""
+    sc = spark.sparkContext
+    prev = {k: sc.getLocalProperty(k) for k in
+            ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")}
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+    return out, len(jobs), len(stages)
+
+
+def test_point_lookup_runs_one_job(spark, tmp_path):
+    """A point lookup is ONE Spark job on both write modes: key routing
+    folds on the driver (no probe job), and the merge-on-read fold of the
+    key's few surviving rows runs in a single task — one stage, so no
+    Exchange — instead of a shuffle job plus a read job."""
+    from diffsync_spark.sinks.table import SnapshotTable
+
+    src = spark.createDataFrame(_rows(16), _CDC).drop("op", "seq")
+    for mode in ("cow", "mor"):
+        t = SnapshotTable.create(
+            spark, str(tmp_path / f"lookup_{mode}"), TRANSCRIPT_MODEL,
+            schema=src.schema, n_buckets=4, write_mode=mode,
+        )
+        t.merge(src.withColumn("op", F.lit("insert")), mode="force",
+                checkpoint_id="boot", batch_id=0)
+        if mode == "mor":
+            up = spark.createDataFrame(_rows(16), _CDC).withColumn(
+                "text", F.lit("layered"))
+            t.merge(up, checkpoint_id="c", batch_id=1)
+            assert t._manifest().get("deltas"), "setup: expected a layer"
+        t.lookup(["c0", 0])  # warm: the first read of a table is cold
+        row, jobs, stages = _jobs_and_stages(
+            spark, f"lookup-{mode}", lambda: t.lookup(["c3", 3]))
+        assert row is not None and row["turn_idx"] == 3
+        assert row["text"] == ("layered" if mode == "mor" else "t3")
+        assert (jobs, stages) == (1, 1), mode
+        miss, jobs, _ = _jobs_and_stages(
+            spark, f"miss-{mode}", lambda: t.lookup(["nope", 3]))
+        assert miss is None and jobs <= 1, mode
+
+
 def test_frame_sample_filters_before_the_arrow_udf(spark):
     """Video frame sampling: the kind filter and the payload-only
     projection must sit BELOW MapInPandas (only video payload bytes cross

@@ -1161,3 +1161,19 @@ def test_update_where(spark, tmp_path, target_df):
     ).count() == 0
     with pytest.raises(DiffSyncSparkError):
         table.update_where("true", set={"conv_id": F.lit("x")})
+
+
+def test_observe_cache_overflow_keeps_schema_entries(spark, tmp_path,
+                                                     target_df):
+    """The handle's expression cache is capped against an unbounded
+    stream of observe keys (one per touched-bucket subset); reaching the
+    cap evicts only those, never the schema-keyed merge expressions."""
+    table = _bootstrap(spark, tmp_path, target_df)
+    merge_keys = [k for k in table._expr_cache if k[0] == "merge_sel"]
+    assert merge_keys, "setup: the bootstrap merge caches its selection"
+    frame = spark.range(1)
+    for i in range(300):
+        table._observe_bucket_counts(frame, f"o{i}", [i], {"n": "id = {b}"})
+    assert all(k in table._expr_cache for k in merge_keys)
+    n_obs = sum(k[0] == "observe" for k in table._expr_cache)
+    assert 0 < n_obs <= 257

@@ -595,3 +595,64 @@ def test_seq_bounds_footer_fast_path(spark, tmp_path):
     ).write.parquet(d3)
     scan3 = spark.read.parquet(d3)
     assert _seq_bounds_from_footers(scan3) == (0, 99)
+
+
+def test_seq_bounds_decimal_seq_falls_back(spark, tmp_path, target_df,
+                                           changelog_pdf):
+    """A DECIMAL(18,2) seq is physically INT64 in parquet, but its footer
+    stats are Decimals, not the seq values: the fast path must bail, and a
+    replay of the file scan must reach the same state as the aggregate path
+    — including the events between the negative fractional minimum and the
+    integer it would truncate to."""
+    import decimal
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from diffsync_spark.streaming.replay import (
+        _seq_bounds_from_footers, _signed_int64, replay_batches,
+    )
+
+    pdf = changelog_pdf.copy()
+    pdf["seq"] = [decimal.Decimal(int(s) - 555) / 100 for s in pdf["seq"]]
+    ddl = CHANGELOG_DDL.replace("seq long", "seq decimal(18,2)")
+    d = str(tmp_path / "chg_dec")
+    mem = spark.createDataFrame(pdf, ddl)
+    mem.coalesce(2).write.parquet(d)
+    scan = spark.read.parquet(d)
+    # the guard rejects the column on its logical type, before any stats
+    # are decoded (pyarrow versions differ in whether they decode them)
+    col = pq.ParquetFile(glob.glob(f"{d}/*.parquet")[0]).metadata.schema.column(0)
+    assert (col.path, col.physical_type) == ("seq", "INT64")
+    assert not _signed_int64(col)
+    assert _seq_bounds_from_footers(scan) is None
+    states = []
+    for name, changelog in (("files", scan), ("agg", mem)):
+        t = SnapshotTable.create(
+            spark, str(tmp_path / name), TRANSCRIPT_MODEL,
+            schema=target_df.schema, n_buckets=8,
+        )
+        t.merge(target_df.withColumn("op", F.lit("insert")), mode="force",
+                checkpoint_id="bootstrap", batch_id=0)
+        replay_batches(t, changelog, n_batches=4, checkpoint_id="r")
+        states.append(_state(t))
+    pd.testing.assert_frame_equal(states[0], states[1])
+
+
+def test_seq_bounds_footer_path_with_uri_characters(spark, tmp_path):
+    """Changelog files whose names hold '#' or '?' keep the footer fast
+    path: the local path comes from the file: URI without urlparse."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from diffsync_spark.streaming.replay import _seq_bounds_from_footers
+
+    d = tmp_path / "odd"
+    d.mkdir()
+    pq.write_table(pa.table({"seq": pa.array([3, None, -7], pa.int64())}),
+                   str(d / "b#1.parquet"))
+    pq.write_table(pa.table({"seq": pa.array([11, 2], pa.int64())}),
+                   str(d / "c?2.parquet"))
+    scan = spark.read.parquet(str(d))
+    assert len(scan.inputFiles()) == 2
+    assert _seq_bounds_from_footers(scan) == (-7, 11)
