@@ -95,6 +95,20 @@ def log_unchanged_records(diff_df: DataFrame, identifiers, limit: int = 1000) ->
     return len(keys)
 
 
+_warned_fallbacks: set[str] = set()
+
+
+def warn_fallback_once(site: str, reason: object) -> None:
+    """Log that fast path ``site`` fell back, and why — at WARNING, once
+    per process per site. A cause such as a missing pyarrow recurs on every
+    call, so a silent fallback would turn it into a permanent slow path
+    nobody sees; one line per process is enough to see it."""
+    if site in _warned_fallbacks:
+        return
+    _warned_fallbacks.add(site)
+    logger.warning("%s: falling back (%s)", site, reason)
+
+
 def log_merge(result: dict, table_path: str) -> None:
     """Emit one JSON metrics line for a merge/apply commit."""
     line = {

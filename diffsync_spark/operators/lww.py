@@ -28,12 +28,19 @@ def lww_dedup(
     df: DataFrame,
     model: ModelSchema,
     order_cols: tuple[str, ...] | None = None,
+    cluster_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Keep the last writer per natural key.
 
     ``order_cols`` defaults to ``model.version_cols`` plus ``seq`` if present
     (newest = max). Output drops the helper rank column; schema otherwise
     unchanged.
+
+    ``cluster_cols`` are columns derived from the natural key (e.g. a
+    table's bucket and writer slot), placed in front of the window's
+    partition key. The groups are the same, but an upstream
+    ``repartition(*cluster_cols)`` then satisfies the window's
+    distribution, so the window adds no Exchange of its own.
     """
     model.validate_frame(df)
     if order_cols is None:
@@ -49,7 +56,7 @@ def lww_dedup(
     # match, or a null-ts delete + update for the same key converges to a
     # different state depending on whether they share a batch — violating
     # batching invariance (tested: test_batching_invariance_null_ts_delete).
-    w = Window.partitionBy(*model.identifiers).orderBy(
+    w = Window.partitionBy(*cluster_cols, *model.identifiers).orderBy(
         *[F.col(c).desc_nulls_first() for c in order_cols]
     )
     return (

@@ -61,6 +61,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from diffsync_spark.errors import CommitConflict, DiffSyncSparkError
+from diffsync_spark.metrics import warn_fallback_once
 from diffsync_spark.model import ModelSchema
 from diffsync_spark.operators.lww import lww_dedup
 from diffsync_spark.sinks.fsio import LocalCommitIO
@@ -69,7 +70,9 @@ def _prof(label: str, t0: float) -> None:
     """Opt-in phase timing for the merge/commit path (guide §1: measure
     first). Zero-cost unless DIFFSYNC_PROFILE_MERGE is set; prints one
     line per phase to stderr so a profiling run can attribute wall time
-    to driver-side phases (stats pass, write job, footer stats, commit)."""
+    to driver-side phases (copy-on-write: stats pass, write job, footer
+    stats, commit; merge-on-read append: append_write_job,
+    quarantine_write, footer_pass, commit)."""
     if os.environ.get("DIFFSYNC_PROFILE_MERGE"):
         import sys as _sys
 
@@ -414,6 +417,31 @@ class SnapshotTable:
             )
         w.partitionBy(BUCKET, SLOT).parquet(data_dir)
 
+    def _footer_stats(self, md, want: set) -> dict[str, list]:
+        """Per-file ``[min, max]`` of the ``want`` columns from one parquet
+        footer's row-group statistics (a column with any row group lacking
+        usable stats is left out)."""
+        agg: dict[str, Any] = {}
+        for rg in range(md.num_row_groups):
+            row = md.row_group(rg)
+            for ci in range(row.num_columns):
+                col = row.column(ci)
+                name = col.path_in_schema
+                if name not in want or agg.get(name) is False:
+                    continue
+                st = col.statistics
+                lo = self._stat_scalar(st.min) if (
+                    st is not None and st.has_min_max) else None
+                hi = self._stat_scalar(st.max) if (
+                    st is not None and st.has_min_max) else None
+                if lo is None or hi is None:
+                    agg[name] = False  # one unknown row group poisons
+                    continue
+                cur = agg.get(name)
+                agg[name] = ([min(cur[0], lo), max(cur[1], hi)]
+                             if cur else [lo, hi])
+        return {c: v for c, v in agg.items() if v}
+
     def _collect_file_stats(
         self, paths: list[str], cols: list[str]
     ) -> dict[str, dict[str, list]]:
@@ -430,29 +458,42 @@ class SnapshotTable:
                 md = pq.ParquetFile(p).metadata
             except Exception:
                 continue
-            agg: dict[str, Any] = {}
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                for ci in range(row.num_columns):
-                    col = row.column(ci)
-                    name = col.path_in_schema
-                    if name not in want or agg.get(name) is False:
-                        continue
-                    st = col.statistics
-                    lo = self._stat_scalar(st.min) if (
-                        st is not None and st.has_min_max) else None
-                    hi = self._stat_scalar(st.max) if (
-                        st is not None and st.has_min_max) else None
-                    if lo is None or hi is None:
-                        agg[name] = False  # one unknown row group poisons
-                        continue
-                    cur = agg.get(name)
-                    agg[name] = ([min(cur[0], lo), max(cur[1], hi)]
-                                 if cur else [lo, hi])
-            stats = {c: v for c, v in agg.items() if v}
+            stats = self._footer_stats(md, want)
             if stats:
                 out[p] = stats
         return out
+
+    def _layer_footers(
+        self, data_dir: str, cols: list[str]
+    ) -> tuple[dict[str, list[str]], dict[int, int], dict[str, dict[str, list]]]:
+        """One footer pass over a freshly written layer: its files per
+        ``_bucket=`` dir, each bucket's row count (sum of footer
+        ``num_rows``) and the per-file column stats. The row counts are
+        authoritative, so a missing pyarrow or an unreadable footer
+        raises rather than being skipped."""
+        import pyarrow.parquet as pq
+
+        want = set(cols)
+        files: dict[str, list[str]] = {}
+        rows: dict[int, int] = {}
+        stats: dict[str, dict[str, list]] = {}
+        prefix = f"{BUCKET}="
+        for entry in self.io.list_dirs(data_dir):
+            if not entry.startswith(prefix):
+                continue
+            bk = int(entry[len(prefix):])
+            listed = self._list_bucket_files(data_dir, bk)
+            if not listed:
+                continue
+            files[str(bk)] = listed
+            rows[bk] = 0
+            for p in listed:
+                md = pq.ParquetFile(p).metadata
+                rows[bk] += md.num_rows
+                st = self._footer_stats(md, want)
+                if st:
+                    stats[p] = st
+        return files, rows, stats
 
     def _commit(self, manifest: dict, parent: int | None = None) -> None:
         """Write the manifest with exclusive-create (conflict detection), then
@@ -1326,6 +1367,12 @@ class SnapshotTable:
         Returns the lineage record. Re-invoking with an already-committed
         ``(checkpoint_id, batch_id)`` is a no-op (exactly-once).
 
+        On a merge-on-read table that already holds data, an LWW merge
+        appends the batch's winners as a delta layer in one write query
+        (see :meth:`_append_commit`); every other merge runs one stats pass
+        over the batch (quarantine count, touched buckets) and then the
+        copy-on-write join and bucket rewrite (:meth:`_write_commit`).
+
         ``expectations`` — declarative data contracts on ingest (the Delta
         Live Tables ``EXPECT`` analog): ``{name: predicate}`` where
         predicate is a SQL string or Column over the batch's columns. An
@@ -1419,11 +1466,10 @@ class SnapshotTable:
             if k in batch.columns and batch.schema[k].dataType != stored_types.get(k):
                 batch = batch.withColumn(k, F.col(k).try_cast(stored_types[k]))
 
-        # ---- one stats pass: quarantine count + touched buckets (a single
-        # aggregate job instead of separate count()/distinct().collect()).
-        # The validity predicate depends only on the model (ids/version
-        # col), so it is built once per table handle and reused across a
-        # replay's micro-batches (see _expr_cache).
+        # ---- validity predicate: the model's merge contract. It depends
+        # only on the model (ids/version col), so it is built once per table
+        # handle and reused across a replay's micro-batches (see
+        # _expr_cache).
         _vkey = ("valid", version_col)
         if _vkey in self._expr_cache:
             (valid,) = self._expr_cache[_vkey]
@@ -1449,7 +1495,7 @@ class SnapshotTable:
         # applied. Deletes are exempt (they carry no payload to validate),
         # and a NULL predicate result counts as a violation — the same
         # conservative rule as the base contract.
-        exp_reason = None
+        exp_reason = exp_fails = None
         if expectations:
             is_delete = F.lower(F.col("op")) == DELETE_OP
             for name, pred in expectations.items():
@@ -1460,16 +1506,36 @@ class SnapshotTable:
                     F.when(fails, msg) if exp_reason is None
                     else exp_reason.when(fails, msg)
                 )
-        # expectations ride the same single stats pass when present; the
-        # contract-free hot path (every CDC replay batch) keeps its exact
-        # original plan — no extra column, no extra aggregate
+            exp_fails = valid & exp_reason.isNotNull()
+            valid = valid & exp_reason.isNull()
+        batch = batch.withColumns({
+            "__valid": valid,
+            BUCKET: F.pmod(F.xxhash64(*bucket_src), F.lit(n_buckets)).cast("int"),
+        })
+
+        # ---- merge-on-read: an LWW merge into a MoR table that holds data
+        # reads and rewrites NOTHING — the deduped batch becomes a delta
+        # layer and readers fold it in (see _append_commit). Decided from
+        # the manifest alone, so this path needs no pass over the batch
+        # before its one write query.
+        if (man.get("write_mode", "cow") == "mor" and mode == "lww"
+                and (any(man["files"].values()) or man.get("deltas"))):
+            if not version_col:
+                raise DiffSyncSparkError("lww merge requires model.version_cols")
+            return self._append_commit(
+                batch, man, new_version, snapshot_id, checkpoint_id, batch_id,
+                self._evolve_schema(public, batch.schema, man),
+                exp_fails, exp_reason, _t_att0,
+            )
+
+        # ---- one stats pass: quarantine count + touched buckets (a single
+        # aggregate job instead of separate count()/distinct().collect()).
+        # Expectations add one aggregate to the same pass, only when given.
         aggs = [
             F.coalesce(F.sum(F.when(~F.col("__valid"), 1)), F.lit(0)).alias("n_bad"),
             F.coalesce(F.sum(F.when(F.col("__valid"), 1)), F.lit(0)).alias("n_ok"),
         ]
         if expectations:
-            exp_fails = valid & exp_reason.isNotNull()
-            valid = valid & exp_reason.isNull()
             aggs.append(F.coalesce(
                 F.sum(F.when(exp_fails, 1)), F.lit(0)
             ).alias("n_exp"))
@@ -1477,9 +1543,6 @@ class SnapshotTable:
         # but both are cheap columnar reads — caching would pay the in-memory
         # columnar RLE encode/decode, which profiling showed dominating CPU
         # for wide text payloads (and evicting under pressure → recompute)
-        batch = batch.withColumn("__valid", valid).withColumn(
-            BUCKET, F.pmod(F.xxhash64(*bucket_src), F.lit(n_buckets)).cast("int")
-        )
         _prof("pre_stats", _t_att0)
         _t0 = time.perf_counter()
         stats = batch.groupBy(BUCKET).agg(*aggs).collect()
@@ -1492,35 +1555,7 @@ class SnapshotTable:
         touched = sorted(r[BUCKET] for r in stats if r.n_ok > 0)
         batch_rows = {r[BUCKET]: r.n_ok for r in stats if r.n_ok > 0}
         if n_quarantined:
-            # per-record status columns — the reference's DiffSyncStatus +
-            # message logging (enum.py:90-96, helpers.py:442-446) as data:
-            # each rejected row says WHY it failed the merge contract
-            key_null = F.lit(False)
-            for k in ids:
-                key_null = key_null | F.col(k).isNull()
-            op_bad = ~F.coalesce(
-                F.lower(F.col("op")).isin(*UPSERT_OPS, DELETE_OP), F.lit(False)
-            )
-            reason = F.when(key_null, F.lit("null identifier")).when(
-                op_bad, F.lit("unknown or null op")
-            )
-            if version_col:
-                reason = reason.when(
-                    F.col(version_col).isNull()
-                    & (F.lower(F.col("op")) != DELETE_OP),
-                    F.lit(f"null {version_col} on upsert"),
-                )
-            if exp_reason is not None:
-                reason = F.coalesce(reason, exp_reason)
-            batch.filter(~F.col("__valid")).drop(
-                "__valid", BUCKET
-            ).withColumn(
-                "_status", F.lit("failure")
-            ).withColumn("_status_reason", reason).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(
-                self.path, "quarantine", f"v{new_version}-{snapshot_id[:12]}"
-            ))
+            self._write_quarantine(batch, exp_reason, new_version, snapshot_id)
         batch = batch.filter(F.col("__valid")).drop("__valid")
 
         # ---- LWW dedup: MERGE requires unique source keys. A versionless
@@ -1531,115 +1566,19 @@ class SnapshotTable:
         else:
             batch = batch.dropDuplicates(list(ids))
 
-        # ---- schema evolution: widen the stored schema with new batch cols
-        # AND promote existing payload columns whose batch type is a safe
-        # widening (int family up to long, float→double — exactly the
-        # upcasts the parquet reader performs, verified on Spark 4.1, so
-        # old files read cleanly through the widened schema). Identifier
-        # types never change (cast up front above). A batch column
-        # NARROWER than stored is cast up in b_sel below; an incompatible
-        # type keeps the stored type and the cast yields NULLs (visible in
-        # the data, never a corrupted file).
-        known = {f.name for f in public.fields}
-        # the same engine-owned names DDL (add_column/rename_column) blocks:
-        # a batch column named __commit/__slot must NOT be evolution-added as
-        # a user column or it collides with the MoR fold's internal columns
-        reserved = set(_RESERVED_COL_NAMES)
-        batch_types = {f.name: f.dataType for f in batch.schema.fields}
-        _INTS = [T.ByteType, T.ShortType, T.IntegerType, T.LongType]
-        _FLOATS = [T.FloatType, T.DoubleType]
-
-        def _wider(stored: T.DataType, incoming: T.DataType | None) -> T.DataType:
-            if incoming is None:
-                return stored
-            for fam in (_INTS, _FLOATS):
-                if type(stored) in fam and type(incoming) in fam:
-                    return (incoming
-                            if fam.index(type(incoming)) > fam.index(type(stored))
-                            else stored)
-            return stored
-
-        evolved_existing = [
-            f if f.name in ids else T.StructField(
-                f.name, _wider(f.dataType, batch_types.get(f.name)), True,
-                f.metadata,  # keep the stable field id through widening
-            )
-            for f in public.fields
-        ]
-        new_fields = [
-            f for f in batch.schema.fields
-            if f.name not in known and f.name not in reserved
-        ]
-        if _schema_has_ids(public) and new_fields:
-            # evolution-added columns get FRESH ids past the monotone
-            # counter — a column re-added after drop_column never reuses
-            # the dropped id, so old files' values cannot resurrect
-            next_id = int(man.get("last_field_id")
-                          or max((f.metadata or {}).get(_FIELD_ID_KEY, 0)
-                                 for f in public.fields)) + 1
-            if next_id + len(new_fields) - 1 > _MAX_USER_FIELD_ID:
-                raise DiffSyncSparkError("field-id space exhausted")
-            new_fields = [
-                T.StructField(f.name, f.dataType, True,
-                              {_FIELD_ID_KEY: next_id + i})
-                for i, f in enumerate(new_fields)
-            ]
-        evolved = T.StructType(evolved_existing + list(new_fields))
+        evolved = self._evolve_schema(public, batch.schema, man)
         payload_fields = [f for f in evolved.fields if f.name not in ids]
         payload_cols = [f.name for f in payload_fields]
-
-        # ---- merge-on-read fast path: an LWW merge on a MoR table reads
-        # and rewrites NOTHING — the deduped batch becomes a delta layer
-        # (same bucket/slot fan-out) and readers fold it in. Write cost is
-        # O(batch rows) instead of O(touched bucket bytes): at 10^10 events
-        # hitting hot conversations this removes the dominant write
-        # amplification of copy-on-write. Rebase under a lost commit race is
-        # trivially convergent — the layer's content doesn't depend on the
-        # snapshot it lands on (only its commit number and schema do).
-        write_mode = man.get("write_mode", "cow")
-        has_stored = any(int(b) in touched for b in man["files"]) or bool(
-            self._delta_buckets(man, touched)
-        )
-        if write_mode == "mor" and mode == "lww" and has_stored:
-            if not version_col:
-                raise DiffSyncSparkError("lww merge requires model.version_cols")
-            # all but the per-commit literal is schema-stable — cached
-            # across a replay's micro-batches (see _expr_cache)
-            _dkey = ("mor_delta", evolved.json(), tuple(batch.columns))
-            if _dkey not in self._expr_cache:
-                self._expr_cache[_dkey] = ([
-                    *[F.col(k) for k in ids],
-                    *[
-                        (F.col(f.name).try_cast(f.dataType)
-                         if f.name in batch.columns
-                         else F.lit(None).cast(f.dataType)).alias(f.name)
-                        for f in payload_fields
-                    ],
-                    (F.col("seq") if "seq" in batch.columns else F.lit(-1))
-                    .cast("long").alias(META_SEQ),
-                    (F.lower(F.col("op")) == DELETE_OP).alias(META_DELETED),
-                ],)
-            (_dsel,) = self._expr_cache[_dkey]
-            delta = batch.select(
-                *_dsel,
-                F.lit(new_version).cast("long").alias(META_COMMIT),
-            ).withColumn(
-                BUCKET, F.pmod(F.xxhash64(*bucket_src), F.lit(n_buckets)).cast("int")
-            )
-            res = self._append_commit(
-                delta, man, new_version, touched, n_quarantined, checkpoint_id,
-                batch_id, evolved, batch_rows, snapshot_id,
-            )
-            res["n_expectation_failed"] = n_expectation_failed
-            return res
 
         # ---- current rows of touched buckets only (manifest file pruning),
         # read through the widened schema (old files → nulls for new cols).
         # Fold-aware: on a MoR table a FORCE merge (authoritative diff apply)
         # folds base+layers here, rewrites the touched buckets, and clears
         # their layers at commit (_write_commit).
-        full = self._full_schema(evolved)
-        empty_target = not has_stored
+        empty_target = not (
+            any(int(b) in touched for b in man["files"])
+            or self._delta_buckets(man, touched)
+        )
         _t0 = time.perf_counter()
         cur = self._stored_frame(man, touched, evolved)
         _prof("stored_frame_build", _t0)
@@ -1769,6 +1708,103 @@ class SnapshotTable:
         )
         res["n_expectation_failed"] = n_expectation_failed
         return res
+
+    def _evolve_schema(self, public: T.StructType, batch_schema: T.StructType,
+                       man: dict) -> T.StructType:
+        """Schema evolution: widen the stored schema with new batch columns
+        AND promote existing payload columns whose batch type is a safe
+        widening (int family up to long, float→double — exactly the
+        upcasts the parquet reader performs, verified on Spark 4.1, so old
+        files read cleanly through the widened schema). Identifier types
+        never change (keys are cast up front). A batch column NARROWER than
+        stored is cast up on write; an incompatible type keeps the stored
+        type and the cast yields NULLs (visible in the data, never a
+        corrupted file). A pure function of the two schemas — no data."""
+        ids = self.model.identifiers
+        known = {f.name for f in public.fields}
+        # the same engine-owned names DDL (add_column/rename_column) blocks:
+        # a batch column named __commit/__slot must NOT be evolution-added as
+        # a user column or it collides with the MoR fold's internal columns
+        reserved = set(_RESERVED_COL_NAMES)
+        batch_types = {f.name: f.dataType for f in batch_schema.fields}
+        _INTS = [T.ByteType, T.ShortType, T.IntegerType, T.LongType]
+        _FLOATS = [T.FloatType, T.DoubleType]
+
+        def _wider(stored: T.DataType, incoming: T.DataType | None) -> T.DataType:
+            if incoming is None:
+                return stored
+            for fam in (_INTS, _FLOATS):
+                if type(stored) in fam and type(incoming) in fam:
+                    return (incoming
+                            if fam.index(type(incoming)) > fam.index(type(stored))
+                            else stored)
+            return stored
+
+        evolved_existing = [
+            f if f.name in ids else T.StructField(
+                f.name, _wider(f.dataType, batch_types.get(f.name)), True,
+                f.metadata,  # keep the stable field id through widening
+            )
+            for f in public.fields
+        ]
+        new_fields = [
+            f for f in batch_schema.fields
+            if f.name not in known and f.name not in reserved
+        ]
+        if _schema_has_ids(public) and new_fields:
+            # evolution-added columns get FRESH ids past the monotone
+            # counter — a column re-added after drop_column never reuses
+            # the dropped id, so old files' values cannot resurrect
+            next_id = int(man.get("last_field_id")
+                          or max((f.metadata or {}).get(_FIELD_ID_KEY, 0)
+                                 for f in public.fields)) + 1
+            if next_id + len(new_fields) - 1 > _MAX_USER_FIELD_ID:
+                raise DiffSyncSparkError("field-id space exhausted")
+            new_fields = [
+                T.StructField(f.name, f.dataType, True,
+                              {_FIELD_ID_KEY: next_id + i})
+                for i, f in enumerate(new_fields)
+            ]
+        return T.StructType(evolved_existing + list(new_fields))
+
+    def _write_quarantine(self, batch: DataFrame, exp_reason, new_version: int,
+                          snapshot_id: str) -> None:
+        """Write the batch's invalid rows (``~__valid``) to this attempt's
+        quarantine dir. Per-record status columns — the reference's
+        DiffSyncStatus + message logging (enum.py:90-96,
+        helpers.py:442-446) as data: each rejected row says WHY it failed
+        the merge contract."""
+        ids = self.model.identifiers
+        version_col = self.model.version_cols[0] if self.model.version_cols else None
+        key_null = F.lit(False)
+        for k in ids:
+            key_null = key_null | F.col(k).isNull()
+        op_bad = ~F.coalesce(
+            F.lower(F.col("op")).isin(*UPSERT_OPS, DELETE_OP), F.lit(False)
+        )
+        reason = F.when(key_null, F.lit("null identifier")).when(
+            op_bad, F.lit("unknown or null op")
+        )
+        if version_col:
+            reason = reason.when(
+                F.col(version_col).isNull()
+                & (F.lower(F.col("op")) != DELETE_OP),
+                F.lit(f"null {version_col} on upsert"),
+            )
+        if exp_reason is not None:
+            reason = F.coalesce(reason, exp_reason)
+        batch.filter(~F.col("__valid")).drop(
+            "__valid", BUCKET
+        ).withColumn(
+            "_status", F.lit("failure")
+        ).withColumn("_status_reason", reason).write.mode(
+            "overwrite"
+        ).parquet(self._quarantine_dir(new_version, snapshot_id))
+
+    def _quarantine_dir(self, new_version: int, snapshot_id: str) -> str:
+        return os.path.join(
+            self.path, "quarantine", f"v{new_version}-{snapshot_id[:12]}"
+        )
 
     def _plan_splits(self, est: dict[int, int]) -> dict[int, int]:
         """Writer-slot plan: ``ceil(estimated_rows / target)`` slots per
@@ -2141,11 +2177,8 @@ class SnapshotTable:
         # the quarantine dir was written under the ORIGINAL attempt version;
         # its recorded path must not be re-derived from a rebased version
         quarantine_dir = (
-            os.path.join(
-                self.path, "quarantine", f"v{new_version}-{snapshot_id[:12]}"
-            )
-            if n_quarantined
-            else None
+            self._quarantine_dir(new_version, snapshot_id)
+            if n_quarantined else None
         )
 
         def build(base: dict, version: int) -> dict:
@@ -2272,62 +2305,118 @@ class SnapshotTable:
 
     def _append_commit(
         self,
-        delta: DataFrame,
+        batch: DataFrame,
         man: dict,
         new_version: int,
-        touched: list[int],
-        n_quarantined: int,
+        snapshot_id: str,
         checkpoint_id: str,
         batch_id: int | None,
         evolved: T.StructType,
-        batch_rows: dict[int, int] | None,
-        snapshot_id: str,
+        exp_fails,
+        exp_reason,
+        t_start: float,
     ) -> dict[str, Any]:
-        """Commit one merge-on-read DELTA LAYER: write the deduped batch
-        with the same bucket/slot fan-out the base uses (so lookups can
-        slot-prune layers too), then append a layer record to the manifest.
-        The base file lists are untouched — this is the Iceberg v2
+        """Commit one merge-on-read DELTA LAYER: the batch's LWW winners,
+        written with the same bucket/slot fan-out the base uses (so lookups
+        can slot-prune layers too), then a layer record appended to the
+        manifest. The base file lists are untouched — this is the Iceberg v2
         merge-on-read write path recast for LWW: no equality-delete files
         are needed because every row IS its own last-writer-wins resolution
         record (``(ts, _seq, __commit)`` total-orders it against base rows
         and other layers at read time, :meth:`_fold`).
 
+        ``batch`` carries the ``__valid`` and ``_bucket`` columns. The merge
+        is ONE write query with no pass over the batch before it: the valid
+        rows are repartitioned by the fan-out key with no fixed partition
+        count (AQE merges a small batch's partitions) and :func:`lww_dedup`
+        clusters on the same key, so the plan has one Exchange. The slot
+        plan comes from the manifest's ``bucket_rows`` (the :meth:`compact`
+        rule); quarantine and input counts are an ``Observation`` on the
+        write, and the quarantine rows a follow-up job written before the
+        commit. Touched buckets and row counts come from the written
+        layer's footers (:meth:`_layer_footers`). A batch with no valid
+        rows commits its checkpoint and quarantine lineage, and no layer.
+
         Live row counts for the layered buckets become UNKNOWN (computing a
         layer's net effect is exactly the read this mode defers), so
         ``count_rows()`` falls back to a scan until ``compact()`` folds the
         layers and re-observes."""
+        from pyspark.sql import Observation
+
+        ids = list(self.model.identifiers)
         data_dir = os.path.join(
             self.path, "data", f"v{new_version}-{snapshot_id[:12]}"
         )
         splits = self._plan_splits(
-            {b: (batch_rows or {}).get(b, 0) for b in touched}
+            {int(b): n for b, n in man.get("bucket_rows", {}).items()}
         )
-        out = self._fanout_frame(delta, touched, splits)
-        obs = None
-        if touched and len(touched) <= 512:
-            out, obs = self._observe_bucket_counts(
-                out, f"append_v{new_version}", touched,
-                {"arr_rows": f"`{BUCKET}` = {{b}}"},
+        # fan-out key: (bucket, slot) when some bucket splits, else bucket
+        # alone — a constant slot would be folded out of the window's
+        # partition key and no longer match the repartition
+        hot = {b: n for b, n in splits.items() if n > 1}
+        slot, fan = F.lit(0), (BUCKET,)
+        if hot:
+            fan = (BUCKET, SLOT)
+            split_map = F.expr(
+                "map(" + ",".join(f"{b},{n}" for b, n in sorted(hot.items()))
+                + ")"
             )
-        out = self._tag_field_ids(out, evolved)
+            slot = F.pmod(
+                F.xxhash64(*ids),
+                F.coalesce(split_map[F.col(BUCKET)], F.lit(1)),
+            ).cast("int")
+        obs = Observation(f"append_v{new_version}")
+        metrics = [F.count_if(~F.col("__valid")).alias("n_bad"),
+                   F.count_if(F.col("__valid")).alias("n_input")]
+        if exp_fails is not None:
+            metrics.append(F.count_if(exp_fails).alias("n_exp"))
+        # __valid rides along unused: the delta projection below drops it
+        fanned = (
+            batch.observe(obs, *metrics)
+            .filter(F.col("__valid"))
+            .withColumn(SLOT, slot)
+            .repartition(*fan)
+        )
+        winners = lww_dedup(fanned, self.model, cluster_cols=fan)
+        # all but the per-commit literal is schema-stable — cached across
+        # a replay's micro-batches (see _expr_cache)
+        _dkey = ("mor_delta", evolved.json(), tuple(winners.columns))
+        if _dkey not in self._expr_cache:
+            self._expr_cache[_dkey] = ([
+                *[F.col(k) for k in ids],
+                *[
+                    (F.col(f.name).try_cast(f.dataType)
+                     if f.name in winners.columns
+                     else F.lit(None).cast(f.dataType)).alias(f.name)
+                    for f in evolved.fields if f.name not in ids
+                ],
+                (F.col("seq") if "seq" in winners.columns else F.lit(-1))
+                .cast("long").alias(META_SEQ),
+                (F.lower(F.col("op")) == DELETE_OP).alias(META_DELETED),
+            ],)
+        (_dsel,) = self._expr_cache[_dkey]
+        # write-ordered files (see _fanout_frame); the window's sort on
+        # (bucket, slot, ids, ...) already provides this order
+        delta = winners.select(
+            *_dsel,
+            F.lit(new_version).cast("long").alias(META_COMMIT),
+            F.col(BUCKET), F.col(SLOT),
+        ).sortWithinPartitions(BUCKET, SLOT, *ids)
+        self._write_files(self._tag_field_ids(delta, evolved), man, data_dir)
+        m = obs.get
+        n_quarantined = m["n_bad"]
+        _prof("append_write_job", t_start)
+
         _t0 = time.perf_counter()
-        self._write_files(out, man, data_dir)
-        _prof("append_write_job", _t0)
-        layer_files: dict[str, list[str]] = {}
+        if n_quarantined:
+            self._write_quarantine(batch, exp_reason, new_version, snapshot_id)
+        _prof("quarantine_write", _t0)
+
         _t0 = time.perf_counter()
-        for bk in touched:
-            listed = self._list_bucket_files(data_dir, bk)
-            if listed:
-                layer_files[str(bk)] = listed
-        _prof("append_list_files", _t0)
-        per_bucket: dict[int, int] = {}
-        if obs is not None:
-            m = obs.get
-            per_bucket = {b: m["arr_rows"][i] for i, b in enumerate(touched)}
-        elif touched:
-            written = self.spark.read.option("basePath", data_dir).parquet(data_dir)
-            for r in written.groupBy(BUCKET).agg(F.count("*").alias("n")).collect():
-                per_bucket[r[BUCKET]] = r["n"]
+        layer_files, per_bucket, new_stats = self._layer_footers(
+            data_dir, self._stat_cols(evolved))
+        touched = sorted(per_bucket)
+        _prof("footer_pass", _t0)
 
         lineage_rows = [
             {
@@ -2340,7 +2429,7 @@ class SnapshotTable:
                 # count is recorded honestly as n_append instead
                 "n_create": 0, "n_update": 0, "n_delete": 0, "n_noop": 0,
                 "n_quarantined": 0,
-                "n_append": per_bucket.get(bk, 0),
+                "n_append": per_bucket[bk],
             }
             for bk in touched
         ]
@@ -2354,17 +2443,9 @@ class SnapshotTable:
                 "n_quarantined": n_quarantined,
                 "n_append": 0,
             })
-        _t0 = time.perf_counter()
-        new_stats = self._collect_file_stats(
-            [p for fl in layer_files.values() for p in fl],
-            self._stat_cols(evolved))
-        _prof("append_file_stats", _t0)
         quarantine_dir = (
-            os.path.join(
-                self.path, "quarantine", f"v{new_version}-{snapshot_id[:12]}"
-            )
-            if n_quarantined
-            else None
+            self._quarantine_dir(new_version, snapshot_id)
+            if n_quarantined else None
         )
 
         # manifest as a pure function of the base snapshot: a layer's
@@ -2379,19 +2460,18 @@ class SnapshotTable:
         # our manifest version), so the fold's total order is unchanged.
         def build(base: dict, version: int) -> dict:
             deltas = list(base.get("deltas") or [])
-            deltas.append({
-                "commit": version,
-                "files": layer_files,
-                "splits": {b: splits.get(int(b), 1) for b in layer_files},
-            })
+            if layer_files:
+                deltas.append({
+                    "commit": version,
+                    "files": layer_files,
+                    "splits": {b: splits.get(int(b), 1) for b in layer_files},
+                })
             checkpoints = dict(base["checkpoints"])
             if batch_id is not None:
                 checkpoints[checkpoint_id] = batch_id
             bucket_rows = dict(base.get("bucket_rows", {}))
             for bk in touched:
-                bucket_rows[str(bk)] = (
-                    bucket_rows.get(str(bk), 0) + per_bucket.get(bk, 0)
-                )
+                bucket_rows[str(bk)] = bucket_rows.get(str(bk), 0) + per_bucket[bk]
             return {
                 "version": version,
                 "snapshot_id": snapshot_id,
@@ -2409,7 +2489,7 @@ class SnapshotTable:
                     **(base.get("_file_stats") or {}),
                     **new_stats,
                 },
-                "deltas": deltas,
+                **({"deltas": deltas} if deltas else {}),
                 "write_mode": "mor",
                 **({"bloom_cols": base["bloom_cols"]}
                    if "bloom_cols" in base else {}),
@@ -2428,19 +2508,24 @@ class SnapshotTable:
                 "quarantine_dir": quarantine_dir,
             }
 
+        _t0 = time.perf_counter()
         manifest, n_rebases = self._commit_with_rebase(
             build, man, new_version, touched, checkpoint_id, batch_id
         )
+        _prof("commit", _t0)
         return {
             "skipped": False,
             "snapshot_id": snapshot_id,
             "version": manifest["version"],
             "touched_buckets": touched,
             "metadata_rebases": n_rebases,
-            "n_input": sum((batch_rows or {}).values()),
+            # valid batch rows that entered the MERGE (post-quarantine,
+            # pre-LWW-dedup) — the denominator for pre-filter reduction
+            "n_input": m["n_input"],
             "n_append": sum(per_bucket.values()),
             "n_quarantined": n_quarantined,
-            "n_delta_layers": len(manifest["deltas"]),
+            "n_expectation_failed": m["n_exp"] if exp_fails is not None else 0,
+            "n_delta_layers": len(manifest.get("deltas") or []),
         }
 
     def apply_diff(self, diff_df: DataFrame, checkpoint_id: str = "diff",
@@ -2693,9 +2778,15 @@ class SnapshotTable:
             if not with_row_counts:
                 return None
             try:
+                import pyarrow as pa
                 import pyarrow.parquet as pq
+            except ImportError as e:
+                warn_fallback_once("files() row counts", e)
+                return None
+            try:
                 return pq.ParquetFile(p).metadata.num_rows
-            except Exception:
+            except (OSError, ValueError, pa.ArrowException) as e:
+                warn_fallback_once("files() row counts", e)
                 return None
 
         def _slot(p: str) -> int | None:

@@ -458,6 +458,7 @@ class _ChangesReader(DataSourceStreamReader):
         self.path = path
         self.options = {k.lower(): v for k, v in options.items()}
         self.schema = schema
+        self.batch_rows = int(self.options.get("foldbatchrows", 1 << 16))
 
     # ---- offsets: snapshot version numbers
     def initialOffset(self) -> dict:
@@ -535,18 +536,20 @@ class _ChangesReader(DataSourceStreamReader):
             # pyarrow.compute (no per-row Python — the U1 mandate; the
             # to_pylist comprehension this replaces was round-5 verdict
             # finding #3).
-            t = _read_file(path, public, ["_seq", "_deleted"])
-            deleted = pc.fill_null(
-                t.column("_deleted").cast(pa.bool_()), False)
-            t = t.drop_columns(["_deleted"])
-            t = t.append_column(
-                "_change_type",
-                pc.if_else(deleted, pa.scalar("delete"),
-                           pa.scalar("upsert")))
-            t = t.append_column(
-                "_commit_version",
-                pa.array([commit] * t.num_rows, type=pa.int64()))
-            yield from _cast_batches(t, self.schema)
+            # Streamed one parquet batch at a time (never a whole file).
+            for t in _iter_file_batches(path, public, ["_seq", "_deleted"],
+                                        self.batch_rows):
+                deleted = pc.fill_null(
+                    t.column("_deleted").cast(pa.bool_()), False)
+                t = t.drop_columns(["_deleted"])
+                t = t.append_column(
+                    "_change_type",
+                    pc.if_else(deleted, pa.scalar("delete"),
+                               pa.scalar("upsert")))
+                t = t.append_column(
+                    "_commit_version",
+                    pa.array([commit] * t.num_rows, type=pa.int64()))
+                yield from _cast_batches(t, self.schema)
 
     def commit(self, end: dict) -> None:
         pass  # Spark's offset log is the source of truth
@@ -558,7 +561,8 @@ class TableDataSource(DataSource):
     ("snapshot" default | "changes"), ``version`` (batch time travel),
     ``startingVersion`` (stream resume point; default = current at query
     start, i.e. future commits only — bootstrap via a batch read first,
-    the standard CDC pattern)."""
+    the standard CDC pattern), ``foldBatchRows`` (rows per parquet batch
+    the executor-side readers of both feeds stream; default 65,536)."""
 
     @classmethod
     def name(cls) -> str:

@@ -21,6 +21,7 @@ from typing import Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from diffsync_spark.metrics import warn_fallback_once
 from diffsync_spark.model import ModelSchema
 from diffsync_spark.sinks.table import SnapshotTable
 
@@ -44,20 +45,26 @@ def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
     INT64 too, but its stats are not the integer seq values), and footers
     that all carry min/max (a stats-less or all-NULL row group returns
     None → fallback). Both paths ignore NULL seq values — parquet min/max
-    exclude nulls exactly as ``F.min``/``F.max`` do. Returns None on ANY
-    doubt."""
+    exclude nulls exactly as ``F.min``/``F.max`` do. Returns None on any
+    soundness doubt. Footer I/O and decode errors, and a missing pyarrow, are
+    logged once per process (:func:`~diffsync_spark.metrics.
+    warn_fallback_once`); any other error propagates."""
+    plan = changelog._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    files = changelog.inputFiles()
+    if not files:
+        return None
     try:
-        plan = changelog._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        files = changelog.inputFiles()
-        if not files:
-            return None
-        from urllib.parse import unquote
-
+        import pyarrow as pa
         import pyarrow.parquet as pq
+    except ImportError as e:
+        warn_fallback_once("replay seq bounds from footers", e)
+        return None
+    from urllib.parse import unquote
 
-        lo = hi = None
+    lo = hi = None
+    try:
         for f in files:
             # inputFiles() gives percent-encoded file: URIs; strip the
             # scheme and authority by hand — urlparse would cut a name at
@@ -89,9 +96,10 @@ def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
                     return None
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
-        return None if lo is None else (lo, hi)
-    except Exception:
+    except (OSError, ValueError, pa.ArrowException) as e:
+        warn_fallback_once("replay seq bounds from footers", e)
         return None
+    return None if lo is None else (lo, hi)
 
 
 def replay_batches(

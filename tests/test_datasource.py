@@ -320,3 +320,43 @@ def test_fold_falls_back_when_base_not_id_ordered(spark, tmp_path):
            .option("path", path)
            .option("foldBatchRows", "64").load())
     assert _pairs(got) == _pairs(t.read())
+
+
+def test_changes_feed_streams_bounded_chunks(spark, tmp_path):
+    """The changes feed reads each layer file one parquet batch at a time
+    (the changes-feed twin of test_fold_streams_bounded_chunks):
+    foldBatchRows=16 splits every file into many batches, and the feed
+    must still deliver exactly the rows of the default read."""
+    path = str(tmp_path / "t")
+    t = _boot(spark, path, write_mode="mor", n=1500)
+    v0 = t.current_version()
+    for b in range(1, 4):
+        tb = T0 + datetime.timedelta(hours=b)
+        rows = [(k, f"u{b}-{k}", tb, "update") for k in range(0, 1500, 7)]
+        rows += [(k, None, tb, "delete") for k in range(3, 1500, 97)]
+        rows += [(42, f"hot{b}", tb, "update")]
+        t.merge(_chg(spark, rows), checkpoint_id="c", batch_id=b)
+
+    def feed(name, extra):
+        reader = (spark.readStream.format("diffsync_table")
+                  .option("path", path)
+                  .option("feed", "changes")
+                  .option("startingVersion", v0))
+        for k, v in extra.items():
+            reader = reader.option(k, v)
+        q = (reader.load().writeStream.format("memory").queryName(name)
+             .trigger(availableNow=True)
+             .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+             .start())
+        q.awaitTermination(120)
+        return sorted(
+            (r.k, r.v, r._change_type, r._commit_version, r._seq)
+            for r in spark.sql(f"SELECT * FROM {name}").collect()
+        )
+
+    small = feed("chg_small", {"foldBatchRows": "16"})
+    # one row per distinct key per layer (the batch's LWW winners)
+    keys = set(range(0, 1500, 7)) | set(range(3, 1500, 97))
+    assert len(small) == 3 * len(keys)
+    assert {r[2] for r in small} == {"upsert", "delete"}
+    assert small == feed("chg_default", {})

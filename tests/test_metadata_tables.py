@@ -107,3 +107,34 @@ def test_refs_lists_main_branches_tags(spark, tmp_path):
     assert refs[("audit", "branch")].version == b.current_version()
     assert refs[("audit", "branch")].snapshot_id is not None
     assert all(r.committed_at_us for r in refs.values())
+
+
+def test_files_row_count_errors_log_or_propagate(spark, tmp_path,
+                                                 monkeypatch, caplog):
+    """files(with_row_counts=True): an unreadable footer leaves that
+    file's n_rows NULL and is logged once per process at WARNING; any
+    other error propagates."""
+    import logging
+
+    import pyarrow.parquet as pq
+    import pytest
+
+    from diffsync_spark import metrics
+
+    t = _boot(spark, str(tmp_path / "t"))
+    monkeypatch.setattr(metrics, "_warned_fallbacks", set())
+
+    def raiser(exc):
+        def f(*args, **kwargs):
+            raise exc
+        return f
+
+    monkeypatch.setattr(pq, "ParquetFile", raiser(OSError("footer gone")))
+    with caplog.at_level(logging.WARNING, logger="diffsync_spark.metrics"):
+        inv = t.files(with_row_counts=True).collect()
+    assert inv and all(r.n_rows is None for r in inv)
+    logged = [r for r in caplog.records if "row counts" in r.getMessage()]
+    assert len(logged) == 1 and "footer gone" in logged[0].getMessage()
+    monkeypatch.setattr(pq, "ParquetFile", raiser(TypeError("a real bug")))
+    with pytest.raises(TypeError, match="a real bug"):
+        t.files(with_row_counts=True)

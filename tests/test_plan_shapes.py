@@ -333,6 +333,41 @@ def test_point_lookup_runs_one_job(spark, tmp_path):
         assert miss is None and jobs <= 1, mode
 
 
+def test_mor_lww_merge_is_one_write_query(spark, tmp_path):
+    """An LWW merge into a merge-on-read table that already holds data is
+    ONE write query: no stats pass before it, and one Exchange shared by
+    the bucket fan-out and the LWW window — two Spark jobs under AQE (the
+    shuffle map stage, then the write)."""
+    from diffsync_spark.sinks.table import SnapshotTable
+
+    src = spark.createDataFrame(_rows(16), _CDC).drop("op", "seq")
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "mor_write"), TRANSCRIPT_MODEL,
+        schema=src.schema, n_buckets=4, write_mode="mor",
+    )
+    t.merge(src.withColumn("op", F.lit("insert")), mode="force",
+            checkpoint_id="boot", batch_id=0)
+    plans = []
+    write_files = t._write_files
+
+    def capture(df, man, data_dir):
+        plans.append(_plan(df))
+        return write_files(df, man, data_dir)
+
+    t._write_files = capture
+    t.merge(spark.createDataFrame(_rows(16), _CDC), checkpoint_id="c",
+            batch_id=1)  # warm
+    up = spark.createDataFrame(_rows(16), _CDC).withColumn(
+        "seq", F.col("seq") + 100)
+    res, jobs, _ = _jobs_and_stages(
+        spark, "mor-merge", lambda: t.merge(up, checkpoint_id="c",
+                                            batch_id=2))
+    assert res["n_append"] == 16 and res["n_quarantined"] == 0
+    assert jobs == 2
+    assert plans[-1].count("Exchange hashpartitioning") == 1
+    assert "Window" in plans[-1]
+
+
 def test_frame_sample_filters_before_the_arrow_udf(spark):
     """Video frame sampling: the kind filter and the payload-only
     projection must sit BELOW MapInPandas (only video payload bytes cross

@@ -318,3 +318,50 @@ def test_rebased_commit_survives_reload_and_time_travel(spark, tmp_path,
     res2 = fresh.merge(_batch(spark, conv_a, text="A"),
                        checkpoint_id="wa", batch_id=1)
     assert res2["skipped"]
+
+
+def _with_bad_row(spark, batch):
+    """``batch`` plus one null-key row the merge must quarantine."""
+    bad = spark.createDataFrame(
+        [(None, 0, "user", "bad", None, datetime.datetime(2032, 1, 1),
+          "insert", 99)],
+        _CDC_SCHEMA,
+    )
+    return batch.unionByName(bad)
+
+
+@pytest.mark.parametrize("disjoint", [True, False])
+def test_mor_race_with_quarantine(spark, tmp_path, target_df, disjoint):
+    """The merge-on-read append path takes its touched buckets from the
+    layer it wrote, and its quarantine counts from the write query. A lost
+    race still rebases metadata-only when the writers are disjoint and
+    recomputes when they share a bucket — either way the quarantine rows
+    and their lineage land exactly once."""
+    conv_a, conv_b = _conv_pair(spark, want_disjoint=disjoint)
+    table = _bootstrap(spark, tmp_path / "t", target_df, write_mode="mor")
+    writer_b = SnapshotTable.load(spark, table.path, TRANSCRIPT_MODEL)
+    writer_a = SnapshotTable.load(
+        spark, table.path, TRANSCRIPT_MODEL,
+        io=RacingCommitIO(
+            lambda: writer_b.merge(_batch(spark, conv_b, text="B"),
+                                   checkpoint_id="wb", batch_id=1),
+            races=1,
+        ),
+    )
+    res = writer_a.merge(
+        _with_bad_row(spark, _batch(spark, conv_a, text="A", ts_s=100)),
+        checkpoint_id="wa", batch_id=1)
+    assert (res["metadata_rebases"], res["commit_retries"]) == (
+        (1, 0) if disjoint else (0, 1))
+    assert res["n_append"] == 3 and res["n_quarantined"] == 1
+    assert res["touched_buckets"] == sorted(
+        _buckets_of(spark, [conv_a]).values())
+    state = table.read()
+    assert state.filter(F.col("conv_id") == conv_a).count() == 3
+    assert state.filter(F.col("conv_id") == conv_b).count() == 3
+    assert [r.text for r in table.quarantine_df().collect()] == ["bad"]
+    lin = table.lineage_df().filter(
+        (F.col("checkpoint_id") == "wa") & (F.col("partition") == -1)
+    ).collect()
+    assert [r.n_quarantined for r in lin] == [1]
+    assert len(table._manifest()["deltas"]) == 2

@@ -656,3 +656,40 @@ def test_seq_bounds_footer_path_with_uri_characters(spark, tmp_path):
     scan = spark.read.parquet(str(d))
     assert len(scan.inputFiles()) == 2
     assert _seq_bounds_from_footers(scan) == (-7, 11)
+
+
+def _raiser(exc):
+    def f(*args, **kwargs):
+        raise exc
+    return f
+
+
+def test_seq_bounds_footer_errors_log_or_propagate(spark, tmp_path,
+                                                   monkeypatch, caplog):
+    """Only footer I/O and decode errors (and a missing pyarrow) turn into
+    the aggregate fallback, logged once per process at WARNING; any other
+    error is a fault and propagates instead of becoming a silent slow
+    path."""
+    import logging
+
+    import pyarrow.parquet as pq
+
+    from diffsync_spark import metrics
+    from diffsync_spark.streaming.replay import _seq_bounds_from_footers
+
+    d = str(tmp_path / "chg")
+    spark.range(0, 50).select(F.col("id").alias("seq")).write.parquet(d)
+    scan = spark.read.parquet(d)
+    assert _seq_bounds_from_footers(scan) == (0, 49)
+    monkeypatch.setattr(metrics, "_warned_fallbacks", set())
+    monkeypatch.setattr(pq, "ParquetFile", _raiser(OSError("footer gone")))
+    with caplog.at_level(logging.WARNING, logger="diffsync_spark.metrics"):
+        assert _seq_bounds_from_footers(scan) is None
+        assert _seq_bounds_from_footers(scan) is None
+    logged = [r for r in caplog.records if "seq bounds" in r.getMessage()]
+    assert len(logged) == 1
+    assert logged[0].levelno == logging.WARNING
+    assert "footer gone" in logged[0].getMessage()
+    monkeypatch.setattr(pq, "ParquetFile", _raiser(TypeError("a real bug")))
+    with pytest.raises(TypeError, match="a real bug"):
+        _seq_bounds_from_footers(scan)
