@@ -29,6 +29,14 @@ from diffsync_spark.sinks.table import SnapshotTable
 from diffsync_spark.sources.io import diff_str, to_nested_dict
 
 
+# A sync without a precomputed diff runs as one snapshot merge when the
+# table's latest commit changed at least this share of its rows. That merge
+# reads the table once but writes every bucket and keeps only the changed
+# ones; diff + apply reads it three times and writes only the changed
+# buckets, so it is the cheaper one when few buckets change.
+SNAPSHOT_SYNC_MIN_SHARE = 0.5
+
+
 class Engine:
     """Keyed compare-and-sync over a SnapshotTable destination."""
 
@@ -149,21 +157,50 @@ class Engine:
         checkpoint_id: str = "sync",
         callback: ProgressCallback | None = None,
     ) -> dict:
-        """Compute (or take a precomputed) diff and apply it — reference
-        ``sync_from`` incl. the ``diff=`` reuse parameter and the progress
-        ``callback`` (``__init__.py:577-644``, ``helpers.py:62-67``). Raises
-        :class:`DiffClassMismatch` for a foreign precomputed diff. Fires
-        :meth:`sync_complete` when anything changed (``__init__.py:616-618``)."""
-        if diff_df is not None:
-            self._validate_diff_frame(diff_df)
-            d = diff_df
-        else:
-            d = self.diff_from(source, flags)
+        """Make this table equal ``source`` — reference ``sync_from`` incl.
+        the ``diff=`` reuse parameter and the progress ``callback``
+        (``__init__.py:577-644``, ``helpers.py:62-67``). Fires
+        :meth:`sync_complete` when anything changed (``__init__.py:616-618``).
+
+        Without ``diff_df`` the path is picked from the table's latest
+        commit (:meth:`SnapshotTable.last_change_share`). When it changed
+        at least :data:`SNAPSHOT_SYNC_MIN_SHARE` of the rows, the sync is
+        one snapshot merge (``SnapshotTable.merge(mode="snapshot")``): the
+        source joined once against the stored rows, every bucket written
+        and the unchanged ones discarded. The diff frame is then built
+        (never run here) only for a consumer: the ``log_unchanged_records``
+        flag or a :meth:`sync_complete` override, and the callback's totals
+        come from the write's own observation. Otherwise (a sparse last
+        commit, or a table with no rows) the diff is computed and applied
+        as a force merge (:meth:`SnapshotTable.apply_diff`), which writes
+        only the changed buckets.
+
+        With ``diff_df`` (a precomputed diff; raises
+        :class:`DiffClassMismatch` for a foreign one) the diff is applied
+        as a force merge."""
+        share = None if diff_df is not None else self.table.last_change_share()
         obs = None
-        if callback is not None:
-            d, obs = observe_diff(d)
-        result = self.table.apply_diff(d, checkpoint_id=checkpoint_id,
-                                       batch_id=batch_id)
+        if share is not None and share >= SNAPSHOT_SYNC_MIN_SHARE:
+            # built before the merge, so it compares against the snapshot
+            # the sync started from
+            wants_diff = (
+                (flags.log_unchanged_records and flags.keep_noop)
+                or type(self).sync_complete is not Engine.sync_complete
+            )
+            d = self.diff_from(source, flags) if wants_diff else None
+            result = self.table.merge(source, checkpoint_id=checkpoint_id,
+                                      batch_id=batch_id, mode="snapshot",
+                                      flags=flags)
+        else:
+            if diff_df is not None:
+                self._validate_diff_frame(diff_df)
+                d = diff_df
+            else:
+                d = self.diff_from(source, flags)
+            if callback is not None:
+                d, obs = observe_diff(d)
+            result = self.table.apply_diff(d, checkpoint_id=checkpoint_id,
+                                           batch_id=batch_id)
         log_merge(result, self.table.path)
         if flags.log_unchanged_records and not result.get("skipped"):
             from diffsync_spark.metrics import log_unchanged_records, logger
@@ -178,8 +215,9 @@ class Engine:
                     "log_unchanged_records requires keep_noop=True "
                     "(the diff frame has no unchanged rows to log)"
                 )
-        if obs is not None and not result.get("skipped"):
-            report_progress(callback, obs.get)
+        if callback is not None and not result.get("skipped"):
+            report_progress(callback, obs.get if obs is not None
+                            else result["diff"])
         if not result.get("skipped") and (
             result.get("n_create", 0) + result.get("n_update", 0)
             + result.get("n_delete", 0) > 0
@@ -213,7 +251,10 @@ class Engine:
         reference's structlog ``logger`` maps to this engine's module logger
         (``diffsync_spark.metrics``), and ``result`` adds the commit record
         (snapshot id, op counts) a set-based sync has that a per-object walk
-        does not. Default: no-op; subclass to export metrics, notify, etc."""
+        does not. ``diff_df`` is the diff against the snapshot the sync
+        started from; after a snapshot merge it is lazy and built only for
+        an override (None when the default no-op runs). Default: no-op;
+        subclass to export metrics, notify, etc."""
 
     def converged(self, source: DataFrame) -> bool:
         """True when re-diff after sync is empty (the reference's convergence

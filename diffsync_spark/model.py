@@ -10,6 +10,7 @@ and performs the same validation against a DataFrame's actual schema.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -87,9 +88,9 @@ class ModelSchema:
                 f"has {sorted(cols)}"
             )
 
-    def attrs_in(self, df: DataFrame) -> list[str]:
+    def attrs_in(self, df: DataFrame | Sequence[str]) -> list[str]:
         """This side's COMPARED attributes: declared attributes present in
-        ``df`` (declaration order).
+        ``df`` (a DataFrame or its column names; declaration order).
 
         Faithful to the reference, where the diff walks only the model
         class's ``_attributes`` tuple (``diffsync/diff.py:266-279``) — an
@@ -97,12 +98,13 @@ class ModelSchema:
         ``compare_undeclared=True``, undeclared non-key/non-version columns
         are appended (frame order) and compared like declared attributes.
         """
-        present = set(df.columns)
+        columns = list(getattr(df, "columns", df))
+        present = set(columns)
         declared = [c for c in self.attributes if c in present]
         if not self.compare_undeclared:
             return declared
         reserved = set(self.identifiers) | set(self.attributes) | set(self.version_cols)
-        return declared + [c for c in df.columns if c not in reserved]
+        return declared + [c for c in columns if c not in reserved]
 
     def payload_attrs_in(self, df: DataFrame) -> list[str]:
         """This side's PAYLOAD columns: compared attributes plus any
@@ -115,9 +117,11 @@ class ModelSchema:
         )
         return compared + [c for c in df.columns if c not in reserved]
 
-    def shared_attrs(self, src: DataFrame, dst: DataFrame) -> list[str]:
-        """Intersection of both sides' present attributes, in declaration
-        order — the reference's order-preserving ``intersection`` on attr keys
+    def shared_attrs(self, src: DataFrame | Sequence[str],
+                     dst: DataFrame | Sequence[str]) -> list[str]:
+        """Intersection of both sides' present attributes (each side a
+        DataFrame or its column names), in declaration order — the
+        reference's order-preserving ``intersection`` on attr keys
         (``diffsync/utils.py:31-34`` via ``diff.py:266-279``). A column present
         on one side only never produces a diff."""
         return [c for c in self.attrs_in(src) if c in set(self.attrs_in(dst))]

@@ -61,6 +61,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from diffsync_spark.errors import CommitConflict, DiffSyncSparkError
+from diffsync_spark.flags import DiffFlags
 from diffsync_spark.metrics import warn_fallback_once
 from diffsync_spark.model import ModelSchema
 from diffsync_spark.operators.lww import lww_dedup
@@ -72,7 +73,9 @@ def _prof(label: str, t0: float) -> None:
     line per phase to stderr so a profiling run can attribute wall time
     to driver-side phases (copy-on-write: stats pass, write job, footer
     stats, commit; merge-on-read append: append_write_job,
-    quarantine_write, footer_pass, commit)."""
+    quarantine_write, footer_pass, commit; snapshot sync:
+    snapshot_write_job, quarantine_write, discard_unchanged, file_stats,
+    commit)."""
     if os.environ.get("DIFFSYNC_PROFILE_MERGE"):
         import sys as _sys
 
@@ -116,6 +119,11 @@ def _with_field_ids(schema: T.StructType, start: int = 1) -> T.StructType:
     return T.StructType(fields)
 UPSERT_OPS = ("insert", "update", "create", "upsert")
 DELETE_OP = "delete"
+# per-row lineage classes of a copy-on-write rewrite (the __op_class column)
+_OP_CLASSES = ("create", "update", "delete", "noop")
+# metric expressions per observation on a write job; wider per-bucket
+# counts are split over several observations of the same job
+_OBSERVE_MAX_EXPRS = 512
 
 # per-attempt data dir naming: v{version}-{snapshot_id[:12]} — the component
 # remove_orphans / liveness checks key on (bucket/slot dirs can never match)
@@ -445,18 +453,25 @@ class SnapshotTable:
     def _collect_file_stats(
         self, paths: list[str], cols: list[str]
     ) -> dict[str, dict[str, list]]:
+        """Per-file footer ``[min, max]`` stats for the manifest. Stats are
+        an optimization, never a requirement: a missing pyarrow or an
+        unreadable footer leaves the file without stats (no pruning on it)
+        and is logged once per process; any other error propagates."""
         if not paths or not cols:
             return {}
         try:
+            import pyarrow as pa
             import pyarrow.parquet as pq
-        except Exception:  # stats are an optimization, never a requirement
+        except ImportError as e:
+            warn_fallback_once("manifest file stats", e)
             return {}
         want = set(cols)
         out: dict[str, dict[str, list]] = {}
         for p in paths:
             try:
                 md = pq.ParquetFile(p).metadata
-            except Exception:
+            except (OSError, ValueError, pa.ArrowException) as e:
+                warn_fallback_once("manifest file stats", e)
                 continue
             stats = self._footer_stats(md, want)
             if stats:
@@ -1352,6 +1367,7 @@ class SnapshotTable:
         mode: str = "lww",
         max_commit_retries: int = 5,
         expectations: "dict[str, Any] | None" = None,
+        flags: DiffFlags = DiffFlags(),
     ) -> dict[str, Any]:
         """Set-based MERGE of a change batch into the table — one atomic
         snapshot commit. The reference analog is the whole
@@ -1359,19 +1375,35 @@ class SnapshotTable:
         collapsed into one transactional, set-oriented apply (SURVEY §2.5 M1).
 
         ``batch`` columns: identifiers + ``op`` (insert/update/create/upsert/
-        delete) + payload + version cols (+ ``seq``). ``mode='lww'`` applies a
-        change only if its ``(ts, seq)`` beats the stored version (CDC rule);
-        ``mode='force'`` lets the batch always win (apply of a diff that was
-        computed against the current state, so it is authoritative).
+        delete) + payload + version cols (+ ``seq``). The modes:
+
+        - ``'lww'`` applies a change only if its ``(ts, seq)`` beats the
+          stored version (CDC rule);
+        - ``'force'`` lets the batch always win (apply of a diff that was
+          computed against the current state, so it is authoritative);
+        - ``'snapshot'`` takes the batch as the COMPLETE desired state (no
+          ``op`` column needed): keys it lacks are deleted — SQL MERGE's
+          ``WHEN NOT MATCHED BY SOURCE THEN DELETE``. It classifies each key
+          with :func:`~diffsync_spark.operators.diff.diff`'s rule and writes
+          in one query (see :meth:`_snapshot_commit`). ``flags`` applies
+          here only: ``skip_unmatched_src`` drops creates,
+          ``skip_unmatched_dst`` keeps stored-only keys, and ``keep_noop``
+          decides whether the result's ``diff`` counts include unchanged
+          keys in ``n_total``. It writes every bucket and commits only the
+          changed ones, so it pays off when most buckets change
+          (:meth:`Engine.sync_from` picks it by :meth:`last_change_share`);
+          its slot plan comes from the stored bucket sizes, so the first
+          load of an empty table belongs to ``'force'``.
 
         Returns the lineage record. Re-invoking with an already-committed
         ``(checkpoint_id, batch_id)`` is a no-op (exactly-once).
 
         On a merge-on-read table that already holds data, an LWW merge
         appends the batch's winners as a delta layer in one write query
-        (see :meth:`_append_commit`); every other merge runs one stats pass
-        over the batch (quarantine count, touched buckets) and then the
-        copy-on-write join and bucket rewrite (:meth:`_write_commit`).
+        (see :meth:`_append_commit`); a snapshot merge is one write query
+        too; every other merge runs one stats pass over the batch
+        (quarantine count, touched buckets) and then the copy-on-write join
+        and bucket rewrite (:meth:`_write_commit`).
 
         ``expectations`` — declarative data contracts on ingest (the Delta
         Live Tables ``EXPECT`` analog): ``{name: predicate}`` where
@@ -1418,7 +1450,7 @@ class SnapshotTable:
             try:
                 _t0 = time.perf_counter()
                 result = self._merge_attempt(batch, checkpoint_id, batch_id,
-                                             mode, man, expectations)
+                                             mode, man, expectations, flags)
                 _prof("merge_total", _t0)
                 result["commit_retries"] = attempt
                 return result
@@ -1435,6 +1467,7 @@ class SnapshotTable:
         mode: str,
         man: dict,
         expectations: "dict[str, Any] | None" = None,
+        flags: DiffFlags = DiffFlags(),
     ) -> dict[str, Any]:
         """One optimistic merge attempt against the snapshot in ``man``.
         Raises :class:`CommitConflict` if a concurrent writer commits the
@@ -1465,6 +1498,13 @@ class SnapshotTable:
         for k in ids:
             if k in batch.columns and batch.schema[k].dataType != stored_types.get(k):
                 batch = batch.withColumn(k, F.col(k).try_cast(stored_types[k]))
+
+        # a snapshot row is an upsert of its key's desired state: give it the
+        # op the validity predicate below expects (deletes come from the
+        # stored side, see _snapshot_commit)
+        if mode == "snapshot":
+            src_cols = list(batch.columns)
+            batch = batch.withColumn("op", F.lit("upsert"))
 
         # ---- validity predicate: the model's merge contract. It depends
         # only on the model (ids/version col), so it is built once per table
@@ -1512,6 +1552,13 @@ class SnapshotTable:
             "__valid": valid,
             BUCKET: F.pmod(F.xxhash64(*bucket_src), F.lit(n_buckets)).cast("int"),
         })
+
+        if mode == "snapshot":
+            return self._snapshot_commit(
+                batch, src_cols, man, new_version, snapshot_id, checkpoint_id,
+                batch_id, public, self._evolve_schema(public, batch.schema, man),
+                flags, exp_fails, exp_reason, _t_att0,
+            )
 
         # ---- merge-on-read: an LWW merge into a MoR table that holds data
         # reads and rewrites NOTHING — the deduped batch becomes a delta
@@ -2052,46 +2099,71 @@ class SnapshotTable:
         slot and prune a lookup to one file."""
         _t_wc0 = time.perf_counter()
         snapshot_id = snapshot_id or uuid.uuid4().hex
-        # per-attempt unique dir: a concurrent writer racing on the same
-        # new_version writes elsewhere; only the manifest commit decides
-        data_dir = os.path.join(
-            self.path, "data", f"v{new_version}-{snapshot_id[:12]}"
-        )
+        data_dir = self._attempt_dir(new_version, snapshot_id)
         cur_rows = {int(b): n for b, n in man.get("bucket_rows", {}).items()}
         est = {
             b: (batch_rows or {}).get(b, 0) + cur_rows.get(b, 0) for b in touched
         }
         splits = self._plan_splits(est)
         _prof("pre_fanout", _t_wc0)
+        per_bucket = self._write_buckets(
+            merged, man, data_dir, touched, splits, evolved,
+            f"merge_v{new_version}",
+        )
+        return self._commit_rewrite(
+            man, new_version, snapshot_id, data_dir, touched, splits,
+            per_bucket, n_quarantined, checkpoint_id, batch_id, evolved,
+            sum((batch_rows or {}).values()),
+        )
+
+    def _attempt_dir(self, new_version: int, snapshot_id: str) -> str:
+        """Per-attempt unique data dir: a concurrent writer racing on the
+        same ``new_version`` writes elsewhere; only the manifest commit
+        decides."""
+        return os.path.join(
+            self.path, "data", f"v{new_version}-{snapshot_id[:12]}"
+        )
+
+    def _write_buckets(
+        self,
+        merged: DataFrame,
+        man: dict,
+        data_dir: str,
+        buckets: list[int],
+        splits: dict[int, int],
+        evolved: T.StructType,
+        name: str,
+    ) -> dict[tuple[int, str], int]:
+        """Fan ``merged`` out over ``buckets`` (see :meth:`_fanout_frame`),
+        write it under ``data_dir`` and return its per-bucket counts:
+        ``(bucket, op_class)`` and ``(bucket, "__live")`` (non-tombstone
+        rows). The counts ride the write job as observed metrics
+        (conditional count_ifs are branch-cheap inside codegen), in chunks
+        of at most :data:`_OBSERVE_MAX_EXPRS` metric expressions, so any
+        bucket count keeps them on the write."""
         _t0 = time.perf_counter()
-        out = self._fanout_frame(merged, touched, splits)
+        out = self._fanout_frame(merged, buckets, splits)
         _prof("fanout_build", _t0)
-        # per-bucket lineage counts ride the WRITE job as observed metrics
-        # (conditional count_ifs are branch-cheap inside codegen) — this
-        # replaces a whole post-write job that re-read the written files.
-        # Very wide tables (>512 metric exprs) fall back to the re-read.
-        _OPS = ("create", "update", "delete", "noop")
-        obs = None
         _t0 = time.perf_counter()
-        if touched and len(touched) * (len(_OPS) + 1) <= 512:
-            # live rows (non-tombstone) per touched bucket ride the same
-            # write job — the table-level row count becomes manifest
-            # metadata (Iceberg snapshot-summary parity): count() never
-            # scans data
+        # live rows (non-tombstone) per bucket ride the same write job —
+        # the table-level row count becomes manifest metadata (Iceberg
+        # snapshot-summary parity): count() never scans data
+        conds = {
+            **{
+                f"arr_{oc}": f"`{BUCKET}` = {{b}} AND `__op_class` = '{oc}'"
+                for oc in _OP_CLASSES
+            },
+            "arr_live": (
+                f"`{BUCKET}` = {{b}} AND NOT coalesce(`{META_DELETED}`, false)"
+            ),
+        }
+        step = max(1, _OBSERVE_MAX_EXPRS // len(conds))
+        chunks = []
+        for i in range(0, len(buckets), step):
+            chunk = buckets[i:i + step]
             out, obs = self._observe_bucket_counts(
-                out, f"merge_v{new_version}", touched,
-                {
-                    **{
-                        f"arr_{oc}":
-                        f"`{BUCKET}` = {{b}} AND `__op_class` = '{oc}'"
-                        for oc in _OPS
-                    },
-                    "arr_live": (
-                        f"`{BUCKET}` = {{b}} "
-                        f"AND NOT coalesce(`{META_DELETED}`, false)"
-                    ),
-                },
-            )
+                out, f"{name}_{i // step}", chunk, conds)
+            chunks.append((chunk, obs))
         _prof("observe_build", _t0)
         _t0 = time.perf_counter()
         out = self._tag_field_ids(out, evolved)
@@ -2099,30 +2171,36 @@ class SnapshotTable:
         _t0 = time.perf_counter()
         self._write_files(out, man, data_dir)
         _prof("write_job", _t0)
+        _t0 = time.perf_counter()
         per_bucket: dict[tuple[int, str], int] = {}
-        if obs is not None:
-            _t0 = time.perf_counter()
+        for chunk, obs in chunks:
             m = obs.get
-            _prof("obs_get", _t0)
-            per_bucket = {
-                (b, oc): m[f"arr_{oc}"][i]
-                for i, b in enumerate(touched) for oc in _OPS
-            }
-            per_bucket.update(
-                {(b, "__live"): m["arr_live"][i]
-                 for i, b in enumerate(touched)}
-            )
-        elif touched:
-            written = self.spark.read.option("basePath", data_dir).parquet(data_dir)
-            for r in (
-                written.groupBy(BUCKET, "__op_class")
-                .agg(F.count("*").alias("n"), F.count_if(_live).alias("nl"))
-            ).collect():
-                per_bucket[(r[BUCKET], r["__op_class"])] = r["n"]
-                per_bucket[(r[BUCKET], "__live")] = (
-                    per_bucket.get((r[BUCKET], "__live"), 0) + r["nl"]
-                )
+            for i, b in enumerate(chunk):
+                for oc in _OP_CLASSES:
+                    per_bucket[(b, oc)] = m[f"arr_{oc}"][i]
+                per_bucket[(b, "__live")] = m["arr_live"][i]
+        _prof("obs_get", _t0)
+        return per_bucket
 
+    def _commit_rewrite(
+        self,
+        man: dict,
+        new_version: int,
+        snapshot_id: str,
+        data_dir: str,
+        touched: list[int],
+        splits: dict[int, int],
+        per_bucket: dict[tuple[int, str], int],
+        n_quarantined: int,
+        checkpoint_id: str,
+        batch_id: int | None,
+        evolved: T.StructType,
+        n_input: int,
+    ) -> dict[str, Any]:
+        """Commit the ``touched`` buckets' files written under ``data_dir``
+        as their new contents (copy-on-write per bucket): footer stats,
+        lineage from ``per_bucket``, then the manifest through
+        :meth:`_commit_with_rebase`."""
         # ---- build the new manifest: touched buckets point at new files,
         # untouched buckets keep their old references (copy-on-write).
         # Everything below is a pure function of the base snapshot, so the
@@ -2145,7 +2223,7 @@ class SnapshotTable:
         for bk in touched:
             counts = {
                 o: per_bucket.get((bk, o), 0)
-                for o in ("create", "update", "delete", "noop")
+                for o in _OP_CLASSES
             }
             lineage_rows.append(
                 {
@@ -2195,7 +2273,7 @@ class SnapshotTable:
             for bk in touched:
                 bucket_rows[str(bk)] = sum(
                     per_bucket.get((bk, o), 0)
-                    for o in ("create", "update", "delete", "noop")
+                    for o in _OP_CLASSES
                 )
             # slot counts the files were actually written with — lookup's
             # file pruning recomputes a key's slot from these (copy-on-write:
@@ -2299,9 +2377,239 @@ class SnapshotTable:
             "metadata_rebases": n_rebases,
             # valid batch rows that entered the MERGE (post-quarantine,
             # pre-LWW-dedup) — the denominator for pre-filter reduction
-            "n_input": sum((batch_rows or {}).values()),
+            "n_input": n_input,
             **{f"n_{k}": v for k, v in totals.items()},
         }
+
+    def _snapshot_commit(
+        self,
+        batch: DataFrame,
+        src_cols: list[str],
+        man: dict,
+        new_version: int,
+        snapshot_id: str,
+        checkpoint_id: str,
+        batch_id: int | None,
+        public: T.StructType,
+        evolved: T.StructType,
+        flags: DiffFlags,
+        exp_fails,
+        exp_reason,
+        t_start: float,
+    ) -> dict[str, Any]:
+        """Make the table equal ``batch``, a complete source snapshot, in ONE
+        write query: the LWW-deduped batch full-outer joined on the natural
+        key against every stored row (raw: tombstones and ``_seq``
+        included; folded on merge-on-read), classified with the keyed
+        diff's rule and written bucket by bucket. No stats pass and no
+        separate diff: the join's batch side reuses the LWW window's
+        Exchange, so the plan has three (window, stored side, write
+        fan-out).
+
+        Classification (:func:`~diffsync_spark.operators.diff.diff`): a
+        tombstone counts as absent; a key on both sides is an update when a
+        shared attribute differs (``eqNullSafe``), else unchanged. Output
+        per key:
+
+        - create/update: the batch row (columns it lacks NULL), live, with
+          ``_seq`` from the batch's ``seq`` column (-1 without one);
+        - delete: the stored row as a tombstone (columns the batch lacks
+          NULL), ``_seq`` -1 (NULL when the batch has a ``seq`` column);
+        - unchanged, or a tombstone with no batch row: the stored row as is.
+
+        The validity predicate only matters on rows that would be applied:
+        an invalid create/update is quarantined (today's reasons) and its
+        stored row kept. Duplicate keys resolve by LWW with valid rows
+        first. Null-key batch rows never reach the dedup (which would
+        collapse them); they are counted by a second observation on the
+        same query. The quarantine rows are written by a follow-up job
+        only when any were counted.
+
+        The write covers every bucket, so per-bucket op counts come from
+        the write's observation (:meth:`_write_buckets`). Only buckets with
+        a create, update or delete are committed; the others' new files are
+        deleted before the commit and their old references kept. The
+        result's ``diff`` holds the counts :func:`diff_summary` would give
+        (quarantined rows included, tombstone-only keys excluded)."""
+        from pyspark.sql import Observation
+
+        ids = list(self.model.identifiers)
+        n_buckets = man["n_buckets"]
+        bucket_src = self.model.parent_key or self.model.identifiers
+        skip_src, skip_dst = flags.skip_unmatched_src, flags.skip_unmatched_dst
+        payload = [c for c in src_cols
+                   if c not in ids and c not in _RESERVED_COL_NAMES]
+        # every expression below depends only on the schemas and flags, so
+        # successive syncs of one source shape reuse them (see _expr_cache)
+        _skey = ("snapshot", evolved.json(), tuple(public.fieldNames()),
+                 tuple(src_cols), n_buckets, skip_src, skip_dst,
+                 exp_fails is not None)
+        if _skey not in self._expr_cache:
+            key_ok = F.lit(True)
+            for k in ids:
+                key_ok = key_ok & F.col(k).isNotNull()
+            has_seq = "seq" in src_cols
+            s_sel = [*ids, *payload, "__valid",
+                     *(["seq"] if has_seq else []),
+                     *(["__exp_fail"] if exp_fails is not None else []),
+                     F.lit(True).alias("__s")]
+            cond = None
+            for k in ids:
+                e = F.col(f"s.{k}") == F.col(f"c.{k}")
+                cond = e if cond is None else cond & e
+            s_here = F.col("s.__s").isNotNull()
+            c_here = F.col("c.__c").isNotNull()
+            c_live = c_here & ~F.coalesce(F.col(f"c.{META_DELETED}"),
+                                          F.lit(False))
+            changed = F.lit(False)
+            for a in self.model.shared_attrs(src_cols, public.fieldNames()):
+                changed = changed | ~F.col(f"s.{a}").eqNullSafe(
+                    F.col(f"c.{a}"))
+            d_create = F.lit(False) if skip_src else s_here & ~c_live
+            d_update = s_here & c_live & changed
+            d_delete = F.lit(False) if skip_dst else ~s_here & c_live
+            upsert = d_create | d_update
+            valid = F.coalesce(F.col("s.__valid"), F.lit(False))
+            apply, bad = upsert & valid, upsert & ~valid
+            rewrite = apply | d_delete
+            metrics = [
+                F.count_if(bad).alias("n_bad"),
+                F.count_if(d_create).alias("n_create"),
+                F.count_if(d_update).alias("n_update"),
+                F.count_if(d_delete).alias("n_delete"),
+                F.count_if(s_here & c_live & ~changed).alias("n_noop"),
+            ]
+            if exp_fails is not None:
+                metrics.append(F.count_if(
+                    upsert & F.coalesce(F.col("s.__exp_fail"), F.lit(False))
+                ).alias("n_exp"))
+            out_cols = [F.coalesce(F.col(f"s.{k}"), F.col(f"c.{k}")).alias(k)
+                        for k in ids]
+            for f in evolved.fields:
+                if f.name in ids:
+                    continue
+                new = (F.col(f"s.{f.name}").try_cast(f.dataType)
+                       if f.name in payload else F.lit(None).cast(f.dataType))
+                when = apply if f.name in payload else rewrite
+                out_cols.append(F.when(when, new)
+                                .otherwise(F.col(f"c.{f.name}")).alias(f.name))
+            out_cols += [
+                # the force merge of the diff: an applied row carries the
+                # source's seq, a delete the (absent) seq of its before-image
+                F.when(apply, F.col("s.seq").cast("long") if has_seq
+                       else F.lit(-1).cast("long"))
+                .when(d_delete, F.lit(None).cast("long") if has_seq
+                      else F.lit(-1).cast("long"))
+                .otherwise(F.col(f"c.{META_SEQ}")).alias(META_SEQ),
+                # no otherwise(): nullable like the force merge's column, so
+                # the written parquet schema is the same
+                F.when(apply, F.lit(False)).when(d_delete, F.lit(True))
+                .when(c_here, F.coalesce(F.col(f"c.{META_DELETED}"),
+                                         F.lit(False)))
+                .alias(META_DELETED),
+                F.when(apply & ~c_live, F.lit("create"))
+                .when(apply, F.lit("update"))
+                .when(d_delete, F.lit("delete"))
+                .otherwise(F.lit("noop")).alias("__op_class"),
+                F.pmod(F.xxhash64(*[
+                    F.coalesce(F.col(f"s.{k}"), F.col(f"c.{k}"))
+                    for k in bucket_src
+                ]), F.lit(n_buckets)).cast("int").alias(BUCKET),
+            ]
+            carried = [*payload, *(["seq"] if has_seq else [])]
+            q_cols = [*ids, "op", *carried, "__valid"]
+            q_sel = [
+                *[F.col(f"s.{c}").alias(c) for c in ids],
+                F.when(c_live, F.lit("update")).otherwise(F.lit("create"))
+                .alias("op"),
+                *[F.col(f"s.{c}").alias(c) for c in carried],
+                F.lit(False).alias("__valid"),
+            ]
+            self._expr_cache[_skey] = (key_ok, s_sel, cond, metrics,
+                                       apply | c_here, out_cols, bad, q_sel,
+                                       q_cols)
+        (key_ok, s_sel, cond, metrics, keep, out_cols, bad, q_sel,
+         q_cols) = self._expr_cache[_skey]
+
+        src = batch
+        if exp_fails is not None:
+            src = src.withColumn("__exp_fail", exp_fails)
+        # null-key rows can never match a stored key: a create under the
+        # diff's rule, so quarantined unless creates are skipped
+        keys_obs = None
+        if not skip_src:
+            keys_obs = Observation(f"snapshot_keys_v{new_version}")
+            src = src.observe(keys_obs, F.count_if(~key_ok).alias("n"))
+        # duplicate keys resolve by LWW among the valid rows first — the
+        # order every merge applies (validate, then dedup), so a null-ts
+        # duplicate never displaces a valid one
+        src = lww_dedup(src.filter(key_ok), self.model, order_cols=(
+            "__valid", *self.model.version_cols,
+            *(["seq"] if "seq" in src.columns else [])))
+        s = src.select(*s_sel).alias("s")
+        c = (self._stored_frame(man, None, evolved)
+             .withColumn("__c", F.lit(True)).alias("c"))
+        joined = s.join(c, cond, "right_outer" if skip_src else "full_outer")
+        obs = Observation(f"snapshot_v{new_version}")
+        merged = joined.observe(obs, *metrics).filter(keep).select(*out_cols)
+
+        buckets = list(range(n_buckets))
+        rows = man.get("bucket_rows", {})
+        splits = self._plan_splits(
+            {b: int(rows.get(str(b), 0)) for b in buckets})
+        data_dir = self._attempt_dir(new_version, snapshot_id)
+        per_bucket = self._write_buckets(
+            merged, man, data_dir, buckets, splits, evolved,
+            f"merge_v{new_version}",
+        )
+        m = obs.get
+        n_null = keys_obs.get["n"] if keys_obs is not None else 0
+        n_quarantined = m["n_bad"] + n_null
+        _prof("snapshot_write_job", t_start)
+
+        _t0 = time.perf_counter()
+        if n_quarantined:
+            rejected = joined.filter(bad).select(*q_sel)
+            if n_null:
+                rejected = rejected.unionByName(
+                    batch.filter(~key_ok)
+                    .withColumns({"op": F.lit("create"),
+                                  "__valid": F.lit(False)})
+                    .select(*q_cols))
+            self._write_quarantine(rejected, exp_reason, new_version,
+                                   snapshot_id)
+        _prof("quarantine_write", _t0)
+
+        _t0 = time.perf_counter()
+        applied = {
+            b: sum(per_bucket.get((b, o), 0)
+                   for o in ("create", "update", "delete"))
+            for b in buckets
+        }
+        touched = [b for b in buckets if applied[b]]
+        if touched:
+            kept = {f"{BUCKET}={b}" for b in touched}
+            for entry in self.io.list_dirs(data_dir):
+                if entry.startswith(f"{BUCKET}=") and entry not in kept:
+                    self.io.remove_dir(os.path.join(data_dir, entry))
+        else:
+            self.io.remove_dir(data_dir)
+        _prof("discard_unchanged", _t0)
+
+        res = self._commit_rewrite(
+            man, new_version, snapshot_id, data_dir, touched, splits,
+            per_bucket, n_quarantined, checkpoint_id, batch_id, evolved,
+            sum(applied.values()),
+        )
+        res["n_expectation_failed"] = (
+            m["n_exp"] if exp_fails is not None else 0)
+        diff = {f"n_{o}": m[f"n_{o}"] for o in _OP_CLASSES}
+        diff["n_create"] += n_null
+        if not flags.keep_noop:
+            diff["n_noop"] = 0
+        diff["n_total"] = sum(diff.values())
+        res["diff"] = diff
+        return res
 
     def _append_commit(
         self,
@@ -2344,9 +2652,7 @@ class SnapshotTable:
         from pyspark.sql import Observation
 
         ids = list(self.model.identifiers)
-        data_dir = os.path.join(
-            self.path, "data", f"v{new_version}-{snapshot_id[:12]}"
-        )
+        data_dir = self._attempt_dir(new_version, snapshot_id)
         splits = self._plan_splits(
             {int(b): n for b, n in man.get("bucket_rows", {}).items()}
         )
@@ -2531,7 +2837,7 @@ class SnapshotTable:
     def apply_diff(self, diff_df: DataFrame, checkpoint_id: str = "diff",
                    batch_id: int | None = None) -> dict[str, Any]:
         """Apply a diff frame from :func:`diffsync_spark.diff` — the
-        ``sync_from`` path (``/root/reference/diffsync/__init__.py:577-644``):
+        ``sync_from(diff_df=...)`` path (reference ``__init__.py:577-644``):
         create/update upsert the ``after`` payload, delete tombstones the key.
         Force mode: the diff was computed against the current state, so it is
         authoritative (no LWW race)."""
@@ -2883,6 +3189,26 @@ class SnapshotTable:
         return self.spark.read.parquet(qdir)
 
     # -------------------------------------------------------------- lineage
+    def last_change_share(self) -> float | None:
+        """Share of the stored rows that sit in the buckets the latest
+        commit changed (created, updated, deleted or appended rows in),
+        from the current manifest alone; 0.0 after a commit that changed
+        nothing (maintenance, an empty sync) and None for a table with no
+        rows. :meth:`Engine.sync_from` takes it as the prediction of how
+        much of the table the next sync changes."""
+        man = self._manifest()
+        rows = {int(b): n for b, n in (man.get("bucket_rows") or {}).items()}
+        total = sum(rows.values())
+        if not total:
+            return None
+        changed = {
+            r["partition"] for r in man.get("lineage", [])
+            if r["partition"] >= 0 and any(
+                r.get(k) for k in ("n_create", "n_update", "n_delete",
+                                   "n_append"))
+        }
+        return sum(rows.get(b, 0) for b in changed) / total
+
     def lineage_df(self) -> DataFrame:
         """Per-partition lineage across all retained commits (FIXTURES.md
         T6; versions dropped by ``expire_snapshots`` are skipped)."""
@@ -3243,9 +3569,7 @@ class SnapshotTable:
                     & (vc < F.lit(purge_tombstones_older_than))
                 )
             )
-        data_dir = os.path.join(
-            self.path, "data", f"v{new_version}-{snapshot_id[:12]}"
-        )
+        data_dir = self._attempt_dir(new_version, snapshot_id)
         # binpack with the same slot fan-out the MERGE uses: a hot bucket
         # keeps several (bounded-size) files + its lookup-prunable slot dirs
         # instead of collapsing into one oversized file
@@ -3468,9 +3792,7 @@ class SnapshotTable:
                     ),
                 },
             )
-        data_dir = os.path.join(
-            self.path, "data", f"v{new_version}-{snapshot_id[:12]}"
-        )
+        data_dir = self._attempt_dir(new_version, snapshot_id)
         out = self._tag_field_ids(out, public)
         self._write_files(out, man, data_dir)
         files: dict[str, list[str]] = {}

@@ -12,6 +12,7 @@ from __future__ import annotations
 import datetime
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from diffsync_spark.model import TRANSCRIPT_MODEL
@@ -388,3 +389,43 @@ def test_frame_sample_filters_before_the_arrow_udf(spark):
     assert proj_lines, plan
     assert all("duration_ms" not in ln and "mime" not in ln
                for ln in proj_lines)
+
+
+@pytest.mark.parametrize("n_buckets", [4, 128])
+def test_snapshot_sync_is_one_write_query(spark, tmp_path, n_buckets):
+    """``Engine.sync_from`` after a commit that changed the whole table is
+    ONE write query: the LWW-deduped source full-outer joined against the
+    stored rows, then the bucket fan-out. Three Exchanges (the LWW
+    window's, which the join reuses; the stored side's; the fan-out's) and
+    four Spark jobs under AQE (two shuffle map stages for the join, the
+    fan-out stage, the write) — no stats pass and no second diff. At 128
+    buckets the per-bucket counts span several observations of the same
+    write instead of a re-read."""
+    from diffsync_spark.engine import Engine
+    from diffsync_spark.sinks.table import SnapshotTable
+
+    src = spark.createDataFrame(_rows(16), _CDC).drop("op", "seq")
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "snap_write"), TRANSCRIPT_MODEL,
+        schema=src.schema, n_buckets=n_buckets,
+    )
+    t.merge(src.withColumn("op", F.lit("insert")), mode="force",
+            checkpoint_id="boot", batch_id=0)
+    plans = []
+    write_files = t._write_files
+
+    def capture(df, man, data_dir):
+        plans.append(_plan(df))
+        return write_files(df, man, data_dir)
+
+    t._write_files = capture
+    e = Engine(spark, TRANSCRIPT_MODEL, t)
+    e.sync_from(src.withColumn("text", F.lit("warm")), batch_id=1)
+    changed = src.withColumn("text", F.lit("changed"))
+    res, jobs, _ = _jobs_and_stages(
+        spark, f"snapshot-sync-{n_buckets}",
+        lambda: e.sync_from(changed, batch_id=2))
+    assert res["n_update"] == 16 and res["n_quarantined"] == 0
+    assert jobs == 4
+    assert plans[-1].count("Exchange hashpartitioning") == 3
+    assert "FullOuter" in plans[-1] and "Window" in plans[-1]

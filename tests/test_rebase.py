@@ -365,3 +365,47 @@ def test_mor_race_with_quarantine(spark, tmp_path, target_df, disjoint):
     ).collect()
     assert [r.n_quarantined for r in lin] == [1]
     assert len(table._manifest()["deltas"]) == 2
+
+
+@pytest.mark.parametrize("disjoint", [True, False])
+def test_snapshot_sync_race(spark, tmp_path, target_df, disjoint):
+    """A snapshot sync (``Engine.sync_from`` without a precomputed diff)
+    commits only the buckets it changed. Losing the race to a writer in
+    other buckets rebases metadata-only — the sync serializes first, so
+    the winner's rows survive. Losing to a writer in a shared bucket
+    recomputes against the winner's snapshot and converges to the
+    source."""
+    from diffsync_spark.engine import Engine
+
+    conv_a, conv_b = _conv_pair(spark, want_disjoint=disjoint)
+    table = _bootstrap(spark, tmp_path / "t", target_df)
+    writer_b = SnapshotTable.load(spark, table.path, TRANSCRIPT_MODEL)
+    writer_a = SnapshotTable.load(
+        spark, table.path, TRANSCRIPT_MODEL,
+        io=RacingCommitIO(
+            lambda: writer_b.merge(_batch(spark, conv_b, text="B"),
+                                   checkpoint_id="wb", batch_id=1),
+            races=1,
+        ),
+    )
+    source = target_df.unionByName(
+        _batch(spark, conv_a, text="A").drop("op", "seq"))
+    engine = Engine(spark, TRANSCRIPT_MODEL, writer_a)
+    res = engine.sync_from(source, batch_id=1)
+    assert (res["metadata_rebases"], res["commit_retries"]) == (
+        (1, 0) if disjoint else (0, 1))
+    assert res["n_create"] == 3 and res["n_update"] == 0
+    assert res["n_delete"] == (0 if disjoint else 3)
+    assert res["touched_buckets"] == sorted(
+        set(_buckets_of(spark, [conv_a] if disjoint
+                        else [conv_a, conv_b]).values()))
+    state = table.read()
+    assert state.filter(F.col("conv_id") == conv_a).count() == 3
+    assert state.filter(F.col("conv_id") == conv_b).count() == (
+        3 if disjoint else 0)
+    assert table.count_rows() == state.count()
+    if disjoint:
+        # the rebased attempt dir is referenced: no orphan
+        assert table.remove_orphans()["removed_dirs"] == []
+    else:
+        assert engine.converged(source)

@@ -1177,3 +1177,40 @@ def test_observe_cache_overflow_keeps_schema_entries(spark, tmp_path,
     assert all(k in table._expr_cache for k in merge_keys)
     n_obs = sum(k[0] == "observe" for k in table._expr_cache)
     assert 0 < n_obs <= 257
+
+
+def test_file_stats_errors_log_or_propagate(spark, tmp_path, target_df,
+                                            monkeypatch, caplog):
+    """The manifest's per-file column stats: an unreadable footer leaves
+    that file without stats (logged once per process at WARNING) and the
+    merge still commits; any other error propagates."""
+    import logging
+
+    import pyarrow.parquet as pq
+
+    from diffsync_spark import metrics
+
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "table"), TRANSCRIPT_MODEL,
+        schema=target_df.schema, n_buckets=4,
+    )
+    batch = target_df.withColumn("op", F.lit("insert"))
+    monkeypatch.setattr(metrics, "_warned_fallbacks", set())
+
+    def raiser(exc):
+        def f(*args, **kwargs):
+            raise exc
+        return f
+
+    monkeypatch.setattr(pq, "ParquetFile", raiser(OSError("footer gone")))
+    with caplog.at_level(logging.WARNING, logger="diffsync_spark.metrics"):
+        res = table.merge(batch, mode="force", checkpoint_id="boot",
+                          batch_id=0)
+    assert res["n_create"] == target_df.count()
+    assert not table._manifest().get("_file_stats")
+    logged = [r for r in caplog.records if "file stats" in r.getMessage()]
+    assert len(logged) == 1 and "footer gone" in logged[0].getMessage()
+    monkeypatch.setattr(pq, "ParquetFile", raiser(TypeError("a real bug")))
+    with pytest.raises(TypeError, match="a real bug"):
+        table.merge(batch.withColumn("text", F.lit("x")), mode="force",
+                    checkpoint_id="boot", batch_id=1)
