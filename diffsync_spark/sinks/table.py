@@ -65,6 +65,11 @@ from diffsync_spark.flags import DiffFlags
 from diffsync_spark.metrics import warn_fallback_once
 from diffsync_spark.model import ModelSchema
 from diffsync_spark.operators.lww import lww_dedup
+from diffsync_spark.sinks.arrow_read import (
+    FIELD_ID_KEY as _FIELD_ID_KEY,
+    _lww_fold_chunk,
+    _read_key_rows,
+)
 from diffsync_spark.sinks.fsio import LocalCommitIO
 
 def _prof(label: str, t0: float) -> None:
@@ -94,7 +99,6 @@ SLOT = "__slot"
 # 1..N at create/evolution time, meta columns live in a reserved band.
 # Rename = same id, new name (old files keep resolving); drop + re-add =
 # NEW id (old files' values never resurrect).
-_FIELD_ID_KEY = "parquet.field.id"
 _META_FIELD_IDS = {META_SEQ: 10_001, META_DELETED: 10_002,
                    META_COMMIT: 10_003}
 _MAX_USER_FIELD_ID = 10_000
@@ -124,6 +128,12 @@ _OP_CLASSES = ("create", "update", "delete", "noop")
 # metric expressions per observation on a write job; wider per-bucket
 # counts are split over several observations of the same job
 _OBSERVE_MAX_EXPRS = 512
+# per-bucket stored-row and live-row counts a full-bucket rewrite
+# (compact, rebucket) observes on its write
+_ROW_COUNT_CONDS = {
+    "arr_rows": f"`{BUCKET}` = {{b}}",
+    "arr_live": f"`{BUCKET}` = {{b}} AND NOT coalesce(`{META_DELETED}`, false)",
+}
 
 # per-attempt data dir naming: v{version}-{snapshot_id[:12]} — the component
 # remove_orphans / liveness checks key on (bucket/slot dirs can never match)
@@ -1125,29 +1135,40 @@ class SnapshotTable:
 
     def _route_key(
         self, man: dict, public: T.StructType, vals: dict
-    ) -> tuple[int, int | None]:
-        """``(bucket, full-key xxhash64)`` of one key, hashed exactly as
-        MERGE routes its writes: xxhash64 over each value as a literal cast
-        to its STORED type. The projection sits over a one-row ``VALUES``
+    ) -> tuple[int, int | None, tuple | None]:
+        """``(bucket, full-key xxhash64, key)`` of one key, hashed exactly
+        as MERGE routes its writes: xxhash64 over each value as a literal
+        cast to its STORED type. ``key`` is those cast identifier values
+        (a TimestampType value as epoch micros, so no local-time round
+        trip), for a reader that matches the key with the routing's cast
+        semantics. The projection sits over a one-row ``VALUES``
         LocalRelation that Catalyst's ConvertToLocalRelation folds, so
         ``.first()`` is answered on the driver without a Spark job. The
-        hash is None when ``vals`` does not cover the full identifier key
-        (scan()'s parent-key routing needs only the bucket)."""
+        hash and ``key`` are None when ``vals`` does not cover the full
+        identifier key (scan()'s parent-key routing needs only the
+        bucket)."""
         stored = {f.name: f.dataType for f in public.fields}
         ids = list(self.model.identifiers)
         bucket_src = self.model.parent_key or ids
         lits = {c: F.lit(vals[c]).cast(stored[c])
                 for c in (*bucket_src, *ids) if c in vals}
+        full = set(ids) <= set(lits)
         full_key = (
-            F.xxhash64(*[lits[c] for c in ids]) if set(ids) <= set(lits)
+            F.xxhash64(*[lits[c] for c in ids]) if full
             else F.lit(None).cast("long")
         )
+        key_cols = [
+            F.unix_micros(lits[c]) if isinstance(stored[c], T.TimestampType)
+            else lits[c]
+            for c in (ids if full else ())
+        ]
         r = self.spark.sql("VALUES (0)").select(
             F.pmod(F.xxhash64(*[lits[c] for c in bucket_src]),
                    F.lit(man["n_buckets"])).cast("int").alias("b"),
             full_key.alias("h"),
+            *key_cols,
         ).first()
-        return r.b, r.h
+        return r[0], r[1], (tuple(r[2:]) if full else None)
 
     def _bucket_col(self):
         cols = self.model.parent_key or self.model.identifiers
@@ -1170,17 +1191,25 @@ class SnapshotTable:
         return sum(live.values())
 
     def lookup(self, key: Sequence[Any], version: int | None = None) -> dict | None:
-        """Point lookup that reads ONLY the key's bucket files (the durable
-        analog of the reference's ``store.get``, ``store/local.py:30-49``).
+        """Point lookup that reads ONLY the key's slot files, with no Spark
+        job (the durable analog of the reference's ``store.get``,
+        ``store/local.py:30-49``).
 
         The key's bucket is computed with the same xxhash64-over-stored-types
-        expression the MERGE routes writes with (folded on the driver — no
-        Spark job, see :meth:`_route_key`), then the manifest prunes the
-        read to that single bucket's file set: at 1,024 buckets a lookup
-        touches ~0.1% of the table regardless of total size. The read is
-        then one Spark job on copy-on-write and merge-on-read tables alike
-        (unless a copy-on-write slot's files span several scan partitions,
-        when ``take(1)`` may scale up). Returns the row dict or None."""
+        expression the MERGE routes writes with (folded on the driver, see
+        :meth:`_route_key`), then the manifest prunes the read to that
+        bucket's slot file — plus, on merge-on-read, each layer's slot file:
+        at most 1 + ``max_delta_layers`` small files whatever the table
+        size. The driver reads them with pyarrow (key predicate pushed down
+        to row groups), resolves columns by field id, folds the key's rows
+        by :meth:`_fold`'s order and converts the winner as ``collect()``
+        would: naive local datetimes, ``bytes``, ``Decimal``, nested
+        ``Row``. Returns the row dict, or None for a missing or deleted
+        key."""
+        import pyarrow as pa
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         ids = list(self.model.identifiers)
         if len(key) != len(ids):
             raise DiffSyncSparkError(
@@ -1188,41 +1217,40 @@ class SnapshotTable:
             )
         man = self._manifest(version)
         public = T.StructType.fromJson(json.loads(man["schema"]))
-        bucket, key_hash = self._route_key(man, public, dict(zip(ids, key)))
+        bucket, key_hash, cast_key = self._route_key(
+            man, public, dict(zip(ids, key)))
         # the writer's slot hash is over the FULL key — Python % matches
         # Spark pmod sign semantics for a positive modulus
         files = self._lookup_files(man, bucket, key_hash)
         dfiles = self._lookup_delta_files(man, bucket, key_hash)
-        if not files and not dfiles:
+        if (not files and not dfiles) or any(v is None for v in cast_key):
+            return None  # a NULL key part equals no stored row
+        fold_schema = self._fold_schema(self._full_schema(public))
+        arrow_types = {f.name: f.type for f in to_arrow_schema(fold_schema)}
+        probe = {c: pa.scalar(v, type=arrow_types[c])
+                 for c, v in zip(ids, cast_key)}
+        pieces = []
+        for p in files:
+            t = _read_key_rows(p, fold_schema, probe)
+            # base rows fold as commit 0, as in _stored_frame
+            pieces.append(t.set_column(
+                t.schema.get_field_index(META_COMMIT), META_COMMIT,
+                pa.array([0] * t.num_rows, type=pa.int64())))
+        pieces += [_read_key_rows(p, fold_schema, probe) for p in dfiles]
+        rows = pa.concat_tables(pieces)
+        if rows.num_rows > 1:
+            vcols = list(self.model.version_cols)
+            order = dict.fromkeys([*ids, *vcols[:1], META_SEQ, META_COMMIT])
+            # object ints keep int64 exact where NULLs would force float64
+            pdf = rows.select(list(order)).to_pandas(
+                integer_object_nulls=True)
+            pdf["__row"] = range(len(pdf))
+            win = _lww_fold_chunk(pdf, ids, vcols)["__row"].iloc[0]
+            rows = rows.slice(int(win), 1)
+        if not rows.num_rows or rows.column(META_DELETED)[0].as_py():
             return None
-        full = self._full_schema(public)
-        key_cond = F.lit(True)
-        for k, v in zip(ids, key):
-            key_cond = key_cond & (F.col(k) == F.lit(v))
-        if dfiles:
-            # merge-on-read: the key's row may live in the base AND in any
-            # layer — filter the key FIRST (parquet row-group pushdown on
-            # the write-ordered files), then fold the handful of survivors
-            # (at most 1 + max_delta_layers files) in ONE task: a single
-            # partition already satisfies the window's clustering, so the
-            # fold needs no Exchange and the lookup no second job
-            fold_schema = self._fold_schema(full)
-            rows_src = self.spark.read.schema(fold_schema).parquet(*dfiles)
-            if files:
-                rows_src = (
-                    self.spark.read.schema(full).parquet(*files)
-                    .withColumn(META_COMMIT, F.lit(0).cast("long"))
-                    .unionByName(rows_src)
-                )
-            frame = self._fold(rows_src.filter(key_cond).coalesce(1))
-        else:
-            frame = self.spark.read.schema(full).parquet(*files).filter(key_cond)
-        rows = (
-            frame.filter(~F.coalesce(F.col(META_DELETED), F.lit(False)))
-            .select(*[f.name for f in public.fields])
-            .take(1)
-        )
-        return rows[0].asDict() if rows else None
+        return ArrowTableToRowsConversion.convert(
+            rows.select(public.fieldNames()), public)[0].asDict()
 
     def _lookup_files(self, man: dict, bucket: int, key_hash: int) -> list[str]:
         """Manifest file pruning for a point lookup: the key's bucket, then
@@ -2050,6 +2078,36 @@ class SnapshotTable:
             self._expr_cache[_okey] = (exprs,)
         return out.observe(obs, *exprs), obs
 
+    def _observe_chunked(
+        self,
+        out: DataFrame,
+        name: str,
+        buckets: list[int],
+        conds: "dict[str, str]",
+    ):
+        """:meth:`_observe_bucket_counts` over ``buckets`` in chunks of at
+        most :data:`_OBSERVE_MAX_EXPRS` metric expressions (several
+        observations of the same write job), so any bucket count keeps its
+        counts on the write. Returns ``(out, counts)``; after the write,
+        ``counts()`` gives ``{key: [count per bucket]}`` aligned with
+        ``buckets``."""
+        step = max(1, _OBSERVE_MAX_EXPRS // len(conds))
+        chunks = []
+        for i in range(0, len(buckets), step):
+            out, obs = self._observe_bucket_counts(
+                out, f"{name}_{i // step}", buckets[i:i + step], conds)
+            chunks.append(obs)
+
+        def counts() -> dict[str, list[int]]:
+            got: dict[str, list[int]] = {k: [] for k in conds}
+            for obs in chunks:
+                m = obs.get
+                for k in conds:
+                    got[k].extend(m[k])
+            return got
+
+        return out, counts
+
     def _list_bucket_files(self, data_dir: str, bk: int) -> list[str]:
         """Parquet files of one bucket in a freshly-written data dir —
         both the slot layout (``_bucket=K/__slot=S/part-*``) and the legacy
@@ -2157,13 +2215,7 @@ class SnapshotTable:
                 f"`{BUCKET}` = {{b}} AND NOT coalesce(`{META_DELETED}`, false)"
             ),
         }
-        step = max(1, _OBSERVE_MAX_EXPRS // len(conds))
-        chunks = []
-        for i in range(0, len(buckets), step):
-            chunk = buckets[i:i + step]
-            out, obs = self._observe_bucket_counts(
-                out, f"{name}_{i // step}", chunk, conds)
-            chunks.append((chunk, obs))
+        out, counts = self._observe_chunked(out, name, buckets, conds)
         _prof("observe_build", _t0)
         _t0 = time.perf_counter()
         out = self._tag_field_ids(out, evolved)
@@ -2172,13 +2224,12 @@ class SnapshotTable:
         self._write_files(out, man, data_dir)
         _prof("write_job", _t0)
         _t0 = time.perf_counter()
+        m = counts()
         per_bucket: dict[tuple[int, str], int] = {}
-        for chunk, obs in chunks:
-            m = obs.get
-            for i, b in enumerate(chunk):
-                for oc in _OP_CLASSES:
-                    per_bucket[(b, oc)] = m[f"arr_{oc}"][i]
-                per_bucket[(b, "__live")] = m["arr_live"][i]
+        for i, b in enumerate(buckets):
+            for oc in _OP_CLASSES:
+                per_bucket[(b, oc)] = m[f"arr_{oc}"][i]
+            per_bucket[(b, "__live")] = m["arr_live"][i]
         _prof("obs_get", _t0)
         return per_bucket
 
@@ -3589,18 +3640,8 @@ class SnapshotTable:
             out = self._fanout_frame(raw, targets, splits)
         # re-observe row + live counts for the folded buckets — restores
         # the metadata-only count_rows() a MoR append had to give up
-        obs = None
-        if targets and len(targets) * 2 <= 512:
-            out, obs = self._observe_bucket_counts(
-                out, f"compact_v{new_version}", targets,
-                {
-                    "arr_rows": f"`{BUCKET}` = {{b}}",
-                    "arr_live": (
-                        f"`{BUCKET}` = {{b}} "
-                        f"AND NOT coalesce(`{META_DELETED}`, false)"
-                    ),
-                },
-            )
+        out, counts = self._observe_chunked(
+            out, f"compact_v{new_version}", targets, _ROW_COUNT_CONDS)
         out = self._tag_field_ids(
             out, T.StructType.fromJson(json.loads(man["schema"])))
         self._write_files(out, man, data_dir)
@@ -3620,13 +3661,9 @@ class SnapshotTable:
             # rule as _stat_cols (string min/max may be truncated)
             stat_cols += [c for c in zorder if c not in stat_cols]
         new_stats = self._collect_file_stats(new_paths, stat_cols)
-        counts = None
-        if obs is not None:
-            _m = obs.get
-            counts = {}
-            for i, bk in enumerate(targets):
-                counts[f"b{bk}_rows"] = _m["arr_rows"][i]
-                counts[f"b{bk}_live"] = _m["arr_live"][i]
+        m = counts()
+        rows_by_bk = dict(zip(targets, m["arr_rows"]))
+        live_by_bk = dict(zip(targets, m["arr_live"]))
 
         # manifest as a pure function of the base snapshot — after a lost
         # commit race _commit_with_rebase re-invokes this against the
@@ -3678,33 +3715,30 @@ class SnapshotTable:
                 manifest["deltas"] = deltas
             else:
                 manifest.pop("deltas", None)
-            if counts is not None:
-                bucket_rows = {
-                    b: n for b, n in base.get("bucket_rows", {}).items()
-                    if int(b) not in target_set
-                }
-                for bk in targets:
-                    n = counts[f"b{bk}_rows"]
-                    if n:
-                        bucket_rows[str(bk)] = n
-                manifest["bucket_rows"] = bucket_rows
-                # live counts follow the all-known-or-nothing rule (see
-                # _write_commit): only publish when every carried bucket —
-                # including ones still holding delta layers — has a known
-                # count
-                parent_live = base.get("bucket_live_rows")
-                carried = {b for b in files if int(b) not in target_set}
-                layered = {b for lay in deltas for b in lay["files"]}
-                live_rows = {
-                    b: n for b, n in (parent_live or {}).items()
-                    if int(b) not in target_set
-                }
-                if carried <= set(live_rows) and not layered:
-                    for bk in targets:
-                        live_rows[str(bk)] = counts[f"b{bk}_live"]
-                    manifest["bucket_live_rows"] = live_rows
-                else:
-                    manifest.pop("bucket_live_rows", None)
+            bucket_rows = {
+                b: n for b, n in base.get("bucket_rows", {}).items()
+                if int(b) not in target_set
+            }
+            bucket_rows.update(
+                (str(bk), n) for bk, n in rows_by_bk.items() if n)
+            manifest["bucket_rows"] = bucket_rows
+            # live counts follow the all-known-or-nothing rule (see
+            # _write_commit): only publish when every carried bucket —
+            # including ones still holding delta layers — has a known
+            # count
+            parent_live = base.get("bucket_live_rows")
+            carried = {b for b in files if int(b) not in target_set}
+            layered = {b for lay in deltas for b in lay["files"]}
+            live_rows = {
+                b: n for b, n in (parent_live or {}).items()
+                if int(b) not in target_set
+            }
+            if carried <= set(live_rows) and not layered:
+                live_rows.update(
+                    (str(bk), n) for bk, n in live_by_bk.items())
+                manifest["bucket_live_rows"] = live_rows
+            else:
+                manifest.pop("bucket_live_rows", None)
             return manifest
 
         manifest, n_rebases = self._commit_with_rebase(
@@ -3780,18 +3814,9 @@ class SnapshotTable:
             )
             .sortWithinPartitions(BUCKET, SLOT, *ids)
         )
-        obs = None
-        if n_buckets * 2 <= 512:
-            out, obs = self._observe_bucket_counts(
-                out, f"rebucket_v{new_version}", list(range(n_buckets)),
-                {
-                    "arr_rows": f"`{BUCKET}` = {{b}}",
-                    "arr_live": (
-                        f"`{BUCKET}` = {{b}} "
-                        f"AND NOT coalesce(`{META_DELETED}`, false)"
-                    ),
-                },
-            )
+        out, counts = self._observe_chunked(
+            out, f"rebucket_v{new_version}", list(range(n_buckets)),
+            _ROW_COUNT_CONDS)
         data_dir = self._attempt_dir(new_version, snapshot_id)
         out = self._tag_field_ids(out, public)
         self._write_files(out, man, data_dir)
@@ -3816,15 +3841,13 @@ class SnapshotTable:
             "bucket_splits": {b: uniform for b in files},
             "quarantine_dir": None,
         }
-        if obs is not None:
-            _m = obs.get
-            rows_arr, live_arr = _m["arr_rows"], _m["arr_live"]
-            manifest["bucket_rows"] = {
-                str(b): rows_arr[b] for b in range(n_buckets) if rows_arr[b]
-            }
-            manifest["bucket_live_rows"] = {
-                str(b): live_arr[int(b)] for b in files
-            }
+        m = counts()
+        manifest["bucket_rows"] = {
+            str(b): n for b, n in enumerate(m["arr_rows"]) if n
+        }
+        manifest["bucket_live_rows"] = {
+            b: m["arr_live"][int(b)] for b in files
+        }
         self._commit(manifest, parent=man["version"])
         return {
             "skipped": False,

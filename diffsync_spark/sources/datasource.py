@@ -34,8 +34,9 @@ Scope and honesty:
   this module reads manifests standalone; ``tests/test_datasource.py``
   pins its hydration against ``SnapshotTable._manifest`` to prevent
   drift.
-- Columns resolve by parquet FIELD ID first, name second — the same
-  rename-safe rule the engine's own reader uses.
+- Columns resolve by parquet FIELD ID, by name only for id-less fields
+  and files — Spark's own ``fieldId.read`` rule, shared with
+  ``SnapshotTable.lookup`` (``sinks/arrow_read.py``).
 
 Reference analog: the remote-adapter contract (a third system consuming
 diffsync state, ``/root/reference/README.md`` examples) — here the
@@ -56,8 +57,12 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_FIELD_ID_KEY = "parquet.field.id"  # matches sinks/table.py
-_PARQUET_FIELD_ID = b"PARQUET:field_id"
+from diffsync_spark.sinks.arrow_read import (
+    _cast_table,
+    _lww_fold_chunk,
+    _project,
+    _resolve_columns,
+)
 
 
 # --------------------------------------------------------------- manifests
@@ -119,53 +124,6 @@ class _Part(InputPartition):
 
 
 # ------------------------------------------------------------ worker side
-def _resolve_columns(file_schema, want: T.StructType, extra: Sequence[str]):
-    """Rename-safe column resolution plan for one data file: for every
-    wanted table field, the file column index to take — match the field's
-    parquet id first, its name second; absent -> None (NULL fill).
-    Returns ``(names, idxs, defaults)`` where ``defaults[i]`` is the fill
-    value for an absent extra column."""
-    by_id: dict[int, int] = {}
-    for i, f in enumerate(file_schema):
-        fid = (f.metadata or {}).get(_PARQUET_FIELD_ID)
-        if fid is not None:
-            by_id[int(fid)] = i
-    names, idxs, defaults = [], [], []
-    for f in list(want.fields):
-        fid = (f.metadata or {}).get(_FIELD_ID_KEY)
-        idx = by_id.get(int(fid)) if fid is not None else None
-        if idx is None and f.name in file_schema.names:
-            idx = file_schema.names.index(f.name)
-        names.append(f.name)
-        idxs.append(idx)
-        defaults.append(None)
-    for name in extra:
-        names.append(name)
-        if name in file_schema.names:
-            idxs.append(file_schema.names.index(name))
-            defaults.append(None)
-        else:
-            idxs.append(None)
-            defaults.append({"_seq": -1, "_deleted": False, "__commit": 0}[name])
-    return names, idxs, defaults
-
-
-def _project(tbl, names, idxs, defaults):
-    """Apply a :func:`_resolve_columns` plan to an arrow table/batch."""
-    import pyarrow as pa
-
-    n = tbl.num_rows
-    cols = []
-    for idx, default in zip(idxs, defaults):
-        if idx is not None:
-            cols.append(tbl.column(idx))
-        elif default is None:
-            cols.append(pa.nulls(n, type=pa.null()))
-        else:
-            cols.append(pa.array([default] * n))
-    return pa.table(dict(zip(names, cols)))
-
-
 def _read_file(path: str, want: T.StructType, extra: Sequence[str]):
     """Read one data file with rename-safe column resolution."""
     import pyarrow.parquet as pq
@@ -190,18 +148,7 @@ def _iter_file_batches(path: str, want: T.StructType, extra: Sequence[str],
 
 def _cast_batches(tbl, schema: T.StructType):
     """Column-wise cast an arrow table to the Spark schema's arrow form."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    out = []
-    for f in arrow_schema:
-        col = tbl.column(f.name) if f.name in tbl.schema.names else None
-        if col is None:
-            col = pa.nulls(tbl.num_rows, type=f.type)
-        out.append(col.cast(f.type))
-    yield from pa.table(dict(zip(arrow_schema.names, out))).cast(
-        arrow_schema).to_batches(max_chunksize=1 << 16)
+    yield from _cast_table(tbl, schema).to_batches(max_chunksize=1 << 16)
 
 
 def _to_batches(pdf, schema: T.StructType):
@@ -212,20 +159,6 @@ def _to_batches(pdf, schema: T.StructType):
 
 
 # ----------------------------------------------------------------- readers
-def _lww_fold_chunk(pdf, ids: list, vcols: list):
-    """The committed LWW fold rule over one pandas chunk, EXACTLY as
-    table.py _fold: version_cols[0] DESC NULLS FIRST, _seq DESC (nulls
-    LAST — Spark desc sorts nulls last; pandas na_position is global, so
-    nulls are pre-filled with -inf), __commit ASC."""
-    pdf = pdf.copy()
-    pdf["_seq"] = pdf["_seq"].astype("float64").fillna(float("-inf"))
-    order = vcols[:1] + ["_seq", "__commit"]
-    asc = [False] * len(vcols[:1]) + [False, True]
-    pdf = pdf.sort_values(order, ascending=asc, na_position="first",
-                          kind="mergesort")
-    return pdf.drop_duplicates(subset=ids, keep="first")
-
-
 def _lex_lt(pdf, ids: list, bound: tuple):
     """Vectorized lexicographic ``key < bound`` over the id columns."""
     import numpy as np

@@ -14,7 +14,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from diffsync_spark.model import ModelSchema
 from diffsync_spark.sinks.table import SnapshotTable
@@ -80,6 +80,23 @@ def test_batch_read_after_rename(spark, tmp_path):
            .option("path", str(tmp_path / "t")).load())
     assert "text" in got.columns
     assert dict((r.k, r.text) for r in got.collect())[1] == "v1"
+
+
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_batch_read_after_drop_and_readd(spark, tmp_path, write_mode):
+    """A dropped-then-re-added column gets a fresh field id: files written
+    before the drop carry the old id, so the external reader (like the
+    engine's) reads the re-added column as NULL there, not the dropped
+    values under the same name."""
+    t = _boot(spark, str(tmp_path / "t"), write_mode, n=40)
+    t.drop_column("v")
+    t.add_column("v", T.StringType())
+    t.merge(_chg(spark, [(3, "new", T0 + datetime.timedelta(hours=1),
+                          "update")]), checkpoint_id="c", batch_id=1)
+    got = (spark.read.format("diffsync_table")
+           .option("path", str(tmp_path / "t")).load())
+    assert _pairs(got) == _pairs(t.read())
+    assert [r.v for r in got.collect() if r.v is not None] == ["new"]
 
 
 def test_stream_tails_layer_commits_and_resumes(spark, tmp_path):

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from diffsync_spark import diff
 from diffsync_spark.errors import DiffSyncSparkError
-from diffsync_spark.model import TRANSCRIPT_MODEL
+from diffsync_spark.model import ModelSchema, TRANSCRIPT_MODEL
 from diffsync_spark.operators.diff import has_diffs
 from diffsync_spark.sinks.table import SnapshotTable
 from diffsync_spark.streaming.replay import replay_batches
@@ -429,3 +429,73 @@ def test_rebucket_preserves_everything(spark, tmp_path, target_df,
     # same-count rebucket is a commit-free no-op
     v = t.current_version()
     assert t.rebucket(16)["skipped"] and t.current_version() == v
+
+
+_KV = ModelSchema(name="kv", identifiers=("k",), attributes=("v",),
+                  version_cols=("ts",))
+
+
+def _kv_layer(spark, t, n, batch_id):
+    """A small merge-on-read layer of updates and deletes: afterwards the
+    stored rows of its buckets differ from their live rows."""
+    t.merge(spark.range(0, n, 75).select(
+        F.col("id").cast("int").alias("k"), F.lit("u").alias("v"),
+        F.lit(datetime.datetime(2025, 1, 2)).alias("ts"),
+        F.when(F.col("id") % 2 == 0, "delete").otherwise("update")
+        .alias("op")), checkpoint_id="c", batch_id=batch_id)
+
+
+@pytest.fixture(scope="module")
+def rebucketed(spark, tmp_path_factory):
+    """A 4-bucket merge-on-read table with a layer, rebucketed to 300
+    buckets — more than one observation holds (2 counts x 300 > 512 metric
+    expressions). Shared: a 300-bucket write costs tens of seconds."""
+    n = 1500
+    df = spark.range(n).select(
+        F.col("id").cast("int").alias("k"),
+        F.col("id").cast("string").alias("v"),
+        F.lit(datetime.datetime(2025, 1, 1)).alias("ts"))
+    t = SnapshotTable.create(spark, str(tmp_path_factory.mktemp("rb300")),
+                             _KV, schema=df.schema, n_buckets=4,
+                             write_mode="mor")
+    t.merge(df.withColumn("op", F.lit("insert")), mode="force",
+            checkpoint_id="boot", batch_id=0)
+    _kv_layer(spark, t, n, 1)
+    t.rebucket(300)
+    return t, n
+
+
+def _assert_counts_match_scan(t):
+    """``bucket_rows`` / ``bucket_live_rows`` equal a counting scan."""
+    man = t._manifest()
+    bk = F.pmod(F.xxhash64("k"), F.lit(man["n_buckets"])).cast("int")
+
+    def scan(df):
+        return {str(r[0]): r[1] for r in df.groupBy(bk).count().collect()}
+
+    assert man.get("bucket_rows") == scan(t.read_raw())
+    live = man.get("bucket_live_rows")
+    assert live is not None and set(live) == set(man["files"])
+    assert {b: n for b, n in live.items() if n} == scan(t.read())
+
+
+def test_rebucket_past_256_buckets_keeps_row_counts(rebucketed):
+    """The per-bucket counts of a 300-bucket rebucket are chunked over
+    several observations of the rewrite, not dropped."""
+    t, _ = rebucketed
+    assert t._manifest()["n_buckets"] == 300
+    _assert_counts_match_scan(t)
+    assert t.count_rows() == t.read().count()
+
+
+def test_compact_past_256_buckets_keeps_row_counts(spark, rebucketed):
+    """A compaction of more than 256 buckets replaces the folded buckets'
+    counts (the layer's rows are folded away) instead of keeping the
+    parent's."""
+    t, n = rebucketed
+    _kv_layer(spark, t, n, 2)
+    stale = dict(t._manifest()["bucket_rows"])
+    res = t.compact()
+    assert len(res["compacted_buckets"]) > 256
+    assert t._manifest()["bucket_rows"] != stale
+    _assert_counts_match_scan(t)

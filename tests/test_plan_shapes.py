@@ -303,11 +303,11 @@ def _jobs_and_stages(spark, group, fn):
     return out, len(jobs), len(stages)
 
 
-def test_point_lookup_runs_one_job(spark, tmp_path):
-    """A point lookup is ONE Spark job on both write modes: key routing
-    folds on the driver (no probe job), and the merge-on-read fold of the
-    key's few surviving rows runs in a single task — one stage, so no
-    Exchange — instead of a shuffle job plus a read job."""
+def test_point_lookup_runs_no_spark_job(spark, tmp_path):
+    """A point lookup launches NO Spark job on either write mode: key
+    routing folds on the driver, and the key's slot files (base plus, on
+    merge-on-read, each layer's) are read and folded with pyarrow on the
+    driver — for a hit and for a miss alike."""
     from diffsync_spark.sinks.table import SnapshotTable
 
     src = spark.createDataFrame(_rows(16), _CDC).drop("op", "seq")
@@ -323,15 +323,14 @@ def test_point_lookup_runs_one_job(spark, tmp_path):
                 "text", F.lit("layered"))
             t.merge(up, checkpoint_id="c", batch_id=1)
             assert t._manifest().get("deltas"), "setup: expected a layer"
-        t.lookup(["c0", 0])  # warm: the first read of a table is cold
         row, jobs, stages = _jobs_and_stages(
             spark, f"lookup-{mode}", lambda: t.lookup(["c3", 3]))
         assert row is not None and row["turn_idx"] == 3
         assert row["text"] == ("layered" if mode == "mor" else "t3")
-        assert (jobs, stages) == (1, 1), mode
-        miss, jobs, _ = _jobs_and_stages(
+        assert (jobs, stages) == (0, 0), mode
+        miss, jobs, stages = _jobs_and_stages(
             spark, f"miss-{mode}", lambda: t.lookup(["nope", 3]))
-        assert miss is None and jobs <= 1, mode
+        assert miss is None and (jobs, stages) == (0, 0), mode
 
 
 def test_mor_lww_merge_is_one_write_query(spark, tmp_path):
