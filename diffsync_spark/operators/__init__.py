@@ -1,4 +1,4 @@
-from diffsync_spark.operators.diff import diff, diff_cogroup, diff_summary, has_diffs
+from diffsync_spark.operators.diff import diff, diff_summary, has_diffs
 from diffsync_spark.operators.lww import lww_dedup
 from diffsync_spark.operators.rollup import (
     order_by_action,
@@ -16,7 +16,6 @@ from diffsync_spark.operators.store_ops import (
 
 __all__ = [
     "diff",
-    "diff_cogroup",
     "diff_summary",
     "has_diffs",
     "lww_dedup",

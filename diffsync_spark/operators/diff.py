@@ -21,9 +21,7 @@ expressions (``when``/``array_compact``/``struct``). Everything stays inside
 whole-stage codegen; no Python touches a row. Because the join key is the
 full natural key ``(conv_id, turn_idx)`` (high cardinality), hash shuffle
 spreads hot conversations across partitions by construction; AQE skew-join
-is the backstop. An Arrow ``cogroup`` variant (``diff_cogroup``) exists for
-semantics built-ins can't express; it groups by a salted key so one hot
-conversation never pins a single Python worker.
+is the backstop.
 
 Output schema (the "diff frame"):
 
@@ -150,116 +148,6 @@ def diff(
     if not flags.keep_noop:
         out = out.filter(F.col("op") != OP_NOOP)
     return out
-
-
-def diff_cogroup(
-    source: DataFrame,
-    target: DataFrame,
-    model: ModelSchema,
-    flags: DiffFlags = DiffFlags(),
-    num_buckets: int = 256,
-) -> DataFrame:
-    """Arrow cogroup rendering of :func:`diff` — same output schema.
-
-    For semantics the built-ins can't express (custom pair logic); diffing runs
-    as vectorized pandas merges over Arrow batches, one bucket of keys per
-    group. The grouping key is ``xxhash64(natural key) % num_buckets`` — the
-    FULL key, so hot conversations scatter across buckets (salting by
-    construction) and no single Python worker sees a whole hot conversation.
-    """
-    import pandas as pd  # local import: executors pickle this closure
-
-    model.validate_frame(source)
-    model.validate_frame(target)
-    ids = list(model.identifiers)
-    src_payload = _payload_cols(model, source)
-    dst_payload = _payload_cols(model, target)
-    shared = model.shared_attrs(source, target)
-
-    bucket = F.pmod(F.xxhash64(*ids), F.lit(num_buckets)).alias("__bucket")
-    s = source.select(bucket, *ids, *src_payload)
-    d = target.select(bucket, *ids, *dst_payload)
-
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in source.select(*ids).schema.fields
-    )
-    src_struct = source.select(*src_payload).schema.simpleString()[len("struct<"):-1]
-    dst_struct = target.select(*dst_payload).schema.simpleString()[len("struct<"):-1]
-    out_schema = (
-        f"{out_fields}, op string, changed_cols array<string>, "
-        f"before struct<{dst_struct}>, after struct<{src_struct}>"
-    )
-
-    keep_noop = flags.keep_noop
-    skip_src, skip_dst = flags.skip_unmatched_src, flags.skip_unmatched_dst
-
-    def diff_bucket(sp: pd.DataFrame, dp: pd.DataFrame) -> pd.DataFrame:
-        sp = sp.drop(columns="__bucket")
-        dp = dp.drop(columns="__bucket")
-        merged = sp.merge(
-            dp, on=ids, how="outer", suffixes=("__s", "__d"), indicator=True
-        )
-        # columns unique to one side keep their bare name after merge
-        def side(col: str, suf: str) -> pd.Series:
-            name = f"{col}{suf}" if f"{col}{suf}" in merged.columns else col
-            return merged[name]
-
-        src_here = merged["_merge"].isin(("left_only", "both"))
-        dst_here = merged["_merge"].isin(("right_only", "both"))
-        if skip_src:
-            merged = merged[dst_here.values]
-            src_here, dst_here = src_here[dst_here], dst_here[dst_here]
-        if skip_dst:
-            merged = merged[src_here.values]
-            dst_here, src_here = dst_here[src_here], src_here[src_here]
-
-        import numpy as np
-
-        n = len(merged)
-        ne_matrix = np.zeros((n, len(shared)), dtype=bool)
-        for j, c in enumerate(shared):
-            a, b = side(c, "__s"), side(c, "__d")
-            ne_matrix[:, j] = (~((a == b) | (a.isna() & b.isna()))).values
-        neq = ne_matrix.any(axis=1) if shared else np.zeros(n, dtype=bool)
-        shared_arr = np.array(shared, dtype=object)
-
-        op = pd.Series(OP_NOOP, index=merged.index)
-        op[neq] = OP_UPDATE
-        op[~dst_here.values] = OP_CREATE
-        op[~src_here.values] = OP_DELETE
-
-        def side_records(payload: list[str], suf: str) -> list[dict]:
-            colmap = {
-                (f"{c}{suf}" if f"{c}{suf}" in merged.columns else c): c
-                for c in payload
-            }
-            sub = merged[list(colmap)].rename(columns=colmap)
-            return sub.to_dict("records")
-
-        before_recs = side_records(dst_payload, "__d")
-        after_recs = side_records(src_payload, "__s")
-        out = merged[ids].copy()
-        out["op"] = op.values
-        out["changed_cols"] = [
-            list(shared_arr[row]) if o == OP_UPDATE else None
-            for row, o in zip(ne_matrix, op.values)
-        ]
-        out["before"] = [
-            r if here else None for r, here in zip(before_recs, dst_here.values)
-        ]
-        out["after"] = [
-            r if here else None for r, here in zip(after_recs, src_here.values)
-        ]
-        if not keep_noop:
-            out = out[out["op"] != OP_NOOP]
-        return out
-
-    return (
-        s.groupBy("__bucket")
-        .cogroup(d.groupBy("__bucket"))
-        .applyInPandas(diff_bucket, schema=out_schema)
-    )
 
 
 def diff_summary(diff_df: DataFrame) -> DataFrame:

@@ -56,7 +56,7 @@ import os
 import re
 import time
 import uuid
-from typing import Any, Sequence
+from typing import Any, NamedTuple, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
@@ -73,14 +73,18 @@ from diffsync_spark.sinks.arrow_read import (
 from diffsync_spark.sinks.fsio import LocalCommitIO
 
 def _prof(label: str, t0: float) -> None:
-    """Opt-in phase timing for the merge/commit path (guide §1: measure
+    """Opt-in phase timing for the write/commit paths (guide §1: measure
     first). Zero-cost unless DIFFSYNC_PROFILE_MERGE is set; prints one
     line per phase to stderr so a profiling run can attribute wall time
-    to driver-side phases (copy-on-write: stats pass, write job, footer
-    stats, commit; merge-on-read append: append_write_job,
-    quarantine_write, footer_pass, commit; snapshot sync:
-    snapshot_write_job, quarantine_write, discard_unchanged, file_stats,
-    commit)."""
+    to driver-side phases. Every bucket rewrite (copy-on-write merge,
+    snapshot sync, compact, rebucket) reports the shared step's
+    observe_build, write_job and footer_pass, then commit (rebucket
+    commits its own manifest, unlabelled); a copy-on-write merge adds
+    pre_stats, stats_pass, stored_frame_build and mid_to_write_commit
+    before it, a snapshot sync snapshot_write_job, quarantine_write and
+    discard_unchanged after it; a merge-on-read append reports
+    append_write_job, quarantine_write, footer_pass, commit; merge()
+    reports merge_total."""
     if os.environ.get("DIFFSYNC_PROFILE_MERGE"):
         import sys as _sys
 
@@ -123,21 +127,29 @@ def _with_field_ids(schema: T.StructType, start: int = 1) -> T.StructType:
     return T.StructType(fields)
 UPSERT_OPS = ("insert", "update", "create", "upsert")
 DELETE_OP = "delete"
-# per-row lineage classes of a copy-on-write rewrite (the __op_class column)
+# per-row lineage classes of a copy-on-write rewrite (the __op_class column);
+# noop is what a bucket's footer row count leaves after the applied classes
 _OP_CLASSES = ("create", "update", "delete", "noop")
+_APPLIED = _OP_CLASSES[:3]
 # metric expressions per observation on a write job; wider per-bucket
 # counts are split over several observations of the same job
 _OBSERVE_MAX_EXPRS = 512
-# per-bucket stored-row and live-row counts a full-bucket rewrite
-# (compact, rebucket) observes on its write
-_ROW_COUNT_CONDS = {
-    "arr_rows": f"`{BUCKET}` = {{b}}",
-    "arr_live": f"`{BUCKET}` = {{b}} AND NOT coalesce(`{META_DELETED}`, false)",
-}
 
 # per-attempt data dir naming: v{version}-{snapshot_id[:12]} — the component
 # remove_orphans / liveness checks key on (bucket/slot dirs can never match)
 _VDIR_RE = re.compile(r"^v\d+-[0-9a-f]+$")
+
+
+class _Written(NamedTuple):
+    """What one bucket rewrite wrote and counted
+    (:meth:`SnapshotTable._write_buckets`)."""
+
+    files: dict[str, list[str]]  # bucket -> its new data files
+    rows: dict[int, int]  # bucket -> stored rows, from the footers
+    stats: dict[str, dict[str, list]]  # file -> column -> [min, max]
+    live: dict[int, int]  # bucket -> observed non-tombstone rows
+    # bucket -> create/update/delete counts, when the frame was classified
+    ops: dict[int, dict[str, int]] | None
 
 
 class SnapshotTable:
@@ -460,64 +472,49 @@ class SnapshotTable:
                              if cur else [lo, hi])
         return {c: v for c, v in agg.items() if v}
 
-    def _collect_file_stats(
-        self, paths: list[str], cols: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """Per-file footer ``[min, max]`` stats for the manifest. Stats are
-        an optimization, never a requirement: a missing pyarrow or an
-        unreadable footer leaves the file without stats (no pruning on it)
-        and is logged once per process; any other error propagates."""
-        if not paths or not cols:
-            return {}
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except ImportError as e:
-            warn_fallback_once("manifest file stats", e)
-            return {}
-        want = set(cols)
-        out: dict[str, dict[str, list]] = {}
-        for p in paths:
-            try:
-                md = pq.ParquetFile(p).metadata
-            except (OSError, ValueError, pa.ArrowException) as e:
-                warn_fallback_once("manifest file stats", e)
-                continue
-            stats = self._footer_stats(md, want)
-            if stats:
-                out[p] = stats
-        return out
-
     def _layer_footers(
         self, data_dir: str, cols: list[str]
     ) -> tuple[dict[str, list[str]], dict[int, int], dict[str, dict[str, list]]]:
-        """One footer pass over a freshly written layer: its files per
-        ``_bucket=`` dir, each bucket's row count (sum of footer
-        ``num_rows``) and the per-file column stats. The row counts are
-        authoritative, so a missing pyarrow or an unreadable footer
-        raises rather than being skipped."""
-        import pyarrow.parquet as pq
-
-        want = set(cols)
+        """The one footer pass over a freshly written data dir: its files
+        per ``_bucket=`` dir, each bucket's row count (sum of footer
+        ``num_rows``) and the per-file ``[min, max]`` of the ``cols``.
+        Every writer takes its per-bucket row counts from here. A missing
+        pyarrow or an unreadable footer is logged once per process: that
+        file gets no stats (no pruning on it) and its bucket no row count
+        (unknown, left out of ``rows``); any other error propagates."""
         files: dict[str, list[str]] = {}
         rows: dict[int, int] = {}
         stats: dict[str, dict[str, list]] = {}
         prefix = f"{BUCKET}="
         for entry in self.io.list_dirs(data_dir):
-            if not entry.startswith(prefix):
-                continue
-            bk = int(entry[len(prefix):])
-            listed = self._list_bucket_files(data_dir, bk)
-            if not listed:
-                continue
-            files[str(bk)] = listed
-            rows[bk] = 0
+            if entry.startswith(prefix):
+                bk = int(entry[len(prefix):])
+                listed = self._list_bucket_files(data_dir, bk)
+                if listed:
+                    files[str(bk)] = listed
+        try:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+        except ImportError as e:
+            warn_fallback_once("manifest file stats", e)
+            return files, rows, stats
+        want = set(cols)
+        for b, listed in files.items():
+            n = 0
             for p in listed:
-                md = pq.ParquetFile(p).metadata
-                rows[bk] += md.num_rows
+                try:
+                    md = pq.ParquetFile(p).metadata
+                except (OSError, ValueError, pa.ArrowException) as e:
+                    warn_fallback_once("manifest file stats", e)
+                    n = None
+                    continue
+                if n is not None:
+                    n += md.num_rows
                 st = self._footer_stats(md, want)
                 if st:
                     stats[p] = st
+            if n is not None:
+                rows[int(b)] = n
         return files, rows, stats
 
     def _commit(self, manifest: dict, parent: int | None = None) -> None:
@@ -1170,20 +1167,18 @@ class SnapshotTable:
         ).first()
         return r[0], r[1], (tuple(r[2:]) if full else None)
 
-    def _bucket_col(self):
-        cols = self.model.parent_key or self.model.identifiers
-        return F.pmod(F.xxhash64(*cols), F.lit(self._manifest()["n_buckets"])).cast(
-            "int"
-        )
-
     def count_rows(self, version: int | None = None) -> int:
         """Live (non-tombstone) row count from manifest metadata alone —
         Iceberg's snapshot-summary ``total-records``: the reference's
         ``store.count`` (``store/local.py:91-103``) without touching data.
-        Each MERGE observes per-bucket live counts inside its own write job
-        (:meth:`_write_commit`), so at 100 TB this is a dict sum on the
-        driver, not a 100 TB scan. Manifests from before this field existed
-        fall back to one counting scan."""
+        Every bucket rewrite (merge, snapshot sync, compact, rebucket)
+        observes per-bucket live counts inside its own write job
+        (:meth:`_write_buckets`), so at 100 TB this is a dict sum on the
+        driver, not a 100 TB scan. ``bucket_live_rows`` is published only
+        while every bucket with data has a known count; a merge-on-read
+        layer makes its bucket's count unknown until compaction folds it,
+        and manifests from before this field have none. Then this falls
+        back to one counting scan."""
         man = self._manifest(version)
         live = man.get("bucket_live_rows")
         if live is None:
@@ -1920,7 +1915,7 @@ class SnapshotTable:
         # literal maps as ONE parsed expr, not create_map over 2x|touched|
         # F.lit Columns: each Column op is a py4j round trip — at 64 buckets
         # the old form was ~0.14s of driver wall per merge vs ~0.016s
-        # (measured, same class of fix as _observe_bucket_counts)
+        # (measured, same class of fix as _observe_buckets)
         split_map = F.expr(
             "map(" + ",".join(f"{b},{splits[b]}" for b in touched) + ")"
         )
@@ -2027,75 +2022,52 @@ class SnapshotTable:
             .drop("__z")
         )
 
-    def _observe_bucket_counts(
+    def _observe_buckets(
         self,
         out: DataFrame,
         name: str,
         buckets: list[int],
         conds: "dict[str, str]",
     ):
-        """Attach per-bucket count metrics to a write job as ONE
-        array-of-aggregates ``expr()`` per condition instead of
-        ``len(buckets) * len(conds)`` individual ``count_if`` Columns.
+        """Attach per-bucket counts to a write job: for each ``conds`` key
+        (a SQL predicate template with ``{b}`` as the bucket id), one
+        ``array(count_if(...), ...)`` metric over ``buckets``. Each metric
+        is ONE parsed ``expr()``, not ``len(buckets)`` Columns: every python
+        Column op is a py4j round trip, and at 64 buckets x 5 conditions
+        that form cost 2.0-2.8s of pure driver wall per merge (measured).
+        The buckets are chunked over several observations of the same job
+        of at most :data:`_OBSERVE_MAX_EXPRS` metric expressions each, so
+        any bucket count keeps its counts on the write. Returns ``(out,
+        counts)``; after the write, ``counts()`` gives ``{key: [count per
+        bucket]}`` aligned with ``buckets``.
 
-        Why: each python Column op is a py4j round trip; at 64 buckets x 5
-        conditions the old form built ~2,000 round trips — measured 2.0-2.8s
-        of pure DRIVER wall per merge (40-50%% of the whole commit) while the
-        cluster sat idle. The array form is a handful of SQL parses;
-        executor-side the aggregate buffers are identical.
-
-        ``conds`` maps metric key -> SQL predicate template with ``{b}`` as
-        the bucket id. Returns ``(out, observation)``; the observation's
-        ``get[key][i]`` is the count for ``buckets[i]``. Caller is
-        responsible for any bucket-count cap (the per-ROW evaluation cost is
-        O(buckets x conds), unchanged from the old form)."""
+        The parsed Columns depend only on (buckets, conds), so they are
+        cached on the handle (a replay's micro-batches touch the same
+        buckets; the Observations are per write). Unlike the schema-keyed
+        entries, the bucket-tuple key space is unbounded on a long-lived
+        handle whose batches touch varying subsets (each cached Column pins
+        a JVM tree via py4j), so at the cap only the observe entries are
+        evicted and a miss rebuilds cheaply."""
         from pyspark.sql import Observation
 
-        obs = Observation(name)
-        # the expr Columns depend only on (buckets, conds) — a replay's
-        # micro-batches touch the same buckets, so cache the parsed
-        # Columns on the handle (the Observation itself is per-merge).
-        # Unlike the schema-keyed entries, the bucket-tuple key space is
-        # unbounded on a long-lived handle whose batches touch varying
-        # subsets (each cached Column pins a JVM tree via py4j) — at the
-        # cap, evict the observe entries only (the schema-keyed merge
-        # entries are few and costly) and let a miss rebuild cheaply.
-        _okey = ("observe", tuple(buckets), tuple(sorted(conds.items())))
-        if _okey in self._expr_cache:
-            (exprs,) = self._expr_cache[_okey]
-        else:
-            if len(self._expr_cache) > 256:
-                for k in [k for k in self._expr_cache if k[0] == "observe"]:
-                    del self._expr_cache[k]
-            exprs = [
-                F.expr(
-                    "array(" + ",".join(
-                        f"count_if({cond.format(b=b)})" for b in buckets
-                    ) + ")"
-                ).alias(key)
-                for key, cond in conds.items()
-            ]
-            self._expr_cache[_okey] = (exprs,)
-        return out.observe(obs, *exprs), obs
-
-    def _observe_chunked(
-        self,
-        out: DataFrame,
-        name: str,
-        buckets: list[int],
-        conds: "dict[str, str]",
-    ):
-        """:meth:`_observe_bucket_counts` over ``buckets`` in chunks of at
-        most :data:`_OBSERVE_MAX_EXPRS` metric expressions (several
-        observations of the same write job), so any bucket count keeps its
-        counts on the write. Returns ``(out, counts)``; after the write,
-        ``counts()`` gives ``{key: [count per bucket]}`` aligned with
-        ``buckets``."""
         step = max(1, _OBSERVE_MAX_EXPRS // len(conds))
         chunks = []
         for i in range(0, len(buckets), step):
-            out, obs = self._observe_bucket_counts(
-                out, f"{name}_{i // step}", buckets[i:i + step], conds)
+            part = tuple(buckets[i:i + step])
+            key = ("observe", part, tuple(sorted(conds.items())))
+            if key not in self._expr_cache:
+                if len(self._expr_cache) > 256:
+                    for old in [k for k in self._expr_cache
+                                if k[0] == "observe"]:
+                        del self._expr_cache[old]
+                self._expr_cache[key] = ([
+                    F.expr("array(" + ",".join(
+                        f"count_if({cond.format(b=b)})" for b in part
+                    ) + ")").alias(k)
+                    for k, cond in conds.items()
+                ],)
+            obs = Observation(f"{name}_{i // step}")
+            out = out.observe(obs, *self._expr_cache[key][0])
             chunks.append(obs)
 
         def counts() -> dict[str, list[int]]:
@@ -2141,36 +2113,31 @@ class SnapshotTable:
         batch_rows: dict[int, int] | None = None,
         snapshot_id: str | None = None,
     ) -> dict[str, Any]:
-        """Single-pass commit: write the merged frame (op classification rides
-        along as a tiny extra column the readers' explicit schema ignores),
-        then derive per-bucket lineage counts from the WRITTEN files — a
-        columnar scan of two small columns. No persist: caching the wide
-        merged frame paid the in-memory columnar RLE encode/decode (dominant
-        CPU in profiles) and recomputed the join on eviction.
+        """Write and commit a copy-on-write merge in one pass: fan
+        ``merged`` (the classified join output, ``__op_class`` included) out
+        over the ``touched`` buckets (:meth:`_fanout_frame`), write and
+        account it (:meth:`_write_buckets`), then commit those buckets' new
+        files (:meth:`_commit_rewrite`). No persist: caching the wide merged
+        frame paid the in-memory columnar RLE encode/decode (dominant CPU in
+        profiles) and recomputed the join on eviction.
 
-        Salted write partitioning: see :meth:`_fanout_frame` — hot buckets
-        fan out over several writer slots (slot = physical ``__slot=``
-        partition dir), cold buckets stay single-file. Slot-count estimates
-        = this batch's per-bucket row counts + the previous snapshot's
-        stored per-bucket sizes (``bucket_rows``); the chosen counts are
-        committed as ``bucket_splits`` so readers can recompute a key's
-        slot and prune a lookup to one file."""
-        _t_wc0 = time.perf_counter()
+        Slot-count estimates = this batch's per-bucket row counts + the
+        previous snapshot's stored per-bucket sizes (``bucket_rows``); the
+        chosen counts are committed as ``bucket_splits`` so readers can
+        recompute a key's slot and prune a lookup to one file."""
         snapshot_id = snapshot_id or uuid.uuid4().hex
-        data_dir = self._attempt_dir(new_version, snapshot_id)
         cur_rows = {int(b): n for b, n in man.get("bucket_rows", {}).items()}
-        est = {
+        splits = self._plan_splits({
             b: (batch_rows or {}).get(b, 0) + cur_rows.get(b, 0) for b in touched
-        }
-        splits = self._plan_splits(est)
-        _prof("pre_fanout", _t_wc0)
-        per_bucket = self._write_buckets(
-            merged, man, data_dir, touched, splits, evolved,
+        })
+        written = self._write_buckets(
+            self._fanout_frame(merged, touched, splits), man,
+            self._attempt_dir(new_version, snapshot_id), touched, evolved,
             f"merge_v{new_version}",
         )
         return self._commit_rewrite(
-            man, new_version, snapshot_id, data_dir, touched, splits,
-            per_bucket, n_quarantined, checkpoint_id, batch_id, evolved,
+            man, new_version, snapshot_id, touched, splits, written, evolved,
+            n_quarantined, checkpoint_id, batch_id,
             sum((batch_rows or {}).values()),
         )
 
@@ -2184,125 +2151,111 @@ class SnapshotTable:
 
     def _write_buckets(
         self,
-        merged: DataFrame,
+        out: DataFrame,
         man: dict,
         data_dir: str,
         buckets: list[int],
-        splits: dict[int, int],
         evolved: T.StructType,
         name: str,
-    ) -> dict[tuple[int, str], int]:
-        """Fan ``merged`` out over ``buckets`` (see :meth:`_fanout_frame`),
-        write it under ``data_dir`` and return its per-bucket counts:
-        ``(bucket, op_class)`` and ``(bucket, "__live")`` (non-tombstone
-        rows). The counts ride the write job as observed metrics
-        (conditional count_ifs are branch-cheap inside codegen), in chunks
-        of at most :data:`_OBSERVE_MAX_EXPRS` metric expressions, so any
-        bucket count keeps them on the write."""
-        _t0 = time.perf_counter()
-        out = self._fanout_frame(merged, buckets, splits)
-        _prof("fanout_build", _t0)
-        _t0 = time.perf_counter()
-        # live rows (non-tombstone) per bucket ride the same write job —
-        # the table-level row count becomes manifest metadata (Iceberg
-        # snapshot-summary parity): count() never scans data
+        stat_cols: list[str] | None = None,
+    ) -> _Written:
+        """The one write-and-account step of every bucket rewrite: write
+        ``out``, a frame the caller already fanned out over ``buckets``
+        (:meth:`_fanout_frame`, :meth:`_zorder_fanout` or rebucket's uniform
+        fan-out), under ``data_dir`` and account for it.
+
+        The write job observes per bucket only what a footer cannot give
+        (:meth:`_observe_buckets`): live (non-tombstone) rows and, when the
+        frame carries a merge's ``__op_class``, the create/update/delete
+        counts. ``__op_class`` itself is dropped before the write. Files,
+        per-bucket row counts and per-file ``[min, max]`` of ``stat_cols``
+        (default :meth:`_stat_cols`) then come from one footer pass
+        (:meth:`_layer_footers`)."""
         conds = {
-            **{
-                f"arr_{oc}": f"`{BUCKET}` = {{b}} AND `__op_class` = '{oc}'"
-                for oc in _OP_CLASSES
-            },
-            "arr_live": (
-                f"`{BUCKET}` = {{b}} AND NOT coalesce(`{META_DELETED}`, false)"
-            ),
+            "live": f"`{BUCKET}` = {{b}} AND NOT coalesce(`{META_DELETED}`, false)"
         }
-        out, counts = self._observe_chunked(out, name, buckets, conds)
-        _prof("observe_build", _t0)
+        has_ops = "__op_class" in out.columns
+        if has_ops:
+            conds.update(
+                (oc, f"`{BUCKET}` = {{b}} AND `__op_class` = '{oc}'")
+                for oc in _APPLIED
+            )
         _t0 = time.perf_counter()
+        out, counts = self._observe_buckets(out, name, buckets, conds)
+        if has_ops:
+            out = out.drop("__op_class")
         out = self._tag_field_ids(out, evolved)
-        _prof("tag_field_ids", _t0)
+        _prof("observe_build", _t0)
         _t0 = time.perf_counter()
         self._write_files(out, man, data_dir)
         _prof("write_job", _t0)
         _t0 = time.perf_counter()
+        files, rows, stats = self._layer_footers(
+            data_dir, self._stat_cols(evolved) if stat_cols is None else stat_cols)
         m = counts()
-        per_bucket: dict[tuple[int, str], int] = {}
-        for i, b in enumerate(buckets):
-            for oc in _OP_CLASSES:
-                per_bucket[(b, oc)] = m[f"arr_{oc}"][i]
-            per_bucket[(b, "__live")] = m["arr_live"][i]
-        _prof("obs_get", _t0)
-        return per_bucket
+        _prof("footer_pass", _t0)
+        return _Written(
+            files, rows, stats, dict(zip(buckets, m["live"])),
+            {b: {oc: m[oc][i] for oc in _APPLIED}
+             for i, b in enumerate(buckets)} if has_ops else None,
+        )
 
     def _commit_rewrite(
         self,
         man: dict,
         new_version: int,
         snapshot_id: str,
-        data_dir: str,
         touched: list[int],
         splits: dict[int, int],
-        per_bucket: dict[tuple[int, str], int],
-        n_quarantined: int,
-        checkpoint_id: str,
-        batch_id: int | None,
+        written: _Written,
         evolved: T.StructType,
-        n_input: int,
+        n_quarantined: int = 0,
+        checkpoint_id: str | None = None,
+        batch_id: int | None = None,
+        n_input: int = 0,
     ) -> dict[str, Any]:
-        """Commit the ``touched`` buckets' files written under ``data_dir``
-        as their new contents (copy-on-write per bucket): footer stats,
-        lineage from ``per_bucket``, then the manifest through
-        :meth:`_commit_with_rebase`."""
-        # ---- build the new manifest: touched buckets point at new files,
-        # untouched buckets keep their old references (copy-on-write).
-        # Everything below is a pure function of the base snapshot, so the
-        # whole build runs as a closure _commit_with_rebase can re-invoke
-        # against a WINNER's snapshot after a lost race (metadata-only
-        # rebase — the data files above are written once).
-        bucket_files: dict[str, list[str]] = {}
-        new_paths: list[str] = []
-        _t0 = time.perf_counter()
-        for bk in touched:
-            listed = self._list_bucket_files(data_dir, bk)
-            if listed:
-                bucket_files[str(bk)] = listed
-                new_paths.extend(listed)
-        _prof("list_files", _t0)
-        _t0 = time.perf_counter()
-        new_stats = self._collect_file_stats(new_paths, self._stat_cols(evolved))
-        _prof("file_stats", _t0)
+        """Commit ``written``'s files as the new contents of the ``touched``
+        buckets (copy-on-write per bucket; a touched bucket with no files
+        ends up empty), through :meth:`_commit_with_rebase`. The one
+        manifest build of every rewrite that keeps the bucket numbering:
+        merge, snapshot sync and compact.
+
+        Lineage holds one row per touched bucket when ``written`` carries
+        op counts (a merge; noop is the bucket's footer row count minus the
+        applied rows), none for a compaction. ``bucket_live_rows`` follows
+        the all-known-or-nothing rule: it is published only when no bucket
+        keeps a merge-on-read layer and every carried bucket with files has
+        a known count, else ``count_rows()`` would undercount."""
+        touched_set = set(touched)
+        new_files = {b: fl for b, fl in written.files.items()
+                     if int(b) in touched_set}
+        new_stats = {p: written.stats[p] for fl in new_files.values()
+                     for p in fl if p in written.stats}
         lineage_rows = []
-        for bk in touched:
-            counts = {
-                o: per_bucket.get((bk, o), 0)
-                for o in _OP_CLASSES
-            }
-            lineage_rows.append(
-                {
+        if written.ops is not None:
+            for bk in touched:
+                ops = written.ops[bk]
+                rows = written.rows.get(bk)
+                lineage_rows.append({
                     "checkpoint_id": checkpoint_id,
                     "batch_id": batch_id,
                     "snapshot_id": snapshot_id,
                     "partition": bk,
-                    "n_create": counts["create"],
-                    "n_update": counts["update"],
-                    "n_delete": counts["delete"],
-                    "n_noop": counts["noop"],
+                    **{f"n_{oc}": n for oc, n in ops.items()},
+                    # unknown when a footer of the bucket was unreadable
+                    "n_noop": (None if rows is None
+                               else rows - sum(ops.values())),
                     "n_quarantined": 0,
-                }
-            )
+                })
         if n_quarantined:
-            lineage_rows.append(
-                {
-                    "checkpoint_id": checkpoint_id,
-                    "batch_id": batch_id,
-                    "snapshot_id": snapshot_id,
-                    "partition": -1,
-                    "n_create": 0,
-                    "n_update": 0,
-                    "n_delete": 0,
-                    "n_noop": 0,
-                    "n_quarantined": n_quarantined,
-                }
-            )
+            lineage_rows.append({
+                "checkpoint_id": checkpoint_id,
+                "batch_id": batch_id,
+                "snapshot_id": snapshot_id,
+                "partition": -1,
+                "n_create": 0, "n_update": 0, "n_delete": 0, "n_noop": 0,
+                "n_quarantined": n_quarantined,
+            })
         # the quarantine dir was written under the ORIGINAL attempt version;
         # its recorded path must not be re-derived from a rebased version
         quarantine_dir = (
@@ -2310,64 +2263,35 @@ class SnapshotTable:
             if n_quarantined else None
         )
 
+        # everything below is a pure function of the base snapshot, so the
+        # build runs as a closure _commit_with_rebase can re-invoke against
+        # a WINNER's snapshot after a lost race (metadata-only rebase — the
+        # data files above are written once). Untouched buckets keep their
+        # old references and counts (copy-on-write).
         def build(base: dict, version: int) -> dict:
-            files = {b: fl for b, fl in base["files"].items()
-                     if int(b) not in touched}
-            files.update(bucket_files)
+            def carried(key: str) -> dict:
+                return {b: v for b, v in (base.get(key) or {}).items()
+                        if int(b) not in touched_set}
+
+            files = {**carried("files"), **new_files}
             checkpoints = dict(base["checkpoints"])
             if batch_id is not None:
                 checkpoints[checkpoint_id] = batch_id
-            bucket_rows = {
-                b: n for b, n in base.get("bucket_rows", {}).items()
-                if int(b) not in touched
-            }
-            for bk in touched:
-                bucket_rows[str(bk)] = sum(
-                    per_bucket.get((bk, o), 0)
-                    for o in _OP_CLASSES
-                )
+            bucket_rows = carried("bucket_rows")
+            bucket_rows.update((str(b), n) for b, n in written.rows.items()
+                               if str(b) in new_files)
             # slot counts the files were actually written with — lookup's
             # file pruning recomputes a key's slot from these (copy-on-write:
             # a bucket's file list and its split count always commit together)
-            bucket_splits = {
-                b: s for b, s in base.get("bucket_splits", {}).items()
-                if int(b) not in touched
-            }
-            for bk in touched:
-                bucket_splits[str(bk)] = splits.get(bk, 1)
-            # live (non-tombstone) rows per bucket: untouched buckets carry
-            # the previous snapshot's numbers forward copy-on-write, touched
-            # buckets take this write's observed counts — count_rows() sums
-            # these. A parent manifest from before this field existed has
-            # untouched buckets with UNKNOWN live counts: emitting a partial
-            # dict would silently undercount forever, so only emit when every
-            # carried bucket's count is actually known (else count_rows falls
-            # back to one counting scan until all buckets have been rewritten)
-            parent_live = base.get("bucket_live_rows")
-            untouched_with_files = {
-                b for b in base["files"] if int(b) not in touched
-            }
-            if parent_live is None and untouched_with_files:
-                live_rows = None
-            else:
-                live_rows = {
-                    b: n for b, n in (parent_live or {}).items()
-                    if int(b) not in touched
-                }
-                if not untouched_with_files <= set(live_rows) | {
-                    str(t) for t in touched
-                }:
-                    live_rows = None  # a carried bucket has no known count
-                else:
-                    for bk in touched:
-                        live_rows[str(bk)] = per_bucket.get((bk, "__live"), 0)
-            # merge-on-read layers: a rewrite of a bucket (force merge /
-            # bootstrap) subsumes its delta layers — clear the touched
-            # buckets' entries, carry the rest forward, drop emptied layers
+            bucket_splits = carried("bucket_splits")
+            bucket_splits.update((b, splits.get(int(b), 1)) for b in new_files)
+            # merge-on-read layers: a rewrite of a bucket (force merge,
+            # bootstrap, compaction) subsumes its delta layers — clear the
+            # touched buckets' entries, carry the rest, drop emptied layers
             deltas = []
             for layer in base.get("deltas") or []:
                 kept = {b: fl for b, fl in layer["files"].items()
-                        if int(b) not in touched}
+                        if int(b) not in touched_set}
                 if kept:
                     deltas.append({
                         "commit": layer["commit"],
@@ -2379,6 +2303,13 @@ class SnapshotTable:
                         # ref (plus a drop list) instead of re-serializing it
                         **({"_src": layer["_src"]} if "_src" in layer else {}),
                     })
+            parent_live = base.get("bucket_live_rows") or {}
+            live_rows = None
+            if not deltas and set(files) - set(new_files) <= set(parent_live):
+                live_rows = {
+                    b: written.live[int(b)] if b in new_files else parent_live[b]
+                    for b in files
+                }
             return {
                 "version": version,
                 "snapshot_id": snapshot_id,
@@ -2417,7 +2348,7 @@ class SnapshotTable:
         )
         _prof("commit", _t0)
         totals = {
-            o: sum(r[f"n_{o}"] for r in lineage_rows)
+            o: sum(r[f"n_{o}"] or 0 for r in lineage_rows)
             for o in ("create", "update", "delete", "noop", "quarantined")
         }
         return {
@@ -2426,6 +2357,7 @@ class SnapshotTable:
             "version": manifest["version"],
             "touched_buckets": touched,
             "metadata_rebases": n_rebases,
+            "n_files": sum(map(len, manifest["files"].values())),
             # valid batch rows that entered the MERGE (post-quarantine,
             # pre-LWW-dedup) — the denominator for pre-filter reduction
             "n_input": n_input,
@@ -2477,9 +2409,10 @@ class SnapshotTable:
         only when any were counted.
 
         The write covers every bucket, so per-bucket op counts come from
-        the write's observation (:meth:`_write_buckets`). Only buckets with
-        a create, update or delete are committed; the others' new files are
-        deleted before the commit and their old references kept. The
+        the write's observation and row counts from its footers
+        (:meth:`_write_buckets`). Only buckets with a create, update or
+        delete are committed; the others' new files are deleted before the
+        commit and their old references kept. The
         result's ``diff`` holds the counts :func:`diff_summary` would give
         (quarantined rows included, tombstone-only keys excluded)."""
         from pyspark.sql import Observation
@@ -2609,9 +2542,9 @@ class SnapshotTable:
         splits = self._plan_splits(
             {b: int(rows.get(str(b), 0)) for b in buckets})
         data_dir = self._attempt_dir(new_version, snapshot_id)
-        per_bucket = self._write_buckets(
-            merged, man, data_dir, buckets, splits, evolved,
-            f"merge_v{new_version}",
+        written = self._write_buckets(
+            self._fanout_frame(merged, buckets, splits), man, data_dir,
+            buckets, evolved, f"merge_v{new_version}",
         )
         m = obs.get
         n_null = keys_obs.get["n"] if keys_obs is not None else 0
@@ -2632,11 +2565,7 @@ class SnapshotTable:
         _prof("quarantine_write", _t0)
 
         _t0 = time.perf_counter()
-        applied = {
-            b: sum(per_bucket.get((b, o), 0)
-                   for o in ("create", "update", "delete"))
-            for b in buckets
-        }
+        applied = {b: sum(written.ops[b].values()) for b in buckets}
         touched = [b for b in buckets if applied[b]]
         if touched:
             kept = {f"{BUCKET}={b}" for b in touched}
@@ -2648,9 +2577,8 @@ class SnapshotTable:
         _prof("discard_unchanged", _t0)
 
         res = self._commit_rewrite(
-            man, new_version, snapshot_id, data_dir, touched, splits,
-            per_bucket, n_quarantined, checkpoint_id, batch_id, evolved,
-            sum(applied.values()),
+            man, new_version, snapshot_id, touched, splits, written, evolved,
+            n_quarantined, checkpoint_id, batch_id, sum(applied.values()),
         )
         res["n_expectation_failed"] = (
             m["n_exp"] if exp_fails is not None else 0)
@@ -2772,7 +2700,7 @@ class SnapshotTable:
         _t0 = time.perf_counter()
         layer_files, per_bucket, new_stats = self._layer_footers(
             data_dir, self._stat_cols(evolved))
-        touched = sorted(per_bucket)
+        touched = sorted(int(b) for b in layer_files)
         _prof("footer_pass", _t0)
 
         lineage_rows = [
@@ -2786,7 +2714,8 @@ class SnapshotTable:
                 # count is recorded honestly as n_append instead
                 "n_create": 0, "n_update": 0, "n_delete": 0, "n_noop": 0,
                 "n_quarantined": 0,
-                "n_append": per_bucket[bk],
+                # None when a footer of the bucket was unreadable
+                "n_append": per_bucket.get(bk),
             }
             for bk in touched
         ]
@@ -2827,8 +2756,8 @@ class SnapshotTable:
             if batch_id is not None:
                 checkpoints[checkpoint_id] = batch_id
             bucket_rows = dict(base.get("bucket_rows", {}))
-            for bk in touched:
-                bucket_rows[str(bk)] = bucket_rows.get(str(bk), 0) + per_bucket[bk]
+            for bk, n in per_bucket.items():
+                bucket_rows[str(bk)] = bucket_rows.get(str(bk), 0) + n
             return {
                 "version": version,
                 "snapshot_id": snapshot_id,
@@ -3598,11 +3527,15 @@ class SnapshotTable:
                     "compacted_buckets": [], "n_files": 0}
         new_version = self._next_version(man)
         snapshot_id = uuid.uuid4().hex
+        public = T.StructType.fromJson(json.loads(man["schema"]))
+        bucket_src = self.model.parent_key or self.model.identifiers
         # fold-aware read: on a MoR table this IS the fold — base + layers
         # resolve to one winner per key (tombstones kept: they must stay to
-        # beat late-arriving older updates), written back as plain base
-        raw = self.read_raw(man["version"], buckets=targets).withColumn(
-            BUCKET, self._bucket_col()
+        # beat late-arriving older updates), written back as plain base.
+        # Rows are bucketed with this snapshot's n_buckets.
+        raw = self._stored_frame(man, targets, public).withColumn(
+            BUCKET,
+            F.pmod(F.xxhash64(*bucket_src), F.lit(man["n_buckets"])).cast("int"),
         )
         if purge_tombstones_older_than is not None:
             if not self.model.version_cols:
@@ -3620,140 +3553,45 @@ class SnapshotTable:
                     & (vc < F.lit(purge_tombstones_older_than))
                 )
             )
-        data_dir = self._attempt_dir(new_version, snapshot_id)
         # binpack with the same slot fan-out the MERGE uses: a hot bucket
         # keeps several (bounded-size) files + its lookup-prunable slot dirs
         # instead of collapsing into one oversized file
         cur_rows = {int(b): n for b, n in man.get("bucket_rows", {}).items()}
         splits = self._plan_splits({b: cur_rows.get(b, 0) for b in targets})
+        stat_cols = self._stat_cols(public)
         if zorder:
             if zorder_files_per_bucket:
                 splits = {b: zorder_files_per_bucket for b in targets}
-            out = self._zorder_fanout(
-                raw, targets, splits, list(zorder),
-                T.StructType.fromJson(json.loads(man["schema"])),
-            )
+            out = self._zorder_fanout(raw, targets, splits, list(zorder),
+                                      public)
             # one slot dir per bucket: lookups see splits=1 and read the
             # bucket's (range-split, stats-pruned) files
             splits = {b: 1 for b in targets}
-        else:
-            out = self._fanout_frame(raw, targets, splits)
-        # re-observe row + live counts for the folded buckets — restores
-        # the metadata-only count_rows() a MoR append had to give up
-        out, counts = self._observe_chunked(
-            out, f"compact_v{new_version}", targets, _ROW_COUNT_CONDS)
-        out = self._tag_field_ids(
-            out, T.StructType.fromJson(json.loads(man["schema"])))
-        self._write_files(out, man, data_dir)
-        target_set = set(targets)
-        bucket_files: dict[str, list[str]] = {}
-        new_paths: list[str] = []
-        for bk in targets:
-            listed = self._list_bucket_files(data_dir, bk)
-            if listed:
-                bucket_files[str(bk)] = listed
-                new_paths.extend(listed)
-        stat_cols = self._stat_cols(
-            T.StructType.fromJson(json.loads(man["schema"])))
-        if zorder:
             # Z columns earn per-file stats too — that's what makes the
             # clustering prunable by scan(); numeric-only, same soundness
             # rule as _stat_cols (string min/max may be truncated)
             stat_cols += [c for c in zorder if c not in stat_cols]
-        new_stats = self._collect_file_stats(new_paths, stat_cols)
-        m = counts()
-        rows_by_bk = dict(zip(targets, m["arr_rows"]))
-        live_by_bk = dict(zip(targets, m["arr_live"]))
-
-        # manifest as a pure function of the base snapshot — after a lost
-        # commit race _commit_with_rebase re-invokes this against the
-        # winner's manifest when the winner left the compacted buckets
-        # alone (targeted compaction racing an ingest stream on OTHER
-        # buckets is the common case at scale), skipping a full re-fold.
-        def build(base: dict, version: int) -> dict:
-            # untouched buckets carry their existing file lists forward
-            files = {b: fl for b, fl in base["files"].items()
-                     if int(b) not in target_set}
-            bucket_splits = {
-                b: s for b, s in base.get("bucket_splits", {}).items()
-                if int(b) not in target_set
-            }
-            files.update(bucket_files)
-            for b in bucket_files:
-                bucket_splits[b] = splits.get(int(b), 1)
-            # folded buckets leave their delta layers behind
-            deltas = []
-            for layer in base.get("deltas") or []:
-                kept = {b: fl for b, fl in layer["files"].items()
-                        if int(b) not in target_set}
-                if kept:
-                    deltas.append({
-                        "commit": layer["commit"],
-                        "files": kept,
-                        "splits": {b: s
-                                   for b, s in layer.get("splits", {}).items()
-                                   if b in kept},
-                        # ref provenance: _dehydrate reuses the layer's bm
-                        # ref (plus a drop list) instead of re-serializing it
-                        **({"_src": layer["_src"]} if "_src" in layer else {}),
-                    })
-            manifest = {
-                **base,
-                "version": version,
-                "snapshot_id": snapshot_id,
-                "parent_snapshot_id": base["snapshot_id"],
-                "files": files,
-                "_file_stats": {
-                    **(base.get("_file_stats") or {}),
-                    **new_stats,
-                },
-                "bucket_splits": bucket_splits,
-                "lineage": [],
-                "quarantine_dir": None,  # a compaction rejects nothing
-            }
-            if deltas:
-                manifest["deltas"] = deltas
-            else:
-                manifest.pop("deltas", None)
-            bucket_rows = {
-                b: n for b, n in base.get("bucket_rows", {}).items()
-                if int(b) not in target_set
-            }
-            bucket_rows.update(
-                (str(bk), n) for bk, n in rows_by_bk.items() if n)
-            manifest["bucket_rows"] = bucket_rows
-            # live counts follow the all-known-or-nothing rule (see
-            # _write_commit): only publish when every carried bucket —
-            # including ones still holding delta layers — has a known
-            # count
-            parent_live = base.get("bucket_live_rows")
-            carried = {b for b in files if int(b) not in target_set}
-            layered = {b for lay in deltas for b in lay["files"]}
-            live_rows = {
-                b: n for b, n in (parent_live or {}).items()
-                if int(b) not in target_set
-            }
-            if carried <= set(live_rows) and not layered:
-                live_rows.update(
-                    (str(bk), n) for bk, n in live_by_bk.items())
-                manifest["bucket_live_rows"] = live_rows
-            else:
-                manifest.pop("bucket_live_rows", None)
-            return manifest
-
-        manifest, n_rebases = self._commit_with_rebase(
-            build, man, new_version, targets
+        else:
+            out = self._fanout_frame(raw, targets, splits)
+        # the written counts restore the metadata-only count_rows() a MoR
+        # append had to give up; a commit that lost the race rebases onto
+        # the winner when it left the compacted buckets alone (targeted
+        # compaction racing an ingest stream on OTHER buckets is the
+        # common case at scale), skipping a full re-fold
+        written = self._write_buckets(
+            out, man, self._attempt_dir(new_version, snapshot_id), targets,
+            public, f"compact_v{new_version}", stat_cols,
         )
-        res = {
+        res = self._commit_rewrite(
+            man, new_version, snapshot_id, targets, splits, written, public)
+        return {
             "skipped": False,
-            "version": manifest["version"],
+            "version": res["version"],
             "compacted_buckets": targets,
-            "metadata_rebases": n_rebases,
-            "n_files": sum(map(len, manifest["files"].values())),
+            "metadata_rebases": res["metadata_rebases"],
+            "n_files": res["n_files"],
+            **({"zorder": list(zorder)} if zorder else {}),
         }
-        if zorder:
-            res["zorder"] = list(zorder)
-        return res
 
     # ---------------------------------------------------------- maintenance
     def rebucket(self, n_buckets: int,
@@ -3814,17 +3652,13 @@ class SnapshotTable:
             )
             .sortWithinPartitions(BUCKET, SLOT, *ids)
         )
-        out, counts = self._observe_chunked(
-            out, f"rebucket_v{new_version}", list(range(n_buckets)),
-            _ROW_COUNT_CONDS)
-        data_dir = self._attempt_dir(new_version, snapshot_id)
-        out = self._tag_field_ids(out, public)
-        self._write_files(out, man, data_dir)
-        files: dict[str, list[str]] = {}
-        for bk in range(n_buckets):
-            listed = self._list_bucket_files(data_dir, bk)
-            if listed:
-                files[str(bk)] = listed
+        # the new numbering cannot rebase onto a winner, so this keeps its
+        # own manifest; the shared step gives it counts and file stats
+        written = self._write_buckets(
+            out, man, self._attempt_dir(new_version, snapshot_id),
+            list(range(n_buckets)), public, f"rebucket_v{new_version}",
+        )
+        files = written.files
         manifest = {
             "version": new_version,
             "snapshot_id": snapshot_id,
@@ -3833,20 +3667,16 @@ class SnapshotTable:
             "last_field_id": man.get("last_field_id"),
             "n_buckets": n_buckets,
             "files": files,
+            "_file_stats": written.stats,
             **({"write_mode": man["write_mode"]} if "write_mode" in man else {}),
             **({"bloom_cols": man["bloom_cols"]} if "bloom_cols" in man else {}),
             **({"model": man["model"]} if "model" in man else {}),
             "checkpoints": man["checkpoints"],
             "lineage": [],
+            "bucket_rows": {str(b): n for b, n in written.rows.items()},
             "bucket_splits": {b: uniform for b in files},
+            "bucket_live_rows": {b: written.live[int(b)] for b in files},
             "quarantine_dir": None,
-        }
-        m = counts()
-        manifest["bucket_rows"] = {
-            str(b): n for b, n in enumerate(m["arr_rows"]) if n
-        }
-        manifest["bucket_live_rows"] = {
-            b: m["arr_live"][int(b)] for b in files
         }
         self._commit(manifest, parent=man["version"])
         return {
@@ -3898,8 +3728,11 @@ class SnapshotTable:
           manifest are reported as info, not failure).
 
         ``check_counts=True`` additionally SCANS the table and compares
-        per-bucket row counts against the manifest's ``bucket_rows`` —
-        one Spark aggregate over the data, the only non-metadata check.
+        each bucket without delta layers against the manifest's
+        ``bucket_rows`` (stored rows) and ``bucket_live_rows`` (live rows)
+        — one Spark aggregate over the data, the only non-metadata check. A
+        published ``bucket_live_rows`` that leaves out a bucket holding
+        files or layers is an error too: ``count_rows()`` would undercount.
 
         Returns ``{"ok": bool, "issues": [{severity, code, detail}, ...],
         "n_files": int, "version": int}`` — never raises on findings, so
@@ -3973,7 +3806,8 @@ class SnapshotTable:
                           f"to v{reach}")
             issue("info", "chain_gap",
                   detail + " — history/per-commit feeds reach this far")
-        if check_counts and man.get("bucket_rows"):
+        live_rows = man.get("bucket_live_rows")
+        if check_counts and (man.get("bucket_rows") or live_rows is not None):
             # layered buckets are excluded: their manifest counts track
             # raw appended rows while any scan folds to winners — only
             # compact() re-establishes a comparable number
@@ -3988,18 +3822,28 @@ class SnapshotTable:
             bcol = F.pmod(F.xxhash64(*bucket_src),
                           F.lit(man["n_buckets"])).cast("int")
             got = {
-                r[BUCKET]: r["n"]
+                r[BUCKET]: (r["n"], r["live"])
                 for r in self._stored_frame(man, plain, public)
                 .withColumn(BUCKET, bcol)
-                .groupBy(BUCKET).agg(F.count("*").alias("n")).collect()
+                .groupBy(BUCKET).agg(
+                    F.count("*").alias("n"),
+                    F.count_if(~F.coalesce(F.col(META_DELETED),
+                                           F.lit(False))).alias("live"),
+                ).collect()
             }
-            for b, want in man["bucket_rows"].items():
-                if int(b) in layered:
-                    continue
-                if got.get(int(b), 0) != want:
-                    issue("error", "bucket_rows_mismatch",
-                          f"bucket {b}: manifest says {want}, "
-                          f"scan found {got.get(int(b), 0)}")
+            for key, i in (("bucket_rows", 0), ("bucket_live_rows", 1)):
+                for b, want in (man.get(key) or {}).items():
+                    n = got.get(int(b), (0, 0))[i]
+                    if int(b) not in layered and n != want:
+                        issue("error", f"{key}_mismatch",
+                              f"bucket {b}: manifest says {want}, "
+                              f"scan found {n}")
+            if live_rows is not None:
+                holding = {b for b, fl in man.get("files", {}).items() if fl}
+                holding |= {str(b) for b in layered}
+                for b in sorted(holding - set(live_rows), key=int):
+                    issue("error", "bucket_live_rows_missing",
+                          f"bucket {b} holds data but has no live count")
         ok = not any(i["severity"] == "error" for i in issues)
         return {"ok": ok, "version": v, "n_files": n_files,
                 "issues": issues}

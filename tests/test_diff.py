@@ -9,7 +9,7 @@ import pytest
 from diffsync_spark import DiffFlags, diff, diff_summary
 from diffsync_spark.fixtures import evolve
 from diffsync_spark.model import TRANSCRIPT_MODEL
-from diffsync_spark.operators.diff import diff_cogroup, has_diffs
+from diffsync_spark.operators.diff import has_diffs
 from diffsync_spark.oracle import oracle_diff
 
 IDS = ["conv_id", "turn_idx"]
@@ -157,26 +157,3 @@ def test_diff_summary(source_df, target_df, oracle_ops):
         want["delete"],
         want["noop"],
     )
-
-
-def test_cogroup_matches_join(source_df, target_df, spark_ops):
-    got = _collect_ops(
-        diff_cogroup(source_df, target_df, TRANSCRIPT_MODEL, num_buckets=16)
-    )
-    assert got == spark_ops
-
-
-def test_cogroup_payload_parity(source_df, target_df):
-    a = (
-        diff(source_df, target_df, TRANSCRIPT_MODEL, DiffFlags(keep_noop=False))
-        .selectExpr("conv_id", "turn_idx", "op", "after.text as t", "before.text as b")
-        .collect()
-    )
-    b = (
-        diff_cogroup(
-            source_df, target_df, TRANSCRIPT_MODEL, DiffFlags(keep_noop=False)
-        )
-        .selectExpr("conv_id", "turn_idx", "op", "after.text as t", "before.text as b")
-        .collect()
-    )
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

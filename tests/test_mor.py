@@ -499,3 +499,99 @@ def test_compact_past_256_buckets_keeps_row_counts(spark, rebucketed):
     assert len(res["compacted_buckets"]) > 256
     assert t._manifest()["bucket_rows"] != stale
     _assert_counts_match_scan(t)
+
+
+def _kv_rows(spark, keys, v, ts, op="insert"):
+    return spark.createDataFrame(
+        [(k, v, ts, op) for k in keys],
+        "k int, v string, ts timestamp, op string")
+
+
+def _keys_by_bucket(spark, n_buckets, n=200):
+    bk = F.pmod(F.xxhash64(F.col("id").cast("int")), F.lit(n_buckets))
+    out: dict[int, list[int]] = {}
+    for r in spark.range(n).select(F.col("id").cast("int"), bk).collect():
+        out.setdefault(r[1], []).append(r[0])
+    return out
+
+
+def test_force_merge_beside_a_layer_only_bucket_keeps_live_count(
+        spark, tmp_path):
+    """A force merge that rewrites one bucket of a merge-on-read table
+    while another bucket holds only a delta layer must not publish live
+    counts that leave the layered bucket out."""
+    by_b = _keys_by_bucket(spark, 4)
+    a, b = by_b[0], by_b[1]
+    t0 = datetime.datetime(2025, 1, 1)
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), _KV,
+                             schema=_kv_rows(spark, [], "", t0)
+                             .drop("op").schema,
+                             n_buckets=4, write_mode="mor")
+    t.merge(_kv_rows(spark, a, "a", t0), mode="force",
+            checkpoint_id="boot", batch_id=0)
+    t.merge(_kv_rows(spark, b, "b", t0, "upsert"), checkpoint_id="c",
+            batch_id=1)
+    man = t._manifest()
+    assert set(man["files"]) == {"0"}
+    assert {bk for lay in man["deltas"] for bk in lay["files"]} == {"1"}
+    t.merge(_kv_rows(spark, a[:5], "a2", t0, "update"), mode="force",
+            checkpoint_id="f", batch_id=0)
+    live = t._manifest().get("bucket_live_rows")
+    assert live is None or "1" in live
+    assert t.count_rows() == t.read().count() == len(a) + len(b)
+    assert t.verify_table(check_counts=True)["ok"]
+
+
+def _kv_cow(spark, path, n=40):
+    t0 = datetime.datetime(2025, 1, 1)
+    t = SnapshotTable.create(spark, str(path), _KV,
+                             schema=_kv_rows(spark, [], "", t0)
+                             .drop("op").schema, n_buckets=4)
+    t.merge(_kv_rows(spark, range(n), "v", t0), mode="force",
+            checkpoint_id="boot", batch_id=0)
+    return t
+
+
+def _lww_merge(spark, t):
+    t1 = datetime.datetime(2025, 1, 2)
+    t.merge(_kv_rows(spark, range(0, 40, 3), "u", t1, "update")
+            .unionByName(_kv_rows(spark, range(1, 40, 7), None, t1, "delete"))
+            .unionByName(_kv_rows(spark, range(40, 44), "n", t1)),
+            checkpoint_id="c", batch_id=1)
+
+
+def _snapshot_merge(spark, t):
+    src = _kv_rows(spark, range(10, 50), "s",
+                   datetime.datetime(2025, 1, 3)).drop("op")
+    res = t.merge(src, mode="snapshot", checkpoint_id="s", batch_id=0)
+    assert (res["n_create"], res["n_delete"]) == (10, 10)
+
+
+def _purge_compact(spark, t):
+    """Purging a bucket's only rows (all tombstones) leaves no count
+    behind for it."""
+    gone = _keys_by_bucket(spark, 4, 40)[2]
+    t.merge(_kv_rows(spark, gone, None, datetime.datetime(2025, 1, 2),
+                     "delete"), checkpoint_id="c", batch_id=1)
+    assert "2" in t._manifest()["files"]
+    t.compact(purge_tombstones_older_than=datetime.datetime(2030, 1, 1))
+    assert "2" not in t._manifest()["files"]
+
+
+def _zorder_compact(spark, t):
+    t.merge(_kv_rows(spark, range(0, 40, 5), None,
+                     datetime.datetime(2025, 1, 2), "delete"),
+            checkpoint_id="c", batch_id=1)
+    res = t.compact(zorder=["k", "ts"], zorder_files_per_bucket=2)
+    assert res["zorder"] == ["k", "ts"]
+
+
+@pytest.mark.parametrize("rewrite", [_lww_merge, _snapshot_merge,
+                                     _purge_compact, _zorder_compact],
+                         ids=["lww", "snapshot", "purge", "zorder"])
+def test_rewrite_counts_match_scan(spark, tmp_path, rewrite):
+    """Every bucket rewrite of a 4-bucket copy-on-write table leaves
+    bucket_rows and bucket_live_rows equal to a counting scan."""
+    t = _kv_cow(spark, tmp_path / "t")
+    rewrite(spark, t)
+    _assert_counts_match_scan(t)

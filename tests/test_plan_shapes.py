@@ -428,3 +428,55 @@ def test_snapshot_sync_is_one_write_query(spark, tmp_path, n_buckets):
     assert jobs == 4
     assert plans[-1].count("Exchange hashpartitioning") == 3
     assert "FullOuter" in plans[-1] and "Window" in plans[-1]
+
+
+def _kv_table(spark, tmp_path, name, mode):
+    from diffsync_spark.sinks.table import SnapshotTable
+
+    src = spark.createDataFrame(_rows(16), _CDC).drop("op", "seq")
+    t = SnapshotTable.create(
+        spark, str(tmp_path / name), TRANSCRIPT_MODEL,
+        schema=src.schema, n_buckets=4, write_mode=mode,
+    )
+    t.merge(src.withColumn("op", F.lit("insert")), mode="force",
+            checkpoint_id="boot", batch_id=0)
+    return t, src
+
+
+def test_maintenance_writes_job_counts(spark, tmp_path):
+    """Bucket rewrites for maintenance stay small queries: maintain()
+    folding a merge-on-read layer runs at most 3 Spark jobs, compact() of
+    base-only buckets and rebucket() at most 2 each."""
+    mor, _ = _kv_table(spark, tmp_path, "maint_mor", "mor")
+    mor.merge(spark.createDataFrame(_rows(16), _CDC).withColumn(
+        "text", F.lit("layered")), checkpoint_id="c", batch_id=1)
+    res, jobs, _ = _jobs_and_stages(
+        spark, "maintain", lambda: mor.maintain(max_delta_layers=1))
+    assert res["compacted_buckets"] and not mor._manifest().get("deltas")
+    assert jobs <= 3, jobs
+    cow, _ = _kv_table(spark, tmp_path, "maint_cow", "cow")
+    res, jobs, _ = _jobs_and_stages(spark, "compact", lambda: cow.compact())
+    assert len(res["compacted_buckets"]) == 4 and jobs <= 2, jobs
+    res, jobs, _ = _jobs_and_stages(spark, "rebucket",
+                                    lambda: cow.rebucket(8))
+    assert res["n_buckets"] == 8 and jobs <= 2, jobs
+
+
+def test_rewrites_write_no_op_class_column(spark, tmp_path):
+    """The per-row lineage class is counted on the write and never
+    stored: files of a copy-on-write LWW merge and of a snapshot merge
+    carry no ``__op_class`` column."""
+    import pyarrow.parquet as pq
+
+    t, src = _kv_table(spark, tmp_path, "no_op_class", "cow")
+    up = spark.createDataFrame(_rows(16), _CDC).withColumn(
+        "seq", F.col("seq") + 100)
+    assert t.merge(up, checkpoint_id="c", batch_id=1)["n_update"] == 16
+    lww_files = {p for fl in t._manifest()["files"].values() for p in fl}
+    res = t.merge(src.withColumn("text", F.lit("snap")), mode="snapshot",
+                  checkpoint_id="s", batch_id=0)
+    assert res["n_update"] == 16
+    snap_files = {p for fl in t._manifest()["files"].values() for p in fl}
+    assert lww_files and snap_files and not lww_files & snap_files
+    for p in lww_files | snap_files:
+        assert "__op_class" not in pq.read_schema(p).names, p

@@ -135,3 +135,24 @@ def test_where_ops_accept_conjunct_lists(spark, tmp_path):
     r2 = t.delete_where([("conv_id", "=", conv), ("turn_idx", ">=", 2)])
     assert r2["n_delete"] == r1["n_update"]
     assert t.read().count() == before - r2["n_delete"]
+
+
+def test_rebucket_records_file_stats(spark, tmp_path):
+    """rebucket() records footer stats for every file it writes, so scan()
+    keeps pruning on ts right after it instead of waiting for a later
+    compaction."""
+    t, _ = _table(spark, tmp_path)
+    t.rebucket(16)
+    man = t._manifest()
+    paths = [p for fl in man["files"].values() for p in fl]
+    st = man.get("_file_stats") or {}
+    assert paths and all("ts" in st.get(p, {}) for p in paths)
+    got = t.scan([("ts", ">=", datetime.datetime(2099, 1, 1))])
+    assert got.count() == 0 and got.inputFiles() == []
+    # the latest ts in the table: only the files holding it are read
+    cut = datetime.datetime(1970, 1, 1) + datetime.timedelta(
+        microseconds=max(st[p]["ts"][1] for p in paths))
+    got = t.scan([("ts", ">=", cut)])
+    exp = t.read().filter(F.col("ts") >= F.lit(cut))
+    assert got.count() == exp.count() > 0
+    assert len(got.inputFiles()) < _total_files(man)

@@ -1173,7 +1173,7 @@ def test_observe_cache_overflow_keeps_schema_entries(spark, tmp_path,
     assert merge_keys, "setup: the bootstrap merge caches its selection"
     frame = spark.range(1)
     for i in range(300):
-        table._observe_bucket_counts(frame, f"o{i}", [i], {"n": "id = {b}"})
+        table._observe_buckets(frame, f"o{i}", [i], {"n": "id = {b}"})
     assert all(k in table._expr_cache for k in merge_keys)
     n_obs = sum(k[0] == "observe" for k in table._expr_cache)
     assert 0 < n_obs <= 257

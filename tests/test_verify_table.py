@@ -104,3 +104,43 @@ def test_pre_rebucket_snapshot_audits_clean(spark, tmp_path):
     res = t.verify_table(version=v_old, check_counts=True)
     assert res["ok"], res["issues"]
     assert res["version"] == v_old
+
+
+def _forge(spark, path, edit):
+    """Rewrite the current manifest on disk with ``edit(man)`` applied and
+    audit it through a fresh handle."""
+    t = SnapshotTable(spark, path, MODEL)
+    mpath = os.path.join(path, "manifests", f"v{t.current_version()}.json")
+    man = json.load(open(mpath))
+    edit(man)
+    json.dump(man, open(mpath, "w"))
+    return SnapshotTable(spark, path, MODEL).verify_table(check_counts=True)
+
+
+def test_live_counts_checked_against_a_scan(spark, tmp_path):
+    """check_counts compares bucket_live_rows with a live-row scan (a
+    tombstone makes it differ from bucket_rows), and a published
+    bucket_live_rows that leaves out a bucket holding files is an error."""
+    path = str(tmp_path / "t")
+    t = _boot(spark, path)
+    t.merge(spark.createDataFrame([(1, None, None, "delete")],
+                                  "k int, v string, ts timestamp, op string"),
+            checkpoint_id="c", batch_id=1)
+    man = t._manifest()
+    assert sum(man["bucket_live_rows"].values()) == 199
+    assert sum(man["bucket_rows"].values()) == 200
+    assert t.verify_table(check_counts=True)["ok"]
+
+    def bump(m):
+        m["bucket_live_rows"][next(iter(m["bucket_live_rows"]))] += 3
+
+    res = _forge(spark, path, bump)
+    assert not res["ok"]
+    assert _codes(res) == {"bucket_live_rows_mismatch"}
+
+    def drop(m):  # the entry bump() forged
+        m["bucket_live_rows"].pop(next(iter(m["bucket_live_rows"])))
+
+    res = _forge(spark, path, drop)
+    assert not res["ok"]
+    assert _codes(res) == {"bucket_live_rows_missing"}
