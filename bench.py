@@ -31,44 +31,8 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 from pyspark.sql import functions as F
-
-
-def _stage_rows(spark, min_stage: int, min_run_ms: int = 1000) -> list[dict]:
-    """Completed-stage metrics (run/GC seconds, shuffle bytes, task skew)
-    for stages with id >= min_stage — the per-rep slice of the app's
-    accumulating stage list. Same REST endpoint as scripts/stage_stats.py."""
-    try:
-        app = spark.sparkContext.applicationId
-        port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-        url = (f"http://localhost:{port}/api/v1/applications/{app}/stages"
-               f"?status=complete&withSummaries=true")
-        stages = json.load(urllib.request.urlopen(url, timeout=30))
-    except Exception:  # UI disabled / endpoint unavailable: evidence-only path
-        return []
-    rows = []
-    for s in stages:
-        if s["stageId"] < min_stage or s["executorRunTime"] < min_run_ms:
-            continue
-        dist = s.get("taskMetricsDistributions") or {}
-        q = dist.get("executorRunTime") or []
-        med, mx = (q[2] / 1000, q[4] / 1000) if len(q) == 5 else (None, None)
-        rows.append({
-            "stage": s["stageId"],
-            "tasks": s["numCompleteTasks"],
-            "run_s": round(s["executorRunTime"] / 1000, 1),
-            "gc_s": round(s.get("jvmGcTime", 0) / 1000, 1),
-            "shuffle_write_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
-            "shuffle_read_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-            "task_median_s": round(med, 2) if med is not None else None,
-            "task_max_s": round(mx, 2) if mx is not None else None,
-            "skew_max_over_median": (round(mx / med, 2)
-                                     if med and mx is not None else None),
-        })
-    rows.sort(key=lambda r: -r["run_s"])
-    return rows
 
 
 def _loadavg() -> float:
@@ -116,6 +80,7 @@ def main() -> None:
     from diffsync_spark.model import TRANSCRIPT_MODEL
     from diffsync_spark.plans.threeway import patch_snapshot
     from diffsync_spark.sinks.table import SnapshotTable
+    from diffsync_spark.stage_metrics import max_stage_id, stage_rows
     from diffsync_spark.streaming.replay import replay_batches
     import __spark_entry__ as entry_mod
 
@@ -170,16 +135,6 @@ def main() -> None:
     reps: list[dict] = []
     best_stages: list[dict] = []
 
-    def _max_stage_id() -> int:
-        try:
-            app = spark.sparkContext.applicationId
-            port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-            url = f"http://localhost:{port}/api/v1/applications/{app}/stages"
-            stages = json.load(urllib.request.urlopen(url, timeout=30))
-            return max((s["stageId"] for s in stages), default=-1) + 1
-        except Exception:
-            return 0
-
     for rep in range(n_reps):
         tbl_dir = tempfile.mkdtemp(prefix=f"bench_tbl_{rep}_", dir=base)
         shutil.rmtree(tbl_dir)
@@ -191,12 +146,12 @@ def main() -> None:
             src_df.withColumn("op", F.lit("insert")), mode="force",
             checkpoint_id="boot", batch_id=0,
         )
-        first_stage = _max_stage_id()
+        first_stage = max_stage_id(spark)
         load0 = _loadavg()
         t0 = time.perf_counter()
         replay_batches(table, chg_df, n_batches=n_batches, checkpoint_id="bench")
         dt = time.perf_counter() - t0
-        stages = _stage_rows(spark, first_stage)
+        stages = stage_rows(spark, first_stage, min_run_ms=1000)
         rep_row = {
             "sec": round(dt, 3),
             "events_per_sec": round(total_events / dt, 1),

@@ -13,49 +13,14 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 from pyspark.sql import functions as F
+
+from diffsync_spark.stage_metrics import max_stage_id, stage_rows
 
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
-
-
-def stage_rows(spark, min_stage: int, min_run_ms: int = 200) -> list[dict]:
-    try:
-        app = spark.sparkContext.applicationId
-        port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-        url = (f"http://localhost:{port}/api/v1/applications/{app}/stages"
-               f"?status=complete&withSummaries=true")
-        stages = json.load(urllib.request.urlopen(url, timeout=30))
-    except Exception:
-        return []
-    rows = []
-    for s in stages:
-        if s["stageId"] < min_stage or s["executorRunTime"] < min_run_ms:
-            continue
-        rows.append({
-            "stage": s["stageId"],
-            "name": s.get("name", "")[:60],
-            "tasks": s["numCompleteTasks"],
-            "run_s": round(s["executorRunTime"] / 1000, 1),
-            "shuffle_write_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
-            "shuffle_read_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-        })
-    rows.sort(key=lambda r: -r["run_s"])
-    return rows
-
-
-def max_stage_id(spark) -> int:
-    try:
-        app = spark.sparkContext.applicationId
-        port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-        url = f"http://localhost:{port}/api/v1/applications/{app}/stages"
-        stages = json.load(urllib.request.urlopen(url, timeout=30))
-        return max((s["stageId"] for s in stages), default=-1) + 1
-    except Exception:
-        return 0
 
 
 def main() -> None:
@@ -154,7 +119,8 @@ def main() -> None:
             dt = time.perf_counter() - t0
             if dt < best:
                 best = dt
-                out["stages"][name] = stage_rows(spark, first)[:6]
+                out["stages"][name] = stage_rows(
+                    spark, first, min_run_ms=200)[:6]
         out["timings"][name] = round(best, 3)
         print(f"{name}: {best:.3f}s", flush=True)
     spark.sparkContext.setJobDescription(None)

@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import builtins
 import dataclasses
+import functools
 import json
 import os
 import re
@@ -79,11 +80,11 @@ def _prof(label: str, t0: float) -> None:
     to driver-side phases. Every bucket rewrite (copy-on-write merge,
     snapshot sync, compact, rebucket) reports the shared step's
     observe_build, write_job and footer_pass, then commit (rebucket
-    commits its own manifest, unlabelled); a copy-on-write merge adds
-    pre_stats, stats_pass, stored_frame_build and mid_to_write_commit
-    before it, a snapshot sync snapshot_write_job, quarantine_write and
-    discard_unchanged after it; a merge-on-read append reports
-    append_write_job, quarantine_write, footer_pass, commit; merge()
+    commits unlabelled); a copy-on-write merge adds pre_stats, stats_pass,
+    stored_frame_build and mid_to_write_commit before it, a snapshot sync
+    snapshot_write_job, quarantine_write and discard_unchanged after it; a
+    merge-on-read append goes through the same step (observe_build,
+    write_job, footer_pass), then quarantine_write and commit; merge()
     reports merge_total."""
     if os.environ.get("DIFFSYNC_PROFILE_MERGE"):
         import sys as _sys
@@ -125,6 +126,154 @@ def _with_field_ids(schema: T.StructType, start: int = 1) -> T.StructType:
         md[_FIELD_ID_KEY] = start + i
         fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
     return T.StructType(fields)
+
+
+def _next_field_id(man: dict, public: T.StructType) -> int:
+    """The id a newly added column gets: one past the manifest's monotone
+    ``last_field_id`` watermark, so a column re-added after a drop never
+    reuses the dropped id (old files' values cannot resurrect)."""
+    return int(man.get("last_field_id")
+               or max((f.metadata or {}).get(_FIELD_ID_KEY, 0)
+                      for f in public.fields)) + 1
+
+
+def _stat_scalar(v):
+    """JSON-safe, unit-normalized stat value: timestamps -> epoch micros,
+    dates -> epoch days, numerics as-is, anything else -> None (no pruning
+    on that column)."""
+    import datetime as _dt
+
+    if isinstance(v, bool) or v is None:
+        return None
+    if isinstance(v, (int, float)):
+        return v
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        return int((v - _dt.datetime(1970, 1, 1)).total_seconds()
+                   * 1_000_000)
+    if isinstance(v, _dt.date):
+        return (v - _dt.date(1970, 1, 1)).days
+    return None
+
+
+def _footer_stats(md, want: set) -> dict[str, list]:
+    """Per-file ``[min, max]`` of the ``want`` columns (matched on the full
+    dotted path, so a nested ``meta.seq`` is never ``seq``) from one parquet
+    footer's row-group statistics, as :func:`_stat_scalar` values. Empty row
+    groups are skipped; a column with any other row group lacking usable
+    stats is left out. The one footer min/max reader: manifest file stats
+    (:meth:`SnapshotTable._layer_footers`) and the replay's seq bounds."""
+    agg: dict[str, Any] = {}
+    for rg in range(md.num_row_groups):
+        row = md.row_group(rg)
+        if row.num_rows == 0:
+            continue
+        for ci in range(row.num_columns):
+            col = row.column(ci)
+            name = col.path_in_schema
+            if name not in want or agg.get(name) is False:
+                continue
+            st = col.statistics
+            usable = st is not None and st.has_min_max
+            lo = _stat_scalar(st.min) if usable else None
+            hi = _stat_scalar(st.max) if usable else None
+            if lo is None or hi is None:
+                agg[name] = False  # one unknown row group poisons
+                continue
+            cur = agg.get(name)
+            agg[name] = ([min(cur[0], lo), max(cur[1], hi)]
+                         if cur else [lo, hi])
+    return {c: v for c, v in agg.items() if v}
+
+
+def _retrying(attempt, max_retries: int):
+    """The one optimistic-concurrency loop of every commit: run
+    ``attempt(n)``, ``n`` the commit races lost so far, until it returns.
+    Each attempt re-reads the current snapshot itself; after
+    ``max_retries`` lost retries the last :class:`CommitConflict`
+    propagates."""
+    n = 0
+    while True:
+        try:
+            return attempt(n)
+        except CommitConflict:
+            if n >= max_retries:
+                raise
+            n += 1
+
+
+# durable table state: a commit carries these from its base snapshot unless
+# it replaces them. Every other field describes the one commit that wrote it
+# (ids, schema, lineage, quarantine_dir; only publish() sets published_from)
+_CARRIED = ("n_buckets", "write_mode", "bloom_cols", "model", "checkpoints",
+            "files", "_files_src", "_file_stats", "deltas", "bucket_rows",
+            "bucket_splits", "bucket_live_rows")
+
+
+def _next_manifest(
+    base: dict,
+    version: int,
+    snapshot_id: str,
+    schema: T.StructType,
+    checkpoint_id: str | None = None,
+    batch_id: int | None = None,
+    lineage: Sequence[dict] = (),
+    quarantine_dir: str | None = None,
+    new_stats: dict[str, dict[str, list]] | None = None,
+    **replace: Any,
+) -> dict:
+    """The manifest of a commit on top of ``base``: the one place that
+    knows which fields carry over (every data and DDL commit builds here;
+    ``create`` has no base and ``publish`` takes the branch head's content).
+
+    ``replace`` overrides :data:`_CARRIED` fields; a ``None`` value drops
+    the field, and an empty ``deltas`` list is left out. ``last_field_id``
+    is the larger of the base's watermark and ``schema``'s field ids.
+    ``batch_id`` advances ``checkpoint_id``'s exactly-once watermark, and
+    ``new_stats`` adds the per-file stats of the files this commit wrote
+    (only referenced files' stats serialize, see
+    :meth:`SnapshotTable._dehydrate`)."""
+    man = {
+        "version": version,
+        "snapshot_id": snapshot_id,
+        "parent_snapshot_id": base["snapshot_id"],
+        "schema": schema.json(),
+        "last_field_id": max(
+            int(base.get("last_field_id") or 0),
+            max(((f.metadata or {}).get(_FIELD_ID_KEY, 0)
+                 for f in schema.fields), default=0),
+        ) or None,
+        "lineage": list(lineage),
+        "quarantine_dir": quarantine_dir,
+    }
+    for k in _CARRIED:
+        v = replace[k] if k in replace else base.get(k)
+        if v is not None and (v or k != "deltas"):
+            man[k] = v
+    if batch_id is not None:
+        man["checkpoints"] = {**man["checkpoints"], checkpoint_id: batch_id}
+    if new_stats:
+        man["_file_stats"] = {**(man.get("_file_stats") or {}), **new_stats}
+    return man
+
+
+def _lineage_row(checkpoint_id: str | None, batch_id: int | None,
+                 snapshot_id: str, partition: int, **counts: Any) -> dict:
+    """One lineage record of a commit: a bucket's counts (``partition`` is
+    the bucket) or its quarantined rows (``partition`` -1); counts not
+    given are 0."""
+    return {
+        "checkpoint_id": checkpoint_id,
+        "batch_id": batch_id,
+        "snapshot_id": snapshot_id,
+        "partition": partition,
+        "n_create": 0, "n_update": 0, "n_delete": 0, "n_noop": 0,
+        "n_quarantined": 0,
+        **counts,
+    }
+
+
 UPSERT_OPS = ("insert", "update", "create", "upsert")
 DELETE_OP = "delete"
 # per-row lineage classes of a copy-on-write rewrite (the __op_class column);
@@ -406,26 +555,6 @@ class SnapshotTable:
         return [f.name for f in public.fields
                 if f.name in cand and isinstance(f.dataType, self._STATS_TYPES)]
 
-    @staticmethod
-    def _stat_scalar(v):
-        """JSON-safe, unit-normalized stat value: timestamps -> epoch
-        micros, dates -> epoch days, numerics as-is, anything else -> None
-        (no pruning on that column)."""
-        import datetime as _dt
-
-        if isinstance(v, bool) or v is None:
-            return None
-        if isinstance(v, (int, float)):
-            return v
-        if isinstance(v, _dt.datetime):
-            if v.tzinfo is not None:
-                v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return int((v - _dt.datetime(1970, 1, 1)).total_seconds()
-                       * 1_000_000)
-        if isinstance(v, _dt.date):
-            return (v - _dt.date(1970, 1, 1)).days
-        return None
-
     def _write_files(self, df: DataFrame, man: dict, data_dir: str) -> None:
         """The one physical write: dynamic-partition parquet under
         ``data_dir``. Tables created with ``bloom_cols`` get NATIVE parquet
@@ -446,31 +575,6 @@ class SnapshotTable:
                 .option(f"parquet.bloom.filter.expected.ndv#{c}", "25000")
             )
         w.partitionBy(BUCKET, SLOT).parquet(data_dir)
-
-    def _footer_stats(self, md, want: set) -> dict[str, list]:
-        """Per-file ``[min, max]`` of the ``want`` columns from one parquet
-        footer's row-group statistics (a column with any row group lacking
-        usable stats is left out)."""
-        agg: dict[str, Any] = {}
-        for rg in range(md.num_row_groups):
-            row = md.row_group(rg)
-            for ci in range(row.num_columns):
-                col = row.column(ci)
-                name = col.path_in_schema
-                if name not in want or agg.get(name) is False:
-                    continue
-                st = col.statistics
-                lo = self._stat_scalar(st.min) if (
-                    st is not None and st.has_min_max) else None
-                hi = self._stat_scalar(st.max) if (
-                    st is not None and st.has_min_max) else None
-                if lo is None or hi is None:
-                    agg[name] = False  # one unknown row group poisons
-                    continue
-                cur = agg.get(name)
-                agg[name] = ([min(cur[0], lo), max(cur[1], hi)]
-                             if cur else [lo, hi])
-        return {c: v for c, v in agg.items() if v}
 
     def _layer_footers(
         self, data_dir: str, cols: list[str]
@@ -510,7 +614,7 @@ class SnapshotTable:
                     continue
                 if n is not None:
                     n += md.num_rows
-                st = self._footer_stats(md, want)
+                st = _footer_stats(md, want)
                 if st:
                     stats[p] = st
             if n is not None:
@@ -1079,7 +1183,7 @@ class SnapshotTable:
         if set(bucket_src) <= set(eq):
             routed = {self._route_key(man, public, eq)[0]}
         stats = man.get("_file_stats") or {}
-        bounds = [(c, op, self._stat_scalar(v)) for c, op, v in predicates]
+        bounds = [(c, op, _stat_scalar(v)) for c, op, v in predicates]
 
         def may_match(p: str) -> bool:
             st = stats.get(p)
@@ -1460,8 +1564,7 @@ class SnapshotTable:
         serialize on manifest I/O alone. The result's ``metadata_rebases``
         counts these; ``commit_retries`` counts full recomputes.
         """
-        attempt = 0
-        while True:
+        def attempt(n: int) -> dict[str, Any]:
             man = self._manifest()
             committed = man["checkpoints"].get(checkpoint_id, -1)
             if batch_id is not None and batch_id <= committed:
@@ -1470,17 +1573,14 @@ class SnapshotTable:
                     "reason": f"batch {batch_id} <= committed {committed}",
                     "snapshot_id": man["snapshot_id"],
                 }
-            try:
-                _t0 = time.perf_counter()
-                result = self._merge_attempt(batch, checkpoint_id, batch_id,
-                                             mode, man, expectations, flags)
-                _prof("merge_total", _t0)
-                result["commit_retries"] = attempt
-                return result
-            except CommitConflict:
-                attempt += 1
-                if attempt > max_commit_retries:
-                    raise
+            _t0 = time.perf_counter()
+            result = self._merge_attempt(batch, checkpoint_id, batch_id,
+                                         mode, man, expectations, flags)
+            _prof("merge_total", _t0)
+            result["commit_retries"] = n
+            return result
+
+        return _retrying(attempt, max_commit_retries)
 
     def _merge_attempt(
         self,
@@ -1595,7 +1695,7 @@ class SnapshotTable:
             return self._append_commit(
                 batch, man, new_version, snapshot_id, checkpoint_id, batch_id,
                 self._evolve_schema(public, batch.schema, man),
-                exp_fails, exp_reason, _t_att0,
+                exp_fails, exp_reason,
             )
 
         # ---- one stats pass: quarantine count + touched buckets (a single
@@ -1825,9 +1925,7 @@ class SnapshotTable:
             # evolution-added columns get FRESH ids past the monotone
             # counter — a column re-added after drop_column never reuses
             # the dropped id, so old files' values cannot resurrect
-            next_id = int(man.get("last_field_id")
-                          or max((f.metadata or {}).get(_FIELD_ID_KEY, 0)
-                                 for f in public.fields)) + 1
+            next_id = _next_field_id(man, public)
             if next_id + len(new_fields) - 1 > _MAX_USER_FIELD_ID:
                 raise DiffSyncSparkError("field-id space exhausted")
             new_fields = [
@@ -2159,15 +2257,18 @@ class SnapshotTable:
         name: str,
         stat_cols: list[str] | None = None,
     ) -> _Written:
-        """The one write-and-account step of every bucket rewrite: write
-        ``out``, a frame the caller already fanned out over ``buckets``
-        (:meth:`_fanout_frame`, :meth:`_zorder_fanout` or rebucket's uniform
-        fan-out), under ``data_dir`` and account for it.
+        """The one write-and-account step of every writer: write ``out``,
+        a frame the caller already fanned out over ``buckets``
+        (:meth:`_fanout_frame`, :meth:`_zorder_fanout`, rebucket's uniform
+        fan-out or the merge-on-read append's LWW window), under
+        ``data_dir`` and account for it.
 
         The write job observes per bucket only what a footer cannot give
         (:meth:`_observe_buckets`): live (non-tombstone) rows and, when the
         frame carries a merge's ``__op_class``, the create/update/delete
-        counts. ``__op_class`` itself is dropped before the write. Files,
+        counts. ``__op_class`` itself is dropped before the write. An empty
+        ``buckets`` list observes nothing (the append: a delta layer's live
+        rows are unknown by design), so ``live`` comes back empty. Files,
         per-bucket row counts and per-file ``[min, max]`` of ``stat_cols``
         (default :meth:`_stat_cols`) then come from one footer pass
         (:meth:`_layer_footers`)."""
@@ -2231,31 +2332,20 @@ class SnapshotTable:
                      if int(b) in touched_set}
         new_stats = {p: written.stats[p] for fl in new_files.values()
                      for p in fl if p in written.stats}
+        row = functools.partial(_lineage_row, checkpoint_id, batch_id,
+                                snapshot_id)
         lineage_rows = []
         if written.ops is not None:
             for bk in touched:
                 ops = written.ops[bk]
                 rows = written.rows.get(bk)
-                lineage_rows.append({
-                    "checkpoint_id": checkpoint_id,
-                    "batch_id": batch_id,
-                    "snapshot_id": snapshot_id,
-                    "partition": bk,
-                    **{f"n_{oc}": n for oc, n in ops.items()},
+                lineage_rows.append(row(
+                    bk, **{f"n_{oc}": n for oc, n in ops.items()},
                     # unknown when a footer of the bucket was unreadable
-                    "n_noop": (None if rows is None
-                               else rows - sum(ops.values())),
-                    "n_quarantined": 0,
-                })
+                    n_noop=None if rows is None else rows - sum(ops.values()),
+                ))
         if n_quarantined:
-            lineage_rows.append({
-                "checkpoint_id": checkpoint_id,
-                "batch_id": batch_id,
-                "snapshot_id": snapshot_id,
-                "partition": -1,
-                "n_create": 0, "n_update": 0, "n_delete": 0, "n_noop": 0,
-                "n_quarantined": n_quarantined,
-            })
+            lineage_rows.append(row(-1, n_quarantined=n_quarantined))
         # the quarantine dir was written under the ORIGINAL attempt version;
         # its recorded path must not be re-derived from a rebased version
         quarantine_dir = (
@@ -2274,9 +2364,6 @@ class SnapshotTable:
                         if int(b) not in touched_set}
 
             files = {**carried("files"), **new_files}
-            checkpoints = dict(base["checkpoints"])
-            if batch_id is not None:
-                checkpoints[checkpoint_id] = batch_id
             bucket_rows = carried("bucket_rows")
             bucket_rows.update((str(b), n) for b, n in written.rows.items()
                                if str(b) in new_files)
@@ -2310,37 +2397,12 @@ class SnapshotTable:
                     b: written.live[int(b)] if b in new_files else parent_live[b]
                     for b in files
                 }
-            return {
-                "version": version,
-                "snapshot_id": snapshot_id,
-                "parent_snapshot_id": base["snapshot_id"],
-                "schema": evolved.json(),
-                "last_field_id": max(
-                    int(base.get("last_field_id") or 0),
-                    max(((f.metadata or {}).get(_FIELD_ID_KEY, 0)
-                         for f in evolved.fields), default=0),
-                ) or None,
-                "n_buckets": base["n_buckets"],
-                "files": files,
-                "_files_src": base.get("_files_src", {}),
-                "_file_stats": {
-                    **(base.get("_file_stats") or {}),
-                    **new_stats,
-                },
-                **({"deltas": deltas} if deltas else {}),
-                **({"write_mode": base["write_mode"]}
-                   if "write_mode" in base else {}),
-                **({"bloom_cols": base["bloom_cols"]}
-                   if "bloom_cols" in base else {}),
-                **({"model": base["model"]} if "model" in base else {}),
-                "checkpoints": checkpoints,
-                "lineage": lineage_rows,
-                "bucket_rows": bucket_rows,
-                "bucket_splits": bucket_splits,
-                **({"bucket_live_rows": live_rows}
-                   if live_rows is not None else {}),
-                "quarantine_dir": quarantine_dir,
-            }
+            return _next_manifest(
+                base, version, snapshot_id, evolved, checkpoint_id, batch_id,
+                lineage_rows, quarantine_dir, new_stats, files=files,
+                deltas=deltas, bucket_rows=bucket_rows,
+                bucket_splits=bucket_splits, bucket_live_rows=live_rows,
+            )
 
         _t0 = time.perf_counter()
         manifest, n_rebases = self._commit_with_rebase(
@@ -2601,7 +2663,6 @@ class SnapshotTable:
         evolved: T.StructType,
         exp_fails,
         exp_reason,
-        t_start: float,
     ) -> dict[str, Any]:
         """Commit one merge-on-read DELTA LAYER: the batch's LWW winners,
         written with the same bucket/slot fan-out the base uses (so lookups
@@ -2620,9 +2681,11 @@ class SnapshotTable:
         plan comes from the manifest's ``bucket_rows`` (the :meth:`compact`
         rule); quarantine and input counts are an ``Observation`` on the
         write, and the quarantine rows a follow-up job written before the
-        commit. Touched buckets and row counts come from the written
-        layer's footers (:meth:`_layer_footers`). A batch with no valid
-        rows commits its checkpoint and quarantine lineage, and no layer.
+        commit. The layer is written through the shared write step
+        (:meth:`_write_buckets`, observing no bucket): touched buckets, row
+        counts and file stats come from its footer pass. A batch with no
+        valid rows commits its checkpoint and quarantine lineage, and no
+        layer.
 
         Live row counts for the layered buckets become UNKNOWN (computing a
         layer's net effect is exactly the read this mode defers), so
@@ -2631,7 +2694,6 @@ class SnapshotTable:
         from pyspark.sql import Observation
 
         ids = list(self.model.identifiers)
-        data_dir = self._attempt_dir(new_version, snapshot_id)
         splits = self._plan_splits(
             {int(b): n for b, n in man.get("bucket_rows", {}).items()}
         )
@@ -2687,56 +2749,35 @@ class SnapshotTable:
             F.lit(new_version).cast("long").alias(META_COMMIT),
             F.col(BUCKET), F.col(SLOT),
         ).sortWithinPartitions(BUCKET, SLOT, *ids)
-        self._write_files(self._tag_field_ids(delta, evolved), man, data_dir)
+        written = self._write_buckets(
+            delta, man, self._attempt_dir(new_version, snapshot_id), [],
+            evolved, f"append_v{new_version}")
         m = obs.get
         n_quarantined = m["n_bad"]
-        _prof("append_write_job", t_start)
 
         _t0 = time.perf_counter()
         if n_quarantined:
             self._write_quarantine(batch, exp_reason, new_version, snapshot_id)
         _prof("quarantine_write", _t0)
 
-        _t0 = time.perf_counter()
-        layer_files, per_bucket, new_stats = self._layer_footers(
-            data_dir, self._stat_cols(evolved))
-        touched = sorted(int(b) for b in layer_files)
-        _prof("footer_pass", _t0)
-
-        lineage_rows = [
-            {
-                "checkpoint_id": checkpoint_id,
-                "batch_id": batch_id,
-                "snapshot_id": snapshot_id,
-                "partition": bk,
-                # create/update/delete cannot be classified without reading
-                # the base — the whole point of this path; the applied row
-                # count is recorded honestly as n_append instead
-                "n_create": 0, "n_update": 0, "n_delete": 0, "n_noop": 0,
-                "n_quarantined": 0,
-                # None when a footer of the bucket was unreadable
-                "n_append": per_bucket.get(bk),
-            }
-            for bk in touched
-        ]
+        touched = sorted(int(b) for b in written.files)
+        row = functools.partial(_lineage_row, checkpoint_id, batch_id,
+                                snapshot_id)
+        # create/update/delete cannot be classified without reading the
+        # base — the whole point of this path; the applied row count is
+        # recorded honestly as n_append (None when a footer was unreadable)
+        lineage_rows = [row(bk, n_append=written.rows.get(bk))
+                        for bk in touched]
         if n_quarantined:
-            lineage_rows.append({
-                "checkpoint_id": checkpoint_id,
-                "batch_id": batch_id,
-                "snapshot_id": snapshot_id,
-                "partition": -1,
-                "n_create": 0, "n_update": 0, "n_delete": 0, "n_noop": 0,
-                "n_quarantined": n_quarantined,
-                "n_append": 0,
-            })
+            lineage_rows.append(row(-1, n_quarantined=n_quarantined,
+                                    n_append=0))
         quarantine_dir = (
             self._quarantine_dir(new_version, snapshot_id)
             if n_quarantined else None
         )
 
-        # manifest as a pure function of the base snapshot: a layer's
-        # CONTENT never depends on the snapshot it lands on, so after a
-        # lost race _commit_with_rebase re-invokes this against the
+        # a layer's CONTENT never depends on the snapshot it lands on, so
+        # after a lost race _commit_with_rebase re-invokes this against the
         # winner's manifest (metadata-only rebase) when the winner left
         # this layer's buckets alone. The layer record's "commit" takes
         # the rebased version (when it became visible); the files'
@@ -2746,53 +2787,24 @@ class SnapshotTable:
         # our manifest version), so the fold's total order is unchanged.
         def build(base: dict, version: int) -> dict:
             deltas = list(base.get("deltas") or [])
-            if layer_files:
+            if written.files:
                 deltas.append({
                     "commit": version,
-                    "files": layer_files,
-                    "splits": {b: splits.get(int(b), 1) for b in layer_files},
+                    "files": written.files,
+                    "splits": {b: splits.get(int(b), 1) for b in written.files},
                 })
-            checkpoints = dict(base["checkpoints"])
-            if batch_id is not None:
-                checkpoints[checkpoint_id] = batch_id
             bucket_rows = dict(base.get("bucket_rows", {}))
-            for bk, n in per_bucket.items():
+            for bk, n in written.rows.items():
                 bucket_rows[str(bk)] = bucket_rows.get(str(bk), 0) + n
-            return {
-                "version": version,
-                "snapshot_id": snapshot_id,
-                "parent_snapshot_id": base["snapshot_id"],
-                "schema": evolved.json(),
-                "last_field_id": max(
-                    int(base.get("last_field_id") or 0),
-                    max(((f.metadata or {}).get(_FIELD_ID_KEY, 0)
-                         for f in evolved.fields), default=0),
-                ) or None,
-                "n_buckets": base["n_buckets"],
-                "files": base["files"],
-                "_files_src": base.get("_files_src", {}),
-                "_file_stats": {
-                    **(base.get("_file_stats") or {}),
-                    **new_stats,
-                },
-                **({"deltas": deltas} if deltas else {}),
-                "write_mode": "mor",
-                **({"bloom_cols": base["bloom_cols"]}
-                   if "bloom_cols" in base else {}),
-                **({"model": base["model"]} if "model" in base else {}),
-                "checkpoints": checkpoints,
-                "lineage": lineage_rows,
-                "bucket_rows": bucket_rows,
-                "bucket_splits": base.get("bucket_splits", {}),
-                # bucket_live_rows intentionally omitted once layers exist —
-                # see docstring; compact() re-establishes it
-                **(
-                    {"bucket_live_rows": base["bucket_live_rows"]}
-                    if not touched and base.get("bucket_live_rows") is not None
-                    else {}
-                ),
-                "quarantine_dir": quarantine_dir,
-            }
+            return _next_manifest(
+                base, version, snapshot_id, evolved, checkpoint_id, batch_id,
+                lineage_rows, quarantine_dir, written.stats, deltas=deltas,
+                bucket_rows=bucket_rows,
+                # a layered bucket's live rows are unknown until compact()
+                # folds it and re-observes (see docstring)
+                bucket_live_rows=(None if touched
+                                  else base.get("bucket_live_rows")),
+            )
 
         _t0 = time.perf_counter()
         manifest, n_rebases = self._commit_with_rebase(
@@ -2808,7 +2820,7 @@ class SnapshotTable:
             # valid batch rows that entered the MERGE (post-quarantine,
             # pre-LWW-dedup) — the denominator for pre-filter reduction
             "n_input": m["n_input"],
-            "n_append": sum(per_bucket.values()),
+            "n_append": sum(written.rows.values()),
             "n_quarantined": n_quarantined,
             "n_expectation_failed": m["n_exp"] if exp_fails is not None else 0,
             "n_delta_layers": len(manifest.get("deltas") or []),
@@ -2838,16 +2850,10 @@ class SnapshotTable:
         force-overwriting it with rows computed from a stale snapshot
         (merge()'s internal rebase replays the same batch, which is
         convergent for LWW but NOT for authoritative force batches)."""
-        last_err: Exception | None = None
-        for _ in range(max_commit_retries + 1):
-            try:
-                return self.merge(
-                    build_batch(), checkpoint_id=checkpoint_id,
-                    batch_id=batch_id, mode="force", max_commit_retries=0,
-                )
-            except CommitConflict as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+        return _retrying(lambda _: self.merge(
+            build_batch(), checkpoint_id=checkpoint_id, batch_id=batch_id,
+            mode="force", max_commit_retries=0,
+        ), max_commit_retries)
 
     def _where_frame(self, predicate) -> DataFrame:
         """The matched-rows read behind ``update_where``/``delete_where``.
@@ -3483,17 +3489,10 @@ class SnapshotTable:
         ``{"skipped": True}``. Loses any commit race gracefully: rebase =
         re-read the (new) current snapshot and re-select, bounded by
         ``max_commit_retries``."""
-        attempt = 0
-        while True:
-            try:
-                return self._compact_attempt(min_files, buckets,
-                                             purge_tombstones_older_than,
-                                             zorder,
-                                             zorder_files_per_bucket)
-            except CommitConflict:
-                attempt += 1
-                if attempt > max_commit_retries:
-                    raise
+        return _retrying(lambda _: self._compact_attempt(
+            min_files, buckets, purge_tombstones_older_than, zorder,
+            zorder_files_per_bucket,
+        ), max_commit_retries)
 
     def _compact_attempt(
         self,
@@ -3612,14 +3611,8 @@ class SnapshotTable:
         full pair of snapshots and still returns only real row changes.
 
         Loses a commit race like compact: re-read, re-select, retry."""
-        attempt = 0
-        while True:
-            try:
-                return self._rebucket_attempt(n_buckets)
-            except CommitConflict:
-                attempt += 1
-                if attempt > max_commit_retries:
-                    raise
+        return _retrying(lambda _: self._rebucket_attempt(n_buckets),
+                         max_commit_retries)
 
     def _rebucket_attempt(self, n_buckets: int) -> dict[str, Any]:
         if n_buckets < 1:
@@ -3652,33 +3645,20 @@ class SnapshotTable:
             )
             .sortWithinPartitions(BUCKET, SLOT, *ids)
         )
-        # the new numbering cannot rebase onto a winner, so this keeps its
-        # own manifest; the shared step gives it counts and file stats
+        # the new numbering cannot rebase onto a winner, so this commits
+        # directly: every bucket is new and the layers are folded in
         written = self._write_buckets(
             out, man, self._attempt_dir(new_version, snapshot_id),
             list(range(n_buckets)), public, f"rebucket_v{new_version}",
         )
         files = written.files
-        manifest = {
-            "version": new_version,
-            "snapshot_id": snapshot_id,
-            "parent_snapshot_id": man["snapshot_id"],
-            "schema": man["schema"],
-            "last_field_id": man.get("last_field_id"),
-            "n_buckets": n_buckets,
-            "files": files,
-            "_file_stats": written.stats,
-            **({"write_mode": man["write_mode"]} if "write_mode" in man else {}),
-            **({"bloom_cols": man["bloom_cols"]} if "bloom_cols" in man else {}),
-            **({"model": man["model"]} if "model" in man else {}),
-            "checkpoints": man["checkpoints"],
-            "lineage": [],
-            "bucket_rows": {str(b): n for b, n in written.rows.items()},
-            "bucket_splits": {b: uniform for b in files},
-            "bucket_live_rows": {b: written.live[int(b)] for b in files},
-            "quarantine_dir": None,
-        }
-        self._commit(manifest, parent=man["version"])
+        self._commit(_next_manifest(
+            man, new_version, snapshot_id, public, new_stats=written.stats,
+            n_buckets=n_buckets, files=files, deltas=None,
+            bucket_rows={str(b): n for b, n in written.rows.items()},
+            bucket_splits={b: uniform for b in files},
+            bucket_live_rows={b: written.live[int(b)] for b in files},
+        ), parent=man["version"])
         return {
             "skipped": False,
             "version": new_version,
@@ -3982,32 +3962,20 @@ class SnapshotTable:
     # ------------------------------------------------------ schema evolution
     def _schema_commit(self, mutate, max_retries: int = 5) -> dict[str, Any]:
         """Metadata-only schema commit with the usual optimistic retry:
-        ``mutate(schema) -> new_schema`` runs against the freshly-read
-        manifest each attempt."""
-        last_err: Exception | None = None
-        for _ in range(max_retries + 1):
+        ``mutate(schema, manifest) -> new_schema`` runs against the
+        freshly-read manifest each attempt; everything else carries over
+        (:func:`_next_manifest`)."""
+
+        def attempt(_: int) -> dict[str, Any]:
             man = self._manifest()
             public = T.StructType.fromJson(json.loads(man["schema"]))
-            out = mutate(public, man)
-            new_schema, extra = out if isinstance(out, tuple) else (out, {})
-            manifest = {
-                **man,
-                "version": self._next_version(man),
-                "snapshot_id": uuid.uuid4().hex,
-                "parent_snapshot_id": man["snapshot_id"],
-                "schema": new_schema.json(),
-                "lineage": [],
-                "quarantine_dir": None,
-                **extra,
-            }
-            try:
-                self._commit(manifest, parent=man["version"])
-            except CommitConflict as e:
-                last_err = e
-                continue
+            manifest = _next_manifest(man, self._next_version(man),
+                                      uuid.uuid4().hex, mutate(public, man))
+            self._commit(manifest, parent=man["version"])
             return {"version": manifest["version"],
                     "snapshot_id": manifest["snapshot_id"]}
-        raise last_err  # type: ignore[misc]
+
+        return _retrying(attempt, max_retries)
 
     def add_column(self, name: str, dtype: T.DataType) -> dict[str, Any]:
         """Explicit ADD COLUMN (metadata-only; the implicit path is merge
@@ -4015,26 +3983,22 @@ class SnapshotTable:
         column reads NULL from every existing file and gets a fresh field
         id past the monotone counter."""
 
-        def mutate(public: T.StructType, man: dict):
+        def mutate(public: T.StructType, man: dict) -> T.StructType:
             if name in _RESERVED_COL_NAMES:
                 raise DiffSyncSparkError(
                     f"{name!r} is a reserved engine column name"
                 )
             if name in {f.name for f in public.fields}:
                 raise DiffSyncSparkError(f"column {name!r} already exists")
-            md, extra = None, {}
+            md = None
             if _schema_has_ids(public):
-                nid = int(man.get("last_field_id")
-                          or max((f.metadata or {}).get(_FIELD_ID_KEY, 0)
-                                 for f in public.fields)) + 1
+                nid = _next_field_id(man, public)
                 if nid > _MAX_USER_FIELD_ID:
                     raise DiffSyncSparkError("field-id space exhausted")
                 md = {_FIELD_ID_KEY: nid}
-                extra = {"last_field_id": nid}
-            schema = T.StructType(
+            return T.StructType(
                 public.fields + [T.StructField(name, dtype, True, md)]
             )
-            return schema, extra
 
         return self._schema_commit(mutate)
 
@@ -4211,8 +4175,8 @@ class SnapshotTable:
         ``skipped``."""
         if self.ref != "main":
             raise DiffSyncSparkError("publish() must run on the main handle")
-        last_err: Exception | None = None
-        for _ in range(max_retries + 1):
+
+        def attempt(_: int) -> dict[str, Any]:
             head = self.branch_version(name)
             head_man = self._manifest(head)
             main_cur = self.current_version()
@@ -4248,11 +4212,7 @@ class SnapshotTable:
             manifest["parent_snapshot_id"] = main_man["snapshot_id"]
             manifest["published_from"] = {"branch": name, "version": head}
             manifest.pop("ref", None)
-            try:
-                self._commit(manifest, parent=main_cur)
-            except CommitConflict as e:  # number taken — re-read and retry
-                last_err = e
-                continue
+            self._commit(manifest, parent=main_cur)
             if delete_branch:
                 self.delete_branch(name)
             return {
@@ -4262,7 +4222,8 @@ class SnapshotTable:
                 "branch_head": head,
                 "snapshot_id": manifest["snapshot_id"],
             }
-        raise last_err  # type: ignore[misc]
+
+        return _retrying(attempt, max_retries)
 
     def expire_snapshots(self, keep_last: int = 10) -> dict[str, Any]:
         """Drop manifests older than the newest ``keep_last`` versions and

@@ -23,7 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from diffsync_spark.metrics import warn_fallback_once
 from diffsync_spark.model import ModelSchema
-from diffsync_spark.sinks.table import SnapshotTable
+from diffsync_spark.sinks.table import SnapshotTable, _footer_stats
 
 
 def _signed_int64(col) -> bool:
@@ -44,10 +44,12 @@ def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
     never truncated like string stats; a DECIMAL or TIMESTAMP column is
     INT64 too, but its stats are not the integer seq values), and footers
     that all carry min/max (a stats-less or all-NULL row group returns
-    None → fallback). Both paths ignore NULL seq values — parquet min/max
-    exclude nulls exactly as ``F.min``/``F.max`` do. Returns None on any
-    soundness doubt. Footer I/O and decode errors, and a missing pyarrow, are
-    logged once per process (:func:`~diffsync_spark.metrics.
+    None → fallback); the stats come from the table's footer reader,
+    :func:`~diffsync_spark.sinks.table._footer_stats`. Both paths ignore
+    NULL seq values — parquet min/max exclude nulls exactly as
+    ``F.min``/``F.max`` do. Returns None on any soundness doubt. Footer
+    I/O and decode errors, and a missing pyarrow, are logged once per
+    process (:func:`~diffsync_spark.metrics.
     warn_fallback_once`); any other error propagates."""
     plan = changelog._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -85,17 +87,15 @@ def _seq_bounds_from_footers(changelog: DataFrame) -> "tuple[int, int] | None":
             )
             if idx is None or not _signed_int64(md.schema.column(idx)):
                 return None
-            for rg in range(md.num_row_groups):
-                grp = md.row_group(rg)
-                if grp.num_rows == 0:
-                    continue
-                st = grp.column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                if type(st.min) is not int or type(st.max) is not int:
-                    return None
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
+            if md.num_rows == 0:
+                continue
+            # a non-empty file whose footers leave seq out has a row group
+            # without usable stats
+            bounds = _footer_stats(md, {"seq"}).get("seq")
+            if bounds is None:
+                return None
+            lo = bounds[0] if lo is None else min(lo, bounds[0])
+            hi = bounds[1] if hi is None else max(hi, bounds[1])
     except (OSError, ValueError, pa.ArrowException) as e:
         warn_fallback_once("replay seq bounds from footers", e)
         return None

@@ -12,53 +12,12 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-
-def stage_rows(spark, min_stage: int, min_run_ms: int = 100) -> list[dict]:
-    try:
-        app = spark.sparkContext.applicationId
-        port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-        url = (f"http://localhost:{port}/api/v1/applications/{app}/stages"
-               f"?status=complete&withSummaries=true")
-        stages = json.load(urllib.request.urlopen(url, timeout=30))
-    except Exception:
-        return []
-    rows = []
-    for s in stages:
-        if s["stageId"] < min_stage or s["executorRunTime"] < min_run_ms:
-            continue
-        dist = s.get("taskMetricsDistributions") or {}
-        qq = dist.get("executorRunTime") or []
-        med, mx = (qq[2] / 1000, qq[4] / 1000) if len(qq) == 5 else (None, None)
-        rows.append({
-            "stage": s["stageId"],
-            "name": s.get("name", "")[:70],
-            "desc": (s.get("description") or "")[:50],
-            "tasks": s["numCompleteTasks"],
-            "run_s": round(s["executorRunTime"] / 1000, 1),
-            "sw_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
-            "sr_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-            "t_med": round(med, 2) if med is not None else None,
-            "t_max": round(mx, 2) if mx is not None else None,
-        })
-    rows.sort(key=lambda r: -r["run_s"])
-    return rows
-
-
-def max_stage_id(spark) -> int:
-    try:
-        app = spark.sparkContext.applicationId
-        port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-        url = f"http://localhost:{port}/api/v1/applications/{app}/stages"
-        stages = json.load(urllib.request.urlopen(url, timeout=30))
-        return max((s["stageId"] for s in stages), default=-1) + 1
-    except Exception:
-        return 0
+from diffsync_spark.stage_metrics import max_stage_id, stage_rows  # noqa: E402
 
 
 def main() -> None:
@@ -118,7 +77,7 @@ def main() -> None:
         dt = time.perf_counter() - t0
         if dt < best:
             best = dt
-            best_stages = stage_rows(spark, first)
+            best_stages = stage_rows(spark, first, min_run_ms=100)
         print(f"rep{rep}: boot={boot_s:.2f}s replay={dt:.3f}s "
               f"({total / dt:,.0f} ev/s)", flush=True)
         shutil.rmtree(tbl_dir, ignore_errors=True)

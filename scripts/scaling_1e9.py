@@ -24,11 +24,12 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RUNNER = r"""
-import json, os, shutil, sys, time, urllib.request
+import json, os, shutil, sys, time
 from pyspark.sql import functions as F
 from diffsync_spark import build_session
 from diffsync_spark.model import TRANSCRIPT_MODEL
 from diffsync_spark.sinks.table import SnapshotTable
+from diffsync_spark.stage_metrics import stage_rows
 from diffsync_spark.streaming.replay import replay_batches
 
 cpus, src_path, chg_path, n_batches, mode, local_dir = (
@@ -53,29 +54,7 @@ t0 = time.perf_counter()
 replay_batches(table, chg_df, n_batches=n_batches, checkpoint_id="s9")
 dt = time.perf_counter() - t0
 rows = table.read().count()
-app = spark.sparkContext.applicationId
-port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-stages = json.load(urllib.request.urlopen(
-    f"http://localhost:{port}/api/v1/applications/{app}/stages"
-    f"?status=complete&withSummaries=true"))
-srows = []
-for s in stages:
-    if s["executorRunTime"] < 30000:
-        continue
-    q = (s.get("taskMetricsDistributions") or {}).get("executorRunTime") or []
-    med, mx = (q[2] / 1000, q[4] / 1000) if len(q) == 5 else (None, None)
-    srows.append({
-        "stage": s["stageId"], "tasks": s["numCompleteTasks"],
-        "run_s": round(s["executorRunTime"] / 1000, 1),
-        "gc_s": round(s.get("jvmGcTime", 0) / 1000, 1),
-        "shuffle_write_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
-        "shuffle_read_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-        "task_median_s": round(med, 2) if med is not None else None,
-        "task_max_s": round(mx, 2) if mx is not None else None,
-        "skew_max_over_median": (round(mx / med, 2)
-                                 if med and mx is not None else None),
-    })
-srows.sort(key=lambda r: -r["run_s"])
+srows = stage_rows(spark, min_run_ms=30000)
 print("RESULT " + json.dumps({
     "write_mode": mode, "cpus": cpus, "events": n_events,
     "batches": n_batches, "replay_seconds": round(dt, 2),

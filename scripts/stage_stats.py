@@ -17,7 +17,6 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -26,6 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from diffsync_spark import build_session, fixtures  # noqa: E402
 from diffsync_spark.model import TRANSCRIPT_MODEL  # noqa: E402
 from diffsync_spark.sinks.table import SnapshotTable  # noqa: E402
+from diffsync_spark.stage_metrics import stage_rows  # noqa: E402
 from diffsync_spark.streaming.replay import replay_batches  # noqa: E402
 
 
@@ -59,31 +59,7 @@ def main() -> None:
     replay_batches(table, chg_df, n_batches=n_batches, checkpoint_id="stats")
     dt = time.perf_counter() - t0
 
-    app = spark.sparkContext.applicationId
-    port = spark.sparkContext.uiWebUrl.rsplit(":", 1)[1]
-    url = (f"http://localhost:{port}/api/v1/applications/{app}/stages"
-           f"?status=complete&withSummaries=true")
-    stages = json.load(urllib.request.urlopen(url))
-    rows = []
-    for s in stages:
-        if s["executorRunTime"] < 2000:
-            continue
-        dist = s.get("taskMetricsDistributions") or {}
-        q = dist.get("executorRunTime") or []
-        med, mx = (q[2] / 1000, q[4] / 1000) if len(q) == 5 else (None, None)
-        rows.append({
-            "stage": s["stageId"],
-            "tasks": s["numCompleteTasks"],
-            "run_s": round(s["executorRunTime"] / 1000, 1),
-            "gc_s": round(s.get("jvmGcTime", 0) / 1000, 1),
-            "shuffle_write_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
-            "shuffle_read_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-            "task_median_s": round(med, 2) if med is not None else None,
-            "task_max_s": round(mx, 2) if mx is not None else None,
-            "skew_max_over_median": (round(mx / med, 2)
-                                     if med and mx is not None else None),
-        })
-    rows.sort(key=lambda r: -r["run_s"])
+    rows = stage_rows(spark, min_run_ms=2000)
     print(json.dumps({
         "cpus": cpus, "events": n_events, "batches": n_batches,
         "convs": n_convs,

@@ -242,6 +242,39 @@ def test_stream_publish_in_range_raises_informatively(spark, tmp_path):
         q.awaitTermination(120)
 
 
+def test_stream_from_publish_version_skips_later_ddl(spark, tmp_path):
+    """A DDL commit after publish() is a metadata commit, not a publish:
+    it must not inherit ``published_from``, so a stream restarted from the
+    publish version (the restart point the publish error names) skips the
+    DDL and yields exactly the later layer's rows."""
+    t = _boot(spark, str(tmp_path / "t"), write_mode="mor")
+    t.create_branch("audit")
+    t1 = T0 + datetime.timedelta(hours=1)
+    t.branch("audit").merge(_chg(spark, [(7, "via-branch", t1, "update")]),
+                            checkpoint_id="bc", batch_id=0)
+    v_pub = t.publish("audit")["version"]
+    v_ddl = t.add_column("note", T.StringType())["version"]
+    assert "published_from" not in t._manifest(v_ddl)
+    t2 = T0 + datetime.timedelta(hours=2)
+    t.merge(_chg(spark, [(1, "after", t2, "update"), (2, None, t2, "delete")]),
+            checkpoint_id="c", batch_id=1)
+    v_layer = t.current_version()
+    q = (spark.readStream.format("diffsync_table")
+         .option("path", str(tmp_path / "t"))
+         .option("feed", "changes")
+         .option("startingVersion", v_pub).load()
+         .writeStream.format("parquet")
+         .option("path", str(tmp_path / "out"))
+         .trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = {(r.k, r.v, r._change_type, r._commit_version)
+            for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+    assert rows == {(1, "after", "upsert", v_layer),
+                    (2, None, "delete", v_layer)}
+
+
 def test_fold_null_seq_tie_matches_engine(spark, tmp_path):
     """On a full version tie, a NULL _seq loses to any non-null one in
     the engine's fold (_seq desc = nulls last); the external pandas fold
