@@ -71,13 +71,17 @@ from diffsync_spark.sinks.arrow_read import (
     _lww_fold_chunk,
     _read_key_rows,
 )
+from diffsync_spark.sinks import keyhash
 from diffsync_spark.sinks.fsio import LocalCommitIO
 
 def _prof(label: str, t0: float) -> None:
     """Opt-in phase timing for the write/commit paths (guide §1: measure
     first). Zero-cost unless DIFFSYNC_PROFILE_MERGE is set; prints one
     line per phase to stderr so a profiling run can attribute wall time
-    to driver-side phases. Every bucket rewrite (copy-on-write merge,
+    to driver-side phases. ``write_job`` is the write's one Spark job
+    when its inputs fit one partition; above that it also holds the
+    shuffle map stages (see ``SnapshotTable._fits_one_partition``).
+    Every bucket rewrite (copy-on-write merge,
     snapshot sync, compact, rebucket) reports the shared step's
     observe_build, write_job and footer_pass, then commit (rebucket
     commits unlabelled); a copy-on-write merge adds pre_stats, stats_pass,
@@ -1058,9 +1062,10 @@ class SnapshotTable:
 
         The window shuffles on the full natural key — high cardinality, so
         hot conversations spread across partitions and the sort runs inside
-        tiny per-key groups. Only called for buckets that actually carry
-        delta layers; delta-free buckets bypass it entirely (see
-        :meth:`read_raw`)."""
+        tiny per-key groups — unless :meth:`_stored_frame` coalesced a
+        small input to one partition, which the window needs no Exchange
+        for. Only called for buckets that actually carry delta layers;
+        delta-free buckets bypass it entirely (see :meth:`read_raw`)."""
         ids = list(self.model.identifiers)
         order = []
         if self.model.version_cols:
@@ -1081,7 +1086,10 @@ class SnapshotTable:
         evolved view — fold-aware: buckets carrying delta layers are read
         base+layers and folded to one winner per key; delta-free buckets
         stream through with no window/shuffle (at 100 TB with layers on a
-        few hot buckets, the rest of the table never shuffles on read)."""
+        few hot buckets, the rest of the table never shuffles on read).
+        A fold whose files fit one partition (:meth:`_fits_one_partition`)
+        runs on one, with no Exchange; a larger one shuffles on the
+        natural key (one Exchange)."""
         full = self._full_schema(public)
         dbk = self._delta_buckets(man, buckets)
         plain_files: list[str] = []
@@ -1103,18 +1111,57 @@ class SnapshotTable:
         )
         if not dbk:
             return plain if plain is not None else self.spark.createDataFrame([], full)
-        fold_schema = self._fold_schema(full)
-        base = (
-            self.spark.read.schema(full).parquet(*base_fold_files)
-            .withColumn(META_COMMIT, F.lit(0).cast("long"))
-            if base_fold_files
-            else self.spark.createDataFrame([], fold_schema)
-        )
-        deltas = self.spark.read.schema(fold_schema).parquet(
+        fold_in = self.spark.read.schema(self._fold_schema(full)).parquet(
             *self._delta_files(man, dbk)
         )
-        folded = self._fold(base.unionByName(deltas))
+        if base_fold_files:
+            fold_in = (
+                self.spark.read.schema(full).parquet(*base_fold_files)
+                .withColumn(META_COMMIT, F.lit(0).cast("long"))
+                .unionByName(fold_in)
+            )
+        if self._fits_one_partition(fold_in):
+            fold_in = fold_in.coalesce(1)
+        folded = self._fold(fold_in)
         return plain.unionByName(folded) if plain is not None else folded
+
+    def _fits_one_partition(self, *frames: DataFrame) -> bool:
+        """Whether a write's or fold's inputs are small enough to run as ONE
+        task. The optimizer's size estimates of ``frames`` (plan
+        statistics, read on the driver with no job: a file scan estimates
+        its files' bytes; a frame of unknown size, e.g. one built from
+        Python rows, estimates ``Long.MaxValue`` and never fits) are summed
+        and compared with the smaller of two Spark settings:
+        ``spark.sql.maxSinglePartitionBytes`` (128 MB by default), the size
+        up to which ``EnsureRequirements`` keeps a single-partition join
+        input unshuffled, and ``spark.sql.autoBroadcastJoinThreshold``
+        (10 MB), the size up to which Spark hands a relation whole to every
+        task instead of shuffling it (a negative threshold, broadcasts off,
+        turns this off too). The broadcast threshold bounds it because one
+        task gives up scan and write parallelism: on 4 vCPUs a
+        copy-on-write merge of 64 MB ran 23% slower on one partition than
+        shuffled, and a merge-on-read fold of 16 MB (560k rows) ~10%
+        slower, while the repo benchmark's writes and folds (under
+        0.5 MB each) committed and scanned ~13% faster on one partition.
+
+        When they fit, callers ``coalesce(1)`` their inputs instead of
+        repartitioning them: the one partition satisfies every window,
+        join and bucket fan-out above it, so the plan has no Exchange and
+        runs as one Spark job. Above the budget the plans are unchanged.
+        At the small batches of a CDC tail the cost of a write is its
+        per-query fixed cost (jobs, stages, AQE re-planning between them),
+        not its data volume."""
+        jvm = self.spark._jvm
+        budget = min(
+            jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                self.spark.conf.get("spark.sql.maxSinglePartitionBytes")),
+            self.spark._jsparkSession.sessionState().conf()
+            .autoBroadcastJoinThreshold(),
+        )
+        return sum(
+            f._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            for f in frames
+        ) <= budget
 
     def read_raw(
         self, version: int | None = None, buckets: list[int] | None = None
@@ -1131,11 +1178,13 @@ class SnapshotTable:
         self, version: int | None = None, buckets: list[int] | None = None
     ) -> DataFrame:
         """Live rows, public schema — the user-facing table state.
-        ``buckets`` prunes the scan via the manifest (file skipping)."""
+        ``buckets`` prunes the scan via the manifest (file skipping). The
+        manifest is read once, so the schema and the files are always of
+        the same version."""
         man = self._manifest(version)
         public = T.StructType.fromJson(json.loads(man["schema"]))
         return (
-            self.read_raw(version, buckets=buckets)
+            self._stored_frame(man, buckets, public)
             .filter(~F.coalesce(F.col(META_DELETED), F.lit(False)))
             .select(*[f.name for f in public.fields])
         )
@@ -1242,18 +1291,31 @@ class SnapshotTable:
         cast to its STORED type. ``key`` is those cast identifier values
         (a TimestampType value as epoch micros, so no local-time round
         trip), for a reader that matches the key with the routing's cast
-        semantics. The projection sits over a one-row ``VALUES``
+        semantics. The hash and ``key`` are None when ``vals`` does not
+        cover the full identifier key (scan()'s parent-key routing needs
+        only the bucket).
+
+        When every value already has its stored type (string, integral,
+        boolean, date, timestamp; see :mod:`.keyhash`), the hash is
+        computed in Python with no py4j call. Any other value is cast and
+        hashed by Spark: the projection sits over a one-row ``VALUES``
         LocalRelation that Catalyst's ConvertToLocalRelation folds, so
-        ``.first()`` is answered on the driver without a Spark job. The
-        hash and ``key`` are None when ``vals`` does not cover the full
-        identifier key (scan()'s parent-key routing needs only the
-        bucket)."""
+        ``.first()`` is answered on the driver without a Spark job."""
         stored = {f.name: f.dataType for f in public.fields}
         ids = list(self.model.identifiers)
         bucket_src = self.model.parent_key or ids
+        full = set(ids) <= set(vals)
+        enc = {c: keyhash.encode(vals[c], stored[c])
+               for c in (*bucket_src, *ids) if c in vals}
+        if None not in enc.values():
+            return (
+                keyhash.xxhash64([enc[c] for c in bucket_src])
+                % man["n_buckets"],
+                keyhash.xxhash64([enc[c] for c in ids]) if full else None,
+                tuple(enc[c][2] for c in ids) if full else None,
+            )
         lits = {c: F.lit(vals[c]).cast(stored[c])
                 for c in (*bucket_src, *ids) if c in vals}
-        full = set(ids) <= set(lits)
         full_key = (
             F.xxhash64(*[lits[c] for c in ids]) if full
             else F.lit(None).cast("long")
@@ -1530,7 +1592,11 @@ class SnapshotTable:
         (see :meth:`_append_commit`); a snapshot merge is one write query
         too; every other merge runs one stats pass over the batch
         (quarantine count, touched buckets) and then the copy-on-write join
-        and bucket rewrite (:meth:`_write_commit`).
+        and bucket rewrite (:meth:`_write_commit`). Inputs that fit one
+        partition (10 MB by default, see :meth:`_fits_one_partition`) run
+        each of these queries with no Exchange: the append and the
+        snapshot merge as one Spark job, the copy-on-write merge as two
+        (stats pass, write).
 
         ``expectations`` — declarative data contracts on ingest (the Delta
         Live Tables ``EXPECT`` analog): ``{name: predicate}`` where
@@ -1701,6 +1767,8 @@ class SnapshotTable:
         # ---- one stats pass: quarantine count + touched buckets (a single
         # aggregate job instead of separate count()/distinct().collect()).
         # Expectations add one aggregate to the same pass, only when given.
+        # A batch that fits one partition aggregates there, with no
+        # Exchange (the write below decides again, on batch + stored rows).
         aggs = [
             F.coalesce(F.sum(F.when(~F.col("__valid"), 1)), F.lit(0)).alias("n_bad"),
             F.coalesce(F.sum(F.when(F.col("__valid"), 1)), F.lit(0)).alias("n_ok"),
@@ -1715,7 +1783,9 @@ class SnapshotTable:
         # for wide text payloads (and evicting under pressure → recompute)
         _prof("pre_stats", _t_att0)
         _t0 = time.perf_counter()
-        stats = batch.groupBy(BUCKET).agg(*aggs).collect()
+        stats_in = (batch.coalesce(1) if self._fits_one_partition(batch)
+                    else batch)
+        stats = stats_in.groupBy(BUCKET).agg(*aggs).collect()
         _prof("stats_pass", _t0)
         _t_mid0 = time.perf_counter()
         n_quarantined = sum(r.n_bad for r in stats)
@@ -1727,14 +1797,6 @@ class SnapshotTable:
         if n_quarantined:
             self._write_quarantine(batch, exp_reason, new_version, snapshot_id)
         batch = batch.filter(F.col("__valid")).drop("__valid")
-
-        # ---- LWW dedup: MERGE requires unique source keys. A versionless
-        # model (e.g. a parent bookkeeping table) has no writer order — any
-        # one row per key is the row (diff-built batches are unique already).
-        if self.model.version_cols or "seq" in batch.columns:
-            batch = lww_dedup(batch, self.model)
-        else:
-            batch = batch.dropDuplicates(list(ids))
 
         evolved = self._evolve_schema(public, batch.schema, man)
         payload_fields = [f for f in evolved.fields if f.name not in ids]
@@ -1752,6 +1814,19 @@ class SnapshotTable:
         _t0 = time.perf_counter()
         cur = self._stored_frame(man, touched, evolved)
         _prof("stored_frame_build", _t0)
+        # inputs that fit one partition run the LWW window, the join and
+        # the fan-out there, with no Exchange (see _fits_one_partition)
+        one = self._fits_one_partition(batch, *(() if empty_target else (cur,)))
+        if one:
+            batch, cur = batch.coalesce(1), cur.coalesce(1)
+
+        # ---- LWW dedup: MERGE requires unique source keys. A versionless
+        # model (e.g. a parent bookkeeping table) has no writer order — any
+        # one row per key is the row (diff-built batches are unique already).
+        if self.model.version_cols or "seq" in batch.columns:
+            batch = lww_dedup(batch, self.model)
+        else:
+            batch = batch.dropDuplicates(list(ids))
 
         # ---- the MERGE join: batch (unique keys) vs current rows
         # batch payload columns are try_cast to the EVOLVED types: a no-op
@@ -1857,6 +1932,7 @@ class SnapshotTable:
             res = self._write_commit(
                 merged, man, new_version, touched, n_quarantined, checkpoint_id,
                 batch_id, evolved, batch_rows, snapshot_id=snapshot_id,
+                one=one,
             )
             res["n_expectation_failed"] = n_expectation_failed
             return res
@@ -1875,6 +1951,7 @@ class SnapshotTable:
         res = self._write_commit(
             merged, man, new_version, touched, n_quarantined, checkpoint_id,
             batch_id, evolved, batch_rows, snapshot_id=snapshot_id,
+            one=one,
         )
         res["n_expectation_failed"] = n_expectation_failed
         return res
@@ -1984,7 +2061,8 @@ class SnapshotTable:
         return {b: max(1, min(-(-n // target), 64)) for b, n in est.items()}
 
     def _fanout_frame(
-        self, df: DataFrame, touched: list[int], splits: dict[int, int]
+        self, df: DataFrame, touched: list[int], splits: dict[int, int],
+        one: bool = False,
     ) -> DataFrame:
         """Salted write partitioning (the north rule's "salted
         key-partitioned MERGE"): rows are hashed to slot
@@ -1993,6 +2071,12 @@ class SnapshotTable:
         physical partition dir (``__slot=S``), so ``lookup`` can later prune
         a hot bucket's read to the single file its key hashes into —
         Iceberg's bucket-transform file pruning, one level deeper.
+
+        With ``one`` (the write's inputs fit one partition, see
+        :meth:`_fits_one_partition`) the frame is coalesced to one
+        partition instead: no Exchange, and the one write task still
+        writes one file per (bucket, slot), since the slot comes from the
+        same plan.
 
         Write-ordered files: every branch finishes with
         ``sortWithinPartitions(bucket, slot, *identifiers)`` — Iceberg's
@@ -2005,40 +2089,31 @@ class SnapshotTable:
         this widens that sort's key instead of adding a second sort."""
         order = [BUCKET, SLOT, *self.model.identifiers]
         if not touched:
-            return (
-                df.withColumn(SLOT, F.lit(0))
-                .repartition(1, BUCKET)
-                .sortWithinPartitions(*order)
+            df, parts = df.withColumn(SLOT, F.lit(0)), (1, BUCKET)
+        else:
+            # literal maps as ONE parsed expr, not create_map over
+            # 2x|touched| F.lit Columns: each Column op is a py4j round
+            # trip — at 64 buckets the old form was ~0.14s of driver wall
+            # per merge vs ~0.016s (measured, same class of fix as
+            # _observe_buckets)
+            split_map = F.expr(
+                "map(" + ",".join(f"{b},{splits[b]}" for b in touched) + ")"
             )
-        # literal maps as ONE parsed expr, not create_map over 2x|touched|
-        # F.lit Columns: each Column op is a py4j round trip — at 64 buckets
-        # the old form was ~0.14s of driver wall per merge vs ~0.016s
-        # (measured, same class of fix as _observe_buckets)
-        split_map = F.expr(
-            "map(" + ",".join(f"{b},{splits[b]}" for b in touched) + ")"
-        )
-        slot = F.pmod(
-            F.xxhash64(*self.model.identifiers), split_map[F.col(BUCKET)]
-        ).cast("int")
-        if max(splits.values()) > 1:
-            offsets, acc = {}, 0
-            for b in touched:
-                offsets[b] = acc
-                acc += splits[b]
-            off_map = F.expr(
-                "map(" + ",".join(f"{b},{offsets[b]}" for b in touched) + ")"
-            )
-            gslot = (off_map[F.col(BUCKET)] + F.col(SLOT)).cast("int")
-            return (
-                df.withColumn(SLOT, slot)
-                .repartition(max(acc, 1), gslot)
-                .sortWithinPartitions(*order)
-            )
-        return (
-            df.withColumn(SLOT, slot)
-            .repartition(max(len(touched), 1), BUCKET)
-            .sortWithinPartitions(*order)
-        )
+            df = df.withColumn(SLOT, F.pmod(
+                F.xxhash64(*self.model.identifiers), split_map[F.col(BUCKET)]
+            ).cast("int"))
+            parts = (max(len(touched), 1), BUCKET)
+            if max(splits.values()) > 1 and not one:
+                offsets, acc = {}, 0
+                for b in touched:
+                    offsets[b] = acc
+                    acc += splits[b]
+                off_map = F.expr("map(" + ",".join(
+                    f"{b},{offsets[b]}" for b in touched) + ")")
+                parts = (max(acc, 1),
+                         (off_map[F.col(BUCKET)] + F.col(SLOT)).cast("int"))
+        df = df.coalesce(1) if one else df.repartition(*parts)
+        return df.sortWithinPartitions(*order)
 
     _ZORDER_BITS = 8  # 256 quantile bins per column
 
@@ -2210,10 +2285,12 @@ class SnapshotTable:
         evolved: T.StructType,
         batch_rows: dict[int, int] | None = None,
         snapshot_id: str | None = None,
+        one: bool = False,
     ) -> dict[str, Any]:
         """Write and commit a copy-on-write merge in one pass: fan
         ``merged`` (the classified join output, ``__op_class`` included) out
-        over the ``touched`` buckets (:meth:`_fanout_frame`), write and
+        over the ``touched`` buckets (:meth:`_fanout_frame`; on one
+        partition when ``one``), write and
         account it (:meth:`_write_buckets`), then commit those buckets' new
         files (:meth:`_commit_rewrite`). No persist: caching the wide merged
         frame paid the in-memory columnar RLE encode/decode (dominant CPU in
@@ -2229,7 +2306,7 @@ class SnapshotTable:
             b: (batch_rows or {}).get(b, 0) + cur_rows.get(b, 0) for b in touched
         })
         written = self._write_buckets(
-            self._fanout_frame(merged, touched, splits), man,
+            self._fanout_frame(merged, touched, splits, one), man,
             self._attempt_dir(new_version, snapshot_id), touched, evolved,
             f"merge_v{new_version}",
         )
@@ -2447,9 +2524,11 @@ class SnapshotTable:
         key against every stored row (raw: tombstones and ``_seq``
         included; folded on merge-on-read), classified with the keyed
         diff's rule and written bucket by bucket. No stats pass and no
-        separate diff: the join's batch side reuses the LWW window's
-        Exchange, so the plan has three (window, stored side, write
-        fan-out).
+        separate diff. When the batch and the stored rows fit one partition
+        (:meth:`_fits_one_partition`) both are coalesced to it: no
+        Exchange, one Spark job. Above that the join's batch side reuses
+        the LWW window's Exchange, so the plan has three (window, stored
+        side, write fan-out).
 
         Classification (:func:`~diffsync_spark.operators.diff.diff`): a
         tombstone counts as absent; a key on both sides is an update when a
@@ -2589,12 +2668,18 @@ class SnapshotTable:
         # duplicate keys resolve by LWW among the valid rows first — the
         # order every merge applies (validate, then dedup), so a null-ts
         # duplicate never displaces a valid one
-        src = lww_dedup(src.filter(key_ok), self.model, order_cols=(
+        src = src.filter(key_ok)
+        stored = self._stored_frame(man, None, evolved)
+        # source and stored rows that fit one partition run the LWW window,
+        # the join and the fan-out there, with no Exchange
+        one = self._fits_one_partition(batch, stored)
+        if one:
+            src, stored = src.coalesce(1), stored.coalesce(1)
+        src = lww_dedup(src, self.model, order_cols=(
             "__valid", *self.model.version_cols,
             *(["seq"] if "seq" in src.columns else [])))
         s = src.select(*s_sel).alias("s")
-        c = (self._stored_frame(man, None, evolved)
-             .withColumn("__c", F.lit(True)).alias("c"))
+        c = stored.withColumn("__c", F.lit(True)).alias("c")
         joined = s.join(c, cond, "right_outer" if skip_src else "full_outer")
         obs = Observation(f"snapshot_v{new_version}")
         merged = joined.observe(obs, *metrics).filter(keep).select(*out_cols)
@@ -2605,7 +2690,7 @@ class SnapshotTable:
             {b: int(rows.get(str(b), 0)) for b in buckets})
         data_dir = self._attempt_dir(new_version, snapshot_id)
         written = self._write_buckets(
-            self._fanout_frame(merged, buckets, splits), man, data_dir,
+            self._fanout_frame(merged, buckets, splits, one), man, data_dir,
             buckets, evolved, f"merge_v{new_version}",
         )
         m = obs.get
@@ -2674,9 +2759,11 @@ class SnapshotTable:
         and other layers at read time, :meth:`_fold`).
 
         ``batch`` carries the ``__valid`` and ``_bucket`` columns. The merge
-        is ONE write query with no pass over the batch before it: the valid
-        rows are repartitioned by the fan-out key with no fixed partition
-        count (AQE merges a small batch's partitions) and :func:`lww_dedup`
+        is ONE write query with no pass over the batch before it. A batch
+        that fits one partition (:meth:`_fits_one_partition`) is coalesced
+        to it and :func:`lww_dedup` runs there: no Exchange, one Spark job.
+        A larger one is repartitioned by the fan-out key with no fixed
+        partition count (AQE merges partitions) and :func:`lww_dedup`
         clusters on the same key, so the plan has one Exchange. The slot
         plan comes from the manifest's ``bucket_rows`` (the :meth:`compact`
         rule); quarantine and input counts are an ``Observation`` on the
@@ -2717,13 +2804,16 @@ class SnapshotTable:
                    F.count_if(F.col("__valid")).alias("n_input")]
         if exp_fails is not None:
             metrics.append(F.count_if(exp_fails).alias("n_exp"))
-        # __valid rides along unused: the delta projection below drops it
+        # __valid rides along unused: the delta projection below drops it.
+        # A batch that fits one partition is coalesced instead: the window
+        # needs no Exchange then (see _fits_one_partition)
         fanned = (
             batch.observe(obs, *metrics)
             .filter(F.col("__valid"))
             .withColumn(SLOT, slot)
-            .repartition(*fan)
         )
+        fanned = (fanned.coalesce(1) if self._fits_one_partition(batch)
+                  else fanned.repartition(*fan))
         winners = lww_dedup(fanned, self.model, cluster_cols=fan)
         # all but the per-commit literal is schema-stable — cached across
         # a replay's micro-batches (see _expr_cache)
@@ -3571,7 +3661,8 @@ class SnapshotTable:
             # rule as _stat_cols (string min/max may be truncated)
             stat_cols += [c for c in zorder if c not in stat_cols]
         else:
-            out = self._fanout_frame(raw, targets, splits)
+            out = self._fanout_frame(raw, targets, splits,
+                                     self._fits_one_partition(raw))
         # the written counts restore the metadata-only count_rows() a MoR
         # append had to give up; a commit that lost the race rebases onto
         # the winner when it left the compacted buckets alone (targeted
@@ -3635,16 +3726,14 @@ class SnapshotTable:
         total = sum(man.get("bucket_rows", {}).values())
         per_bucket_est = max(1, total // n_buckets)
         uniform = self._plan_splits({0: per_bucket_est})[0]
-        out = (
-            raw.withColumn(
-                SLOT, F.pmod(F.xxhash64(*ids), F.lit(uniform)).cast("int")
-            )
-            .repartition(
+        out = raw.withColumn(
+            SLOT, F.pmod(F.xxhash64(*ids), F.lit(uniform)).cast("int"))
+        out = out.coalesce(1) if self._fits_one_partition(raw) else (
+            out.repartition(
                 n_buckets * uniform,
                 (F.col(BUCKET) * uniform + F.col(SLOT)).cast("int"),
-            )
-            .sortWithinPartitions(BUCKET, SLOT, *ids)
-        )
+            ))
+        out = out.sortWithinPartitions(BUCKET, SLOT, *ids)
         # the new numbering cannot rebase onto a winner, so this commits
         # directly: every bucket is new and the layers are folded in
         written = self._write_buckets(

@@ -18,6 +18,19 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def shuffle_regime(spark):
+    """Force the shuffle regime: with ``spark.sql.maxSinglePartitionBytes``
+    at 0 no write or fold input fits one partition
+    (``SnapshotTable._fits_one_partition``), so the engine plans the
+    Exchanges it plans for inputs above the budget. Restored afterwards."""
+    key = "spark.sql.maxSinglePartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    yield
+    spark.conf.set(key, prev)
+
+
 @pytest.fixture(scope="session")
 def source_pdf() -> pd.DataFrame:
     return fixtures.gen_source(n_convs=50, seed=42, max_len=200)

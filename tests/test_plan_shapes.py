@@ -31,6 +31,27 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _write_plans(t) -> list:
+    """The executed plan of every write ``t`` runs from now on."""
+    plans = []
+    write_files = t._write_files
+
+    def capture(df, man, data_dir):
+        plans.append(_plan(df))
+        return write_files(df, man, data_dir)
+
+    t._write_files = capture
+    return plans
+
+
+def _parquet(df, path):
+    """``df`` written to parquet and read back: a file-backed frame has a
+    size estimate (a frame built from Python rows has none and never fits
+    one partition), as a staged batch or a streaming micro-batch does."""
+    df.write.parquet(str(path))
+    return df.sparkSession.read.schema(df.schema).parquet(str(path))
+
+
 def _rows(n=4):
     t0 = datetime.datetime(2025, 1, 1)
     return [
@@ -231,6 +252,7 @@ def test_ivf_topk_corpus_never_hash_shuffled(spark):
     assert "WindowGroupLimit" in plan
 
 
+@pytest.mark.usefixtures("shuffle_regime")
 def test_mor_fold_one_exchange_with_mapside_prune(spark, tmp_path):
     """The merge-on-read fold (PLANS.md "merge-on-read fold"): base+layers
     resolve through ONE hash exchange on the natural key, and Spark's
@@ -333,6 +355,7 @@ def test_point_lookup_runs_no_spark_job(spark, tmp_path):
         assert miss is None and (jobs, stages) == (0, 0), mode
 
 
+@pytest.mark.usefixtures("shuffle_regime")
 def test_mor_lww_merge_is_one_write_query(spark, tmp_path):
     """An LWW merge into a merge-on-read table that already holds data is
     ONE write query: no stats pass before it, and one Exchange shared by
@@ -390,6 +413,7 @@ def test_frame_sample_filters_before_the_arrow_udf(spark):
                for ln in proj_lines)
 
 
+@pytest.mark.usefixtures("shuffle_regime")
 @pytest.mark.parametrize("n_buckets", [4, 128])
 def test_snapshot_sync_is_one_write_query(spark, tmp_path, n_buckets):
     """``Engine.sync_from`` after a commit that changed the whole table is
@@ -443,6 +467,7 @@ def _kv_table(spark, tmp_path, name, mode):
     return t, src
 
 
+@pytest.mark.usefixtures("shuffle_regime")
 def test_maintenance_writes_job_counts(spark, tmp_path):
     """Bucket rewrites for maintenance stay small queries: maintain()
     folding a merge-on-read layer runs at most 3 Spark jobs, compact() of
@@ -480,3 +505,130 @@ def test_rewrites_write_no_op_class_column(spark, tmp_path):
     assert lww_files and snap_files and not lww_files & snap_files
     for p in lww_files | snap_files:
         assert "__op_class" not in pq.read_schema(p).names, p
+
+
+# ---- the single-partition regime: inputs within
+# the smaller of spark.sql.maxSinglePartitionBytes and
+# spark.sql.autoBroadcastJoinThreshold (10 MB by default) run on one
+# partition, with no Exchange. The batches are file-backed (_parquet), as a
+# staged batch or a streaming micro-batch is.
+
+
+def test_small_mor_append_is_one_job(spark, tmp_path):
+    """A merge-on-read LWW append whose batch fits one partition runs the
+    LWW window and the bucket fan-out on it: no Exchange, one Spark job."""
+    t, _ = _kv_table(spark, tmp_path, "one_mor_write", "mor")
+    plans = _write_plans(t)
+    t.merge(_parquet(spark.createDataFrame(_rows(16), _CDC),
+                     tmp_path / "b1"), checkpoint_id="c", batch_id=1)
+    up = _parquet(spark.createDataFrame(_rows(16), _CDC).withColumn(
+        "seq", F.col("seq") + 100), tmp_path / "b2")
+    res, jobs, _ = _jobs_and_stages(
+        spark, "one-mor-merge", lambda: t.merge(up, checkpoint_id="c",
+                                                batch_id=2))
+    assert res["n_append"] == 16 and res["n_quarantined"] == 0
+    assert jobs == 1
+    assert "Exchange" not in plans[-1] and "Window" in plans[-1]
+
+
+def test_small_snapshot_sync_is_one_job(spark, tmp_path):
+    """``Engine.sync_from`` whose source and stored rows fit one partition
+    runs the LWW window, the full-outer join and the fan-out on it: no
+    Exchange, one Spark job (the write)."""
+    from diffsync_spark.engine import Engine
+
+    t, src = _kv_table(spark, tmp_path, "one_snap", "cow")
+    plans = _write_plans(t)
+    e = Engine(spark, TRANSCRIPT_MODEL, t)
+    e.sync_from(_parquet(src.withColumn("text", F.lit("warm")),
+                         tmp_path / "g1"), batch_id=1)
+    changed = _parquet(src.withColumn("text", F.lit("changed")),
+                       tmp_path / "g2")
+    res, jobs, _ = _jobs_and_stages(
+        spark, "one-snapshot-sync", lambda: e.sync_from(changed, batch_id=2))
+    assert res["n_update"] == 16 and res["n_quarantined"] == 0
+    assert jobs == 1
+    assert "Exchange" not in plans[-1]
+    assert "FullOuter" in plans[-1] and "Window" in plans[-1]
+
+
+def test_small_mor_read_and_maintain(spark, tmp_path):
+    """A merge-on-read fold that fits one partition has no Exchange, and
+    maintain() folding a layer back into base files is one Spark job."""
+    t, _ = _kv_table(spark, tmp_path, "one_fold", "mor")
+    t.merge(spark.createDataFrame(_rows(16), _CDC).withColumn(
+        "text", F.lit("layered")), checkpoint_id="c", batch_id=1)
+    plan = _plan(t.read())
+    assert "Window" in plan and "Exchange" not in plan
+    res, jobs, _ = _jobs_and_stages(
+        spark, "one-maintain", lambda: t.maintain(max_delta_layers=1))
+    assert res["compacted_buckets"] and not t._manifest().get("deltas")
+    assert jobs == 1
+    assert t.read().filter(F.col("text") == "layered").count() == 16
+
+
+def test_small_cow_lww_merge_is_stats_pass_plus_write(spark, tmp_path):
+    """A copy-on-write LWW merge whose batch and touched stored rows fit
+    one partition: the stats pass aggregates on one partition, and the
+    LWW window, the join and the fan-out add no Exchange — two Spark
+    jobs, for the bootstrap fast path as for the join."""
+    from diffsync_spark.sinks.table import SnapshotTable
+
+    src = spark.createDataFrame(_rows(16), _CDC)
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "one_cow"), TRANSCRIPT_MODEL,
+        schema=src.drop("op", "seq").schema, n_buckets=4)
+    plans = _write_plans(t)
+    boot = _parquet(src, tmp_path / "boot")
+    res, jobs, _ = _jobs_and_stages(
+        spark, "one-cow-boot", lambda: t.merge(boot, checkpoint_id="c",
+                                               batch_id=0))
+    assert res["n_create"] == 16 and jobs == 2
+    assert "Exchange" not in plans[-1]
+    up = _parquet(src.withColumn("seq", F.col("seq") + 100),
+                  tmp_path / "up")
+    res, jobs, _ = _jobs_and_stages(
+        spark, "one-cow-merge", lambda: t.merge(up, checkpoint_id="c",
+                                                batch_id=1))
+    assert res["n_update"] == 16 and jobs == 2
+    assert "Exchange" not in plans[-1] and "FullOuter" in plans[-1]
+
+
+@pytest.mark.parametrize("require_all, exchanges, jobs", [
+    ("true", 4, 5), ("false", 2, 3),
+])
+def test_bucket_partitioned_join_reuse_needs_all_cluster_keys_off(
+        spark, require_all, exchanges, jobs):
+    """Whether a full-outer join on ``(_bucket, *ids)`` reuses both sides'
+    ``repartition(_bucket)`` when an LWW window clustered on the bucket
+    (``lww_dedup(cluster_cols=("_bucket",))``) sits between. Under Spark's
+    default ``spark.sql.requireAllClusterKeysForCoPartition=true`` it does
+    not: each side gets a second ``Exchange hashpartitioning(_bucket,
+    conv_id, turn_idx)`` above its window, 4 Exchanges and 5 Spark jobs.
+    With the setting false the join keeps the bucket partitioning: 2
+    Exchanges, 3 jobs. Pure Spark, 16 rows, 4 buckets."""
+    key = "spark.sql.requireAllClusterKeysForCoPartition"
+    keys = ["_bucket", *TRANSCRIPT_MODEL.identifiers]
+
+    def side(text):
+        df = spark.createDataFrame(_rows(16), _CDC).withColumns({
+            "text": F.lit(text),
+            "_bucket": F.pmod(F.xxhash64("conv_id"), F.lit(4)),
+        }).repartition("_bucket")
+        return lww_dedup(df, TRANSCRIPT_MODEL, cluster_cols=("_bucket",)) \
+            .select(*keys, F.col("text").alias(text))
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, require_all)
+    try:
+        joined = side("a").join(side("b"), keys, "full_outer")
+        plan = _plan(joined)
+        rows, n_jobs, _ = _jobs_and_stages(
+            spark, f"copartition-{require_all}", joined.collect)
+    finally:
+        spark.conf.set(key, prev)
+    assert len(rows) == 16
+    assert plan.count("Exchange hashpartitioning") == exchanges
+    assert plan.count("Exchange hashpartitioning(_bucket#") == exchanges
+    assert plan.count("REPARTITION_BY_COL") == 2
+    assert n_jobs == jobs

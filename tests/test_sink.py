@@ -1214,3 +1214,23 @@ def test_file_stats_errors_log_or_propagate(spark, tmp_path, target_df,
     with pytest.raises(TypeError, match="a real bug"):
         table.merge(batch.withColumn("text", F.lit("x")), mode="force",
                     checkpoint_id="boot", batch_id=1)
+
+
+def test_read_resolves_the_manifest_once(spark, tmp_path, target_df):
+    """read() reads and hydrates the manifest once, so a commit landing
+    between two reads can never pair one version's schema with the next
+    version's files."""
+    table = _bootstrap(spark, tmp_path, target_df)
+    calls = []
+    manifest = table._manifest
+
+    def counting(version=None):
+        calls.append(version)
+        return manifest(version)
+
+    table._manifest = counting
+    assert table.read().count() == target_df.count()
+    assert calls == [None]
+    calls.clear()
+    assert table.read(version=1, buckets=[0, 1]).columns == target_df.columns
+    assert calls == [1]
