@@ -14,7 +14,8 @@ MERGE upsert, snapshot isolation, schema evolution, time travel, per-commit
 lineage, exactly-once via commit metadata — behind one class, so swapping in
 ``MERGE INTO`` on real Iceberg later only changes this file.
 
-Layout::
+Layout (the manifests, bm segments and pointers are the format of
+``sinks/manifest.py``, the one module that reads and commits them)::
 
     table_dir/
       manifests/v{N}.json     immutable snapshot manifests (exclusive-create)
@@ -73,6 +74,7 @@ from diffsync_spark.sinks.arrow_read import (
 )
 from diffsync_spark.sinks import keyhash
 from diffsync_spark.sinks.fsio import LocalCommitIO
+from diffsync_spark.sinks.manifest import ManifestLog, next_manifest, retrying
 
 def _prof(label: str, t0: float) -> None:
     """Opt-in phase timing for the write/commit paths (guide §1: measure
@@ -118,10 +120,6 @@ _RESERVED_COL_NAMES = {"op", "seq", META_SEQ, META_DELETED, META_COMMIT,
                        BUCKET, SLOT, "__valid"}
 
 
-def _schema_has_ids(schema: T.StructType) -> bool:
-    return any(_FIELD_ID_KEY in (f.metadata or {}) for f in schema.fields)
-
-
 def _with_field_ids(schema: T.StructType, start: int = 1) -> T.StructType:
     """Assign sequential field ids to every field (create-time)."""
     fields = []
@@ -132,13 +130,11 @@ def _with_field_ids(schema: T.StructType, start: int = 1) -> T.StructType:
     return T.StructType(fields)
 
 
-def _next_field_id(man: dict, public: T.StructType) -> int:
+def _next_field_id(man: dict) -> int:
     """The id a newly added column gets: one past the manifest's monotone
     ``last_field_id`` watermark, so a column re-added after a drop never
     reuses the dropped id (old files' values cannot resurrect)."""
-    return int(man.get("last_field_id")
-               or max((f.metadata or {}).get(_FIELD_ID_KEY, 0)
-                      for f in public.fields)) + 1
+    return man["last_field_id"] + 1
 
 
 def _stat_scalar(v):
@@ -191,77 +187,6 @@ def _footer_stats(md, want: set) -> dict[str, list]:
     return {c: v for c, v in agg.items() if v}
 
 
-def _retrying(attempt, max_retries: int):
-    """The one optimistic-concurrency loop of every commit: run
-    ``attempt(n)``, ``n`` the commit races lost so far, until it returns.
-    Each attempt re-reads the current snapshot itself; after
-    ``max_retries`` lost retries the last :class:`CommitConflict`
-    propagates."""
-    n = 0
-    while True:
-        try:
-            return attempt(n)
-        except CommitConflict:
-            if n >= max_retries:
-                raise
-            n += 1
-
-
-# durable table state: a commit carries these from its base snapshot unless
-# it replaces them. Every other field describes the one commit that wrote it
-# (ids, schema, lineage, quarantine_dir; only publish() sets published_from)
-_CARRIED = ("n_buckets", "write_mode", "bloom_cols", "model", "checkpoints",
-            "files", "_files_src", "_file_stats", "deltas", "bucket_rows",
-            "bucket_splits", "bucket_live_rows")
-
-
-def _next_manifest(
-    base: dict,
-    version: int,
-    snapshot_id: str,
-    schema: T.StructType,
-    checkpoint_id: str | None = None,
-    batch_id: int | None = None,
-    lineage: Sequence[dict] = (),
-    quarantine_dir: str | None = None,
-    new_stats: dict[str, dict[str, list]] | None = None,
-    **replace: Any,
-) -> dict:
-    """The manifest of a commit on top of ``base``: the one place that
-    knows which fields carry over (every data and DDL commit builds here;
-    ``create`` has no base and ``publish`` takes the branch head's content).
-
-    ``replace`` overrides :data:`_CARRIED` fields; a ``None`` value drops
-    the field, and an empty ``deltas`` list is left out. ``last_field_id``
-    is the larger of the base's watermark and ``schema``'s field ids.
-    ``batch_id`` advances ``checkpoint_id``'s exactly-once watermark, and
-    ``new_stats`` adds the per-file stats of the files this commit wrote
-    (only referenced files' stats serialize, see
-    :meth:`SnapshotTable._dehydrate`)."""
-    man = {
-        "version": version,
-        "snapshot_id": snapshot_id,
-        "parent_snapshot_id": base["snapshot_id"],
-        "schema": schema.json(),
-        "last_field_id": max(
-            int(base.get("last_field_id") or 0),
-            max(((f.metadata or {}).get(_FIELD_ID_KEY, 0)
-                 for f in schema.fields), default=0),
-        ) or None,
-        "lineage": list(lineage),
-        "quarantine_dir": quarantine_dir,
-    }
-    for k in _CARRIED:
-        v = replace[k] if k in replace else base.get(k)
-        if v is not None and (v or k != "deltas"):
-            man[k] = v
-    if batch_id is not None:
-        man["checkpoints"] = {**man["checkpoints"], checkpoint_id: batch_id}
-    if new_stats:
-        man["_file_stats"] = {**(man.get("_file_stats") or {}), **new_stats}
-    return man
-
-
 def _lineage_row(checkpoint_id: str | None, batch_id: int | None,
                  snapshot_id: str, partition: int, **counts: Any) -> dict:
     """One lineage record of a commit: a bucket's counts (``partition`` is
@@ -293,6 +218,15 @@ _OBSERVE_MAX_EXPRS = 512
 _VDIR_RE = re.compile(r"^v\d+-[0-9a-f]+$")
 
 
+_SLOT_RE = re.compile(rf"{re.escape(os.sep)}{SLOT}=(\d+){re.escape(os.sep)}")
+
+
+def _slot_of(path: str) -> int | None:
+    """The writer slot of a data file, from its ``__slot=S`` dir."""
+    m = _SLOT_RE.search(path)
+    return int(m.group(1)) if m else None
+
+
 class _Written(NamedTuple):
     """What one bucket rewrite wrote and counted
     (:meth:`SnapshotTable._write_buckets`)."""
@@ -305,32 +239,17 @@ class _Written(NamedTuple):
     ops: dict[int, dict[str, int]] | None
 
 
-class SnapshotTable:
-    """A keyed, versioned, bucketed parquet table with MERGE semantics."""
+class SnapshotTable(ManifestLog):
+    """A keyed, versioned, bucketed parquet table with MERGE semantics. Its
+    manifests, pointer and commit protocol are the :class:`ManifestLog`
+    (``sinks/manifest.py``); ``ref`` names the ref this handle's commits
+    advance (see :meth:`branch`)."""
 
     def __init__(self, spark: SparkSession, path: str, model: ModelSchema,
                  io: LocalCommitIO | None = None):
+        super().__init__(path, io)
         self.spark = spark
-        self.path = path.rstrip("/")
         self.model = model
-        # all non-Spark I/O (manifests, pointer, file listing) goes through
-        # this seam — swap for an object-store/catalog backend (fsio.py)
-        self.io = io or LocalCommitIO()
-        # which ref this handle's commits advance: "main" (the _current
-        # pointer) or a branch name (branches/<name>) — see branch()
-        self.ref = "main"
-        # flips to True after any commit conflict: from then on version
-        # numbers are allocated past EVERY existing manifest, so a retry
-        # can never ping-pong on a number another ref's writer took
-        self._alloc_global = False
-        # cached max version number seen across ALL refs (None = never
-        # listed); see _next_version
-        self._version_floor = None
-        # bucket-manifest segment cache (ref string -> parsed segment) and
-        # drop-filtered layer views ((ref, drop) -> dict); bm files are
-        # immutable so both caches never invalidate — see _load_seg
-        self._bm_cache: dict[str, dict] = {}
-        self._bm_view_cache: dict[tuple, dict] = {}
         # merge-expression cache: Column objects are immutable unresolved
         # expression trees referencing columns BY NAME, so the projection/
         # join expressions a merge builds are reusable verbatim across
@@ -340,8 +259,7 @@ class SnapshotTable:
         # same driver-overhead class as the observe-metrics fix)
         self._expr_cache: dict[tuple, tuple] = {}
         # field-id column resolution (rename support) needs these even on
-        # sessions not built by build_session; both are no-ops for
-        # id-less schemas/files
+        # sessions not built by build_session
         spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
         # INT64 micros, not legacy INT96 (INT96 has no parquet column
@@ -349,194 +267,9 @@ class SnapshotTable:
         spark.conf.set("spark.sql.parquet.outputTimestampType",
                        "TIMESTAMP_MICROS")
 
-    # ------------------------------------------------------------- manifest
-    @property
-    def _manifest_dir(self) -> str:
-        return os.path.join(self.path, "manifests")
-
-    @property
-    def _current_path(self) -> str:
-        if self.ref == "main":
-            return os.path.join(self.path, "_current")
-        return os.path.join(self._branches_dir, self.ref)
-
-    @property
-    def _branches_dir(self) -> str:
-        return os.path.join(self.path, "branches")
-
-    def _next_version(self, man: dict) -> int:
-        """Next snapshot number for a commit on top of ``man``. Version
-        numbers are a SINGLE space shared by main and every branch (the
-        exclusive manifest create arbitrates); when branches exist (or a
-        conflict proved another writer is active), allocate past every
-        manifest on disk so two refs' writers can't fight over a number.
-
-        The manifest-dir listing is CACHED: it runs on this handle's first
-        branched allocation and again only after a CommitConflict proved
-        the cached floor stale — steady-state commits pay no listing."""
-        nxt = man["version"] + 1
-        branched = self.ref != "main" or (
-            self.io.exists(self._branches_dir)
-            and any(not f.startswith(".")  # ignore CAS .ptrlock sidecars
-                    for f in self.io.list_files(self._branches_dir))
-        )
-        if branched or self._alloc_global or self._version_floor is not None:
-            if self._version_floor is None or self._alloc_global:
-                taken = [
-                    int(f[1:-5])
-                    for f in self.io.list_files(self._manifest_dir)
-                    if re.fullmatch(r"v\d+\.json", f)
-                ]
-                self._version_floor = max(taken, default=0)
-                self._alloc_global = False
-            nxt = max(nxt, self._version_floor + 1)
-            self._version_floor = nxt  # claim it for this handle
-        return nxt
-
-    def current_version(self) -> int:
-        return int(self.io.read_text(self._current_path).strip())
-
     def _manifest(self, version: int | None = None) -> dict:
-        if version is None:
-            version = self.current_version()
-        return self._hydrate(json.loads(
-            self.io.read_text(os.path.join(self._manifest_dir, f"v{version}.json"))
-        ))
-
-    # ------------------------------------------ incremental commit metadata
-    #
-    # Snapshot manifests do NOT inline their per-bucket file lists: that
-    # would make every commit's metadata O(total live files) — driver-side
-    # JSON that grows with table size, the one cost the 100x scale-up
-    # question punishes (a 10^10-event table accumulates ~10^3 commits over
-    # ~10^5 files). Instead, a commit writes ONE bucket-manifest ("bm")
-    # file holding only the buckets it rewrote, and the snapshot manifest
-    # stores a REF string per bucket ("<bm-file>#<segment>"); untouched
-    # buckets carry their parent's ref forward, so commit metadata is
-    # O(touched buckets), the Iceberg manifest-list / manifest-file reuse
-    # shape. Delta layers (merge-on-read) ref their own segment the same
-    # way; a layer partially cleared by a bucket rewrite keeps its ref plus
-    # a tiny "drop" list instead of being re-serialized.
-    #
-    # The split is invisible above this seam: _manifest() HYDRATES refs
-    # back into the legacy in-memory shape ({bucket: [paths]}), _commit()
-    # DEHYDRATES by identity — a bucket whose (cached, immutable) hydrated
-    # list object is unchanged reuses its ref, anything else lands in the
-    # new commit's bm file. Hydrated lists must therefore never be mutated
-    # in place; manifest builders construct new dicts/lists (they do).
-    # bm segments also carry per-file column stats ("stats") used for scan
-    # pruning; they ride the same hydrate/dehydrate path as _file_stats.
-
-    @property
-    def _bm_dir(self) -> str:
-        return os.path.join(self._manifest_dir, "bm")
-
-    def _load_seg(self, ref: str) -> dict:
-        """Parse (once, cached — bm files are immutable) the bm segment a
-        ref names: ``{"files": {bucket: [paths]}, "stats": {...}?}``."""
-        seg = self._bm_cache.get(ref)
-        if seg is None:
-            fname = ref.split("#", 1)[0]
-            data = json.loads(
-                self.io.read_text(os.path.join(self._bm_dir, fname)))
-            for sid, s in data["segments"].items():
-                self._bm_cache.setdefault(f"{fname}#{sid}", s)
-            seg = self._bm_cache[ref]
-        return seg
-
-    def _hydrate(self, man: dict) -> dict:
-        """Resolve bm refs into the legacy in-memory manifest shape.
-        ``_files_src`` / per-layer ``_src`` record where each hydrated list
-        came from so _dehydrate can reuse refs (keys starting with ``_``
-        never serialize)."""
-        stats: dict[str, dict] = {}
-        files = man.get("files") or {}
-        if any(isinstance(v, str) for v in files.values()):
-            src: dict[str, str] = {}
-            out: dict[str, list] = {}
-            seen: set[str] = set()
-            for b, v in files.items():
-                if isinstance(v, str):
-                    seg = self._load_seg(v)
-                    out[b] = seg["files"][b]
-                    src[b] = v
-                    if v not in seen:
-                        seen.add(v)
-                        stats.update(seg.get("stats") or {})
-                else:
-                    out[b] = v
-            man["files"] = out
-            man["_files_src"] = src
-        for layer in man.get("deltas") or []:
-            lf = layer["files"]
-            if isinstance(lf, str):
-                drop = tuple(sorted(layer.pop("drop", ())))
-                view = self._bm_view_cache.get((lf, drop))
-                seg = self._load_seg(lf)
-                if view is None:
-                    dropped = set(drop)
-                    view = {b: fl for b, fl in seg["files"].items()
-                            if b not in dropped}
-                    self._bm_view_cache[(lf, drop)] = view
-                layer["files"] = view
-                layer["_src"] = [lf, list(drop)]
-                stats.update(seg.get("stats") or {})
-        if stats:
-            man["_file_stats"] = stats
-        return man
-
-    def _dehydrate(self, manifest: dict) -> tuple[dict, dict | None, str]:
-        """Split a hydrated manifest into (serializable manifest, bm payload
-        or None, bm file name): buckets/layers whose hydrated list objects
-        are unchanged keep their parent's ref; everything else becomes a
-        segment of this commit's single new bm file."""
-        fname = (f"bm-v{manifest['version']}-"
-                 f"{str(manifest['snapshot_id'])[:12]}.json")
-        stats = manifest.get("_file_stats") or {}
-        segments: dict[str, dict] = {}
-
-        def _seg(seg_id: str, fl: dict) -> str:
-            st = {p: stats[p] for flist in fl.values() for p in flist
-                  if p in stats}
-            segments[seg_id] = {"files": fl, **({"stats": st} if st else {})}
-            return f"{fname}#{seg_id}"
-
-        src = manifest.get("_files_src") or {}
-        files_ser: dict[str, Any] = {}
-        new_base: dict[str, list] = {}
-        for b, fl in (manifest.get("files") or {}).items():
-            ref = src.get(b)
-            if ref is not None:
-                seg = self._bm_cache.get(ref)
-                if seg is not None and seg["files"].get(b) is fl:
-                    files_ser[b] = ref
-                    continue
-            new_base[b] = fl
-        if new_base:
-            base_ref = _seg("base", new_base)
-            for b in new_base:
-                files_ser[b] = base_ref
-        deltas_ser = []
-        for i, layer in enumerate(manifest.get("deltas") or []):
-            lf = layer["files"]
-            ser = {k: v for k, v in layer.items()
-                   if k != "files" and not k.startswith("_")}
-            s = layer.get("_src")
-            if s:
-                full = self._bm_cache.get(s[0])
-                if full is not None and all(
-                    full["files"].get(b) is fl for b, fl in lf.items()
-                ):
-                    drop = sorted(b for b in full["files"] if b not in lf)
-                    deltas_ser.append({**ser, "files": s[0],
-                                       **({"drop": drop} if drop else {})})
-                    continue
-            deltas_ser.append({**ser, "files": _seg(f"d{i}", lf)})
-        out = {k: v for k, v in manifest.items() if not k.startswith("_")}
-        out["files"] = files_ser
-        if "deltas" in out:
-            out["deltas"] = deltas_ser
-        return out, ({"segments": segments} if segments else None), fname
+        """The hydrated manifest of ``version`` (see :meth:`manifest`)."""
+        return self.manifest(version)
 
     # ------------------------------------------------- per-file column stats
     #
@@ -625,277 +358,9 @@ class SnapshotTable:
                 rows[int(b)] = n
         return files, rows, stats
 
-    def _commit(self, manifest: dict, parent: int | None = None) -> None:
-        """Write the manifest with exclusive-create (conflict detection), then
-        atomically swing this ref's pointer (main's ``_current`` or the
-        branch file). On a real object store this would be a
-        metastore/catalog swap; locally os.replace is atomic.
-
-        ``parent`` records the numeric base version — needed because branch
-        commits and publishes make version numbers jump, so ``version - 1``
-        is no longer always the parent (chain walkers fall back to it for
-        pre-branch manifests).
-
-        **Arbitration is on the PARENT, not the version number**: before
-        writing the manifest, the committer claims the per-ref SUCCESSOR
-        TOKEN ``.next-<ref>-v<parent>`` with an exclusive create — only
-        one successor of a given base can ever commit on a ref, no matter
-        what version numbers the writers allocated. (Number-collision
-        arbitration alone is insufficient once numbers can diverge: two
-        same-ref writers holding different numbers would both commit, and
-        the later full-listing manifest would silently drop the earlier
-        writer's files.) Crash recovery: a token whose manifest exists but
-        whose pointer never swung is ROLLED FORWARD by the next conflicting
-        writer; a token whose manifest never appeared is reaped after a
-        staleness horizon.
-
-        Raises :class:`CommitConflict` when another writer claimed the
-        successor slot (or the version number) first — ``merge()``/
-        ``compact()`` catch it and rebase against the new snapshot
-        (optimistic concurrency, the Iceberg commit loop)."""
-        version = manifest["version"]
-        if parent is not None:
-            manifest["parent"] = parent
-        if self.ref != "main":
-            manifest["ref"] = self.ref
-        # commit wall clock (epoch micros) — the single choke point stamps
-        # every snapshot (create/merge/compact/expire), enabling
-        # version_as_of()/read_as_of() wall-clock time travel
-        now_us = time.time_ns() // 1_000
-        manifest["committed_at"] = now_us
-        token = (
-            os.path.join(self._manifest_dir, f".next-{self.ref}-v{parent}")
-            if parent is not None else None
-        )
-        if token is not None:
-            try:
-                self.io.write_exclusive(token, f"{version} {now_us}")
-            except FileExistsError as e:
-                self._handle_taken_token(token, parent)
-                self._alloc_global = True
-                raise CommitConflict(
-                    f"v{parent} already has a committed successor on "
-                    f"ref {self.ref!r}"
-                ) from e
-        # serialize incrementally: newly-written buckets/layers go to ONE
-        # bm file (O(touched) metadata), everything else stays a ref
-        ser, bm_payload, bm_fname = self._dehydrate(manifest)
-        bm_path = os.path.join(self._bm_dir, bm_fname)
-        if bm_payload is not None:
-            self.io.makedirs(self._bm_dir)
-            self.io.write_atomic(bm_path, json.dumps(bm_payload))
-
-        def _abort_bm() -> None:
-            if bm_payload is not None:
-                self.io.remove_file(bm_path)
-
-        target = os.path.join(self._manifest_dir, f"v{version}.json")
-        try:
-            self.io.write_exclusive(target, json.dumps(ser, default=str))
-        except FileExistsError as e:
-            # number taken by ANOTHER ref's writer: release our successor
-            # slot (we are aborting) and rebase with a fresh number
-            if token is not None:
-                self.io.remove_file(token)
-            _abort_bm()
-            self._alloc_global = True
-            raise CommitConflict(
-                f"snapshot v{version} already committed by a concurrent writer"
-            ) from e
-        if parent is None:
-            # table create: the pointer doesn't exist yet, nothing to race
-            self.io.write_atomic(self._current_path, str(version))
-            return
-        # ---- fenced pointer swing. The staleness reap makes the successor
-        # token a LEASE, not a lock: a writer stalled past _TOKEN_STALE_US
-        # between token claim and manifest write (GC pause, object-store
-        # retry storm) can have its token reaped and a second successor of
-        # the same parent committed. Re-read the token immediately before
-        # the swing and abort if it no longer names this writer's version —
-        # the manifest we just wrote is removed so no later roll-forward
-        # can resurrect it. (Residual window: a reap between this check and
-        # the CAS below; the CAS then fails closed because the pointer has
-        # moved, or the chain check catches it.)
-        try:
-            tok_winner = int(self.io.read_text(token).split()[0])
-        except (FileNotFoundError, ValueError, IndexError):
-            tok_winner = None
-        if tok_winner != version:
-            self.io.remove_file(target)
-            _abort_bm()
-            self._alloc_global = True
-            raise CommitConflict(
-                f"successor token for v{parent} on ref {self.ref!r} was "
-                f"reaped while this writer stalled — another successor may "
-                f"have committed; rebase and retry"
-            )
-        # CAS, not a blind replace: the pointer must still be at `parent`.
-        # If it moved, the ONLY legitimate mover is a crash roll-forward of
-        # THIS commit (a conflicting writer saw token+manifest and swung it
-        # for us, possibly with further commits already on top) — verify by
-        # walking the ref's chain back to parent; our version being in it
-        # means we are committed. Anything else is a protocol violation →
-        # conflict, fail closed.
-        if not self.io.compare_and_swap(
-            self._current_path, str(parent), str(version)
-        ):
-            cur = self.current_version()
-            if cur != version and version not in self._chain(
-                cur, stop_after=parent
-            ):
-                self.io.remove_file(target)
-                self.io.remove_file(token)
-                _abort_bm()
-                self._alloc_global = True
-                raise CommitConflict(
-                    f"ref {self.ref!r} moved off v{parent} without adopting "
-                    f"v{version} — concurrent successor won; rebase and retry"
-                )
-
-    # how long an orphaned successor token (writer died between claiming
-    # the slot and writing its manifest) blocks the slot before the next
-    # writer reaps it; long enough that a LIVE writer's microsecond
-    # token→manifest gap can never be mistaken for a corpse
-    _TOKEN_STALE_US = 60_000_000
-
-    def _handle_taken_token(self, token: str, parent: int) -> None:
-        """A successor slot was already claimed. Recover the two crash
-        shapes: (a) winner wrote its manifest but died before the pointer
-        swing → complete the swing; (b) winner died before writing any
-        manifest → after the staleness horizon, reap the token so the slot
-        frees up. Everything else is a plain conflict (the caller rebases
-        and will see the winner's commit)."""
-        try:
-            txt = self.io.read_text(token).split()
-            winner, t_us = int(txt[0]), int(txt[1])
-        except (FileNotFoundError, ValueError, IndexError):
-            return
-        try:
-            cur = self.current_version()
-        except FileNotFoundError:
-            return
-        if cur != parent:
-            return  # the winner's swing already happened; normal conflict
-        wpath = os.path.join(self._manifest_dir, f"v{winner}.json")
-        if self.io.exists(wpath):
-            # crashed between manifest write and pointer swing: roll the
-            # winner forward so the ref isn't stuck on a committed-but-
-            # unpublished snapshot. CAS, not a blind replace — between the
-            # cur==parent check above and this write the live winner (or a
-            # successor of it) may have advanced the pointer, and a blind
-            # replace would move the ref BACKWARDS past committed
-            # snapshots. If the pointer moved, the roll-forward already
-            # happened (or is moot) — skip.
-            self.io.compare_and_swap(
-                self._current_path, str(parent), str(winner)
-            )
-        elif time.time_ns() // 1_000 - t_us > self._TOKEN_STALE_US:
-            # the winner never produced a manifest and is long dead —
-            # free the slot (a live writer's token is microseconds old)
-            self.io.remove_file(token)
-
-    # ------------------------------------------- metadata-only commit rebase
-    #
-    # Losing a commit race does NOT have to mean recomputing the merge. The
-    # data files a losing attempt wrote are a pure function of (its batch,
-    # the touched buckets' state in its base snapshot): if the winner chain
-    # provably did not change those buckets — identical file lists, identical
-    # delta layers, identical schema — the files are still exactly the rows
-    # a serial execution would have produced, and the loser only needs a NEW
-    # MANIFEST on top of the winner (Iceberg's validation-based retry,
-    # recast for hash buckets). At 100 TB this is the difference between
-    # concurrent disjoint writers (multi-stream ingest into different key
-    # ranges, targeted compaction racing an ingest stream) serializing on
-    # METADATA — microseconds — versus re-running a bucket-rewrite job per
-    # conflict. Overlapping writers still take the full recompute path.
-
-    def _rebase_ok(self, parent: dict, cur: dict, touched: list[int],
-                   checkpoint_id: str | None = None,
-                   batch_id: int | None = None) -> bool:
-        """May a commit computed against ``parent`` that touched exactly
-        ``touched`` buckets be re-committed on top of ``cur`` without
-        recomputation? Conservative: any doubt → False (full recompute).
-
-        The serializability argument: rebasing picks the "loser committed
-        first" linearization of two concurrent commits. That is sound iff
-        the loser's output is bit-identical under either order, which the
-        bucket-disjointness checks below guarantee — the winner never read
-        or wrote the loser's buckets, and vice versa (the winner committed
-        without seeing ours at all). MoR layer ordering stays monotone per
-        bucket: a rebased layer's physical ``__commit`` stamp X exceeds
-        every earlier layer in its buckets (they are all <= our base
-        version < X) and every later layer allocates past our manifest
-        version Y > X."""
-        if cur["version"] == parent["version"]:
-            return False  # pointer never moved (stale token) — nothing to rebase onto
-        if batch_id is not None and checkpoint_id is not None and (
-            cur["checkpoints"].get(checkpoint_id, -1) >= batch_id
-        ):
-            return False  # a twin already committed this very batch → skip path
-        if (
-            cur.get("n_buckets") != parent.get("n_buckets")  # rebucket
-            or cur.get("write_mode", "cow") != parent.get("write_mode", "cow")
-            or cur.get("schema") != parent.get("schema")  # winner evolved
-            or cur.get("last_field_id") != parent.get("last_field_id")
-        ):
-            return False
-
-        def _layers_on(man: dict, b: str) -> list[tuple[int, list[str]]]:
-            return [
-                (layer["commit"], layer["files"][b])
-                for layer in man.get("deltas") or []
-                if b in layer["files"]
-            ]
-
-        for bk in touched:
-            b = str(bk)
-            if cur["files"].get(b) != parent["files"].get(b):
-                return False  # winner rewrote/compacted one of our buckets
-            if _layers_on(cur, b) != _layers_on(parent, b):
-                return False  # winner layered onto one of our buckets
-            if (cur.get("bucket_splits", {}).get(b)
-                    != parent.get("bucket_splits", {}).get(b)):
-                return False
-        return True
-
-    def _commit_with_rebase(
-        self,
-        build,
-        man: dict,
-        version: int,
-        touched: list[int],
-        checkpoint_id: str | None = None,
-        batch_id: int | None = None,
-        max_rebases: int = 5,
-    ) -> tuple[dict, int]:
-        """Commit ``build(man, version)``; on losing the race, retry
-        metadata-only against each successive winner while
-        :meth:`_rebase_ok` holds (the data files already written under the
-        original attempt's unique dir are referenced as-is — dir names keep
-        the original version tag, which GC and readers never interpret).
-        Returns ``(committed manifest, n_metadata_rebases)``; re-raises
-        :class:`CommitConflict` for the caller's full-recompute loop when
-        the winner overlapped."""
-        manifest = build(man, version)
-        try:
-            self._commit(manifest, parent=man["version"])
-            return manifest, 0
-        except CommitConflict:
-            for attempt in range(1, max_rebases + 1):
-                cur = self._manifest()
-                if not self._rebase_ok(man, cur, touched,
-                                       checkpoint_id, batch_id):
-                    raise
-                rebased = build(cur, self._next_version(cur))
-                try:
-                    self._commit(rebased, parent=cur["version"])
-                    return rebased, attempt
-                except CommitConflict:
-                    continue  # another winner landed mid-rebase — re-read
-            raise
-
     def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self._manifest(version)["schema"]))
+        return T.StructType.fromJson(
+            json.loads(self.stored_manifest(version)["schema"]))
 
     # --------------------------------------------------------------- create
     @classmethod
@@ -973,18 +438,20 @@ class SnapshotTable:
     @classmethod
     def load(cls, spark: SparkSession, path: str, model: ModelSchema,
              io: LocalCommitIO | None = None) -> "SnapshotTable":
+        """Open the table at ``path``: raises when there is none, or when
+        its current manifest is of another ``format_version``."""
         table = cls(spark, path, model, io=io)
-        if not table.io.exists(table._current_path):
-            raise DiffSyncSparkError(f"no SnapshotTable at {path}")
+        try:
+            table.stored_manifest()
+        except FileNotFoundError:
+            raise DiffSyncSparkError(f"no SnapshotTable at {path}") from None
         return table
 
     # ----------------------------------------------------------------- read
     def _full_schema(self, public: T.StructType) -> T.StructType:
-        has_ids = _schema_has_ids(public)
-
         def _meta(name: str, dtype: T.DataType) -> T.StructField:
-            md = {_FIELD_ID_KEY: _META_FIELD_IDS[name]} if has_ids else None
-            return T.StructField(name, dtype, True, md)
+            return T.StructField(name, dtype, True,
+                                 {_FIELD_ID_KEY: _META_FIELD_IDS[name]})
 
         fields = list(public.fields)
         fields.append(_meta(META_SEQ, T.LongType()))
@@ -992,21 +459,15 @@ class SnapshotTable:
         return T.StructType(fields)
 
     def _fold_schema(self, full: T.StructType) -> T.StructType:
-        md = (
-            {_FIELD_ID_KEY: _META_FIELD_IDS[META_COMMIT]}
-            if _schema_has_ids(full) else None
-        )
+        md = {_FIELD_ID_KEY: _META_FIELD_IDS[META_COMMIT]}
         return T.StructType(
             full.fields + [T.StructField(META_COMMIT, T.LongType(), True, md)]
         )
 
     def _tag_field_ids(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Alias every written column with its field-id metadata so the
-        parquet footer carries stable ids (no-op on legacy id-less
-        tables). Partition columns (bucket/slot) become directories, not
-        file columns, so they stay untagged."""
-        if not _schema_has_ids(schema):
-            return df
+        parquet footer carries stable ids. Partition columns (bucket/slot)
+        become directories, not file columns, so they stay untagged."""
         # the aliased-Column list depends only on (schema, column order) —
         # cache it on the handle so a replay's micro-batches reuse it
         # (~40 py4j alias round trips per merge otherwise; measured
@@ -1417,13 +878,10 @@ class SnapshotTable:
         """Manifest file pruning for a point lookup: the key's bucket, then
         — when that bucket was written with slot fan-out — only the one
         ``__slot=S`` file set its hash routes to. A hot 64-slot bucket's
-        lookup reads 1/64th of the bucket; legacy flat layouts (no slot
-        dirs) fall back to the whole bucket."""
-        allfiles = man["files"].get(str(bucket), [])
+        lookup reads 1/64th of the bucket."""
         slot = key_hash % int(man.get("bucket_splits", {}).get(str(bucket), 1))
         seg = f"{os.sep}{SLOT}={slot}{os.sep}"
-        pruned = [p for p in allfiles if seg in p]
-        return pruned if pruned else allfiles
+        return [p for p in man["files"].get(str(bucket), []) if seg in p]
 
     def _lookup_delta_files(
         self, man: dict, bucket: int, key_hash: int
@@ -1433,13 +891,10 @@ class SnapshotTable:
         fan-out, since every layer plans its own splits."""
         out: list[str] = []
         for layer in man.get("deltas") or []:
-            allf = layer["files"].get(str(bucket), [])
-            if not allf:
-                continue
             slot = key_hash % int(layer.get("splits", {}).get(str(bucket), 1))
             seg = f"{os.sep}{SLOT}={slot}{os.sep}"
-            pruned = [p for p in allf if seg in p]
-            out.extend(pruned if pruned else allf)
+            out.extend(p for p in layer["files"].get(str(bucket), [])
+                       if seg in p)
         return out
 
     def lookup_many(
@@ -1491,8 +946,8 @@ class SnapshotTable:
             )
             s_mod = F.coalesce(split_map[b_col], F.lit(1))
         else:
-            # no splits recorded (fresh table / pre-fanout manifest): one
-            # slot per bucket — a zero-arg create_map() has VOID key type
+            # no splits recorded (nothing written yet): one slot per
+            # bucket — a zero-arg create_map() has VOID key type
             # and fails analysis, so don't build one
             s_mod = F.lit(1)
         s_col = F.pmod(F.xxhash64(*ids), s_mod).cast("int")
@@ -1508,11 +963,7 @@ class SnapshotTable:
                 files.extend(allf)
                 continue
             segs = [f"{os.sep}{SLOT}={s}{os.sep}" for s in slots]
-            for p in allf:
-                # keep needed-slot files; legacy flat files (no slot dir)
-                # can hold any key of the bucket, so they always stay
-                if f"{os.sep}{SLOT}=" not in p or any(g in p for g in segs):
-                    files.append(p)
+            files.extend(p for p in allf if any(g in p for g in segs))
         full = self._full_schema(public)
         # merge-on-read: layers of the needed buckets join the probe too
         # (bucket-pruned; layers are batch-sized, so per-layer slot pruning
@@ -1646,7 +1097,7 @@ class SnapshotTable:
             result["commit_retries"] = n
             return result
 
-        return _retrying(attempt, max_commit_retries)
+        return retrying(attempt, max_commit_retries)
 
     def _merge_attempt(
         self,
@@ -1754,7 +1205,7 @@ class SnapshotTable:
         # layer and readers fold it in (see _append_commit). Decided from
         # the manifest alone, so this path needs no pass over the batch
         # before its one write query.
-        if (man.get("write_mode", "cow") == "mor" and mode == "lww"
+        if (man["write_mode"] == "mor" and mode == "lww"
                 and (any(man["files"].values()) or man.get("deltas"))):
             if not version_col:
                 raise DiffSyncSparkError("lww merge requires model.version_cols")
@@ -1998,11 +1449,11 @@ class SnapshotTable:
             f for f in batch_schema.fields
             if f.name not in known and f.name not in reserved
         ]
-        if _schema_has_ids(public) and new_fields:
+        if new_fields:
             # evolution-added columns get FRESH ids past the monotone
             # counter — a column re-added after drop_column never reuses
             # the dropped id, so old files' values cannot resurrect
-            next_id = _next_field_id(man, public)
+            next_id = _next_field_id(man)
             if next_id + len(new_fields) - 1 > _MAX_USER_FIELD_ID:
                 raise DiffSyncSparkError("field-id space exhausted")
             new_fields = [
@@ -2254,15 +1705,10 @@ class SnapshotTable:
         return out, counts
 
     def _list_bucket_files(self, data_dir: str, bk: int) -> list[str]:
-        """Parquet files of one bucket in a freshly-written data dir —
-        both the slot layout (``_bucket=K/__slot=S/part-*``) and the legacy
-        flat layout (``_bucket=K/part-*``)."""
+        """Parquet files of one bucket in a freshly-written data dir
+        (``_bucket=K/__slot=S/part-*``)."""
         bdir = os.path.join(data_dir, f"{BUCKET}={bk}")
-        out = [
-            os.path.join(bdir, fn)
-            for fn in self.io.list_files(bdir)
-            if fn.endswith(".parquet")
-        ]
+        out: list[str] = []
         for entry in self.io.list_dirs(bdir):
             if entry.startswith(f"{SLOT}="):
                 sdir = os.path.join(bdir, entry)
@@ -2474,7 +1920,7 @@ class SnapshotTable:
                     b: written.live[int(b)] if b in new_files else parent_live[b]
                     for b in files
                 }
-            return _next_manifest(
+            return next_manifest(
                 base, version, snapshot_id, evolved, checkpoint_id, batch_id,
                 lineage_rows, quarantine_dir, new_stats, files=files,
                 deltas=deltas, bucket_rows=bucket_rows,
@@ -2886,7 +2332,7 @@ class SnapshotTable:
             bucket_rows = dict(base.get("bucket_rows", {}))
             for bk, n in written.rows.items():
                 bucket_rows[str(bk)] = bucket_rows.get(str(bk), 0) + n
-            return _next_manifest(
+            return next_manifest(
                 base, version, snapshot_id, evolved, checkpoint_id, batch_id,
                 lineage_rows, quarantine_dir, written.stats, deltas=deltas,
                 bucket_rows=bucket_rows,
@@ -2940,7 +2386,7 @@ class SnapshotTable:
         force-overwriting it with rows computed from a stale snapshot
         (merge()'s internal rebase replays the same batch, which is
         convergent for LWW but NOT for authoritative force batches)."""
-        return _retrying(lambda _: self.merge(
+        return retrying(lambda _: self.merge(
             build_batch(), checkpoint_id=checkpoint_id, batch_id=batch_id,
             mode="force", max_commit_retries=0,
         ), max_commit_retries)
@@ -3033,12 +2479,8 @@ class SnapshotTable:
         # walk THIS ref's ancestry chain, not the shared number space —
         # main time-travel must never resolve to an unpublished branch
         # snapshot that happens to carry an in-between version number
-        for v in sorted(self._chain(self.current_version()), reverse=True):
-            try:
-                man = self._manifest(v)
-            except FileNotFoundError:
-                continue  # expired
-            at = man.get("committed_at")
+        for v in self.chain(self.current_version()).versions:
+            at = self.stored_manifest(v).get("committed_at")
             if at is not None and at <= want_us:
                 best = v
                 break  # the chain is monotone in commit time
@@ -3100,12 +2542,13 @@ class SnapshotTable:
         cur = self.current_version()
         # this ref's ancestry, plus retention-proof tagged snapshots that
         # sit beyond an expiry gap the chain walk cannot cross
-        listed = sorted(set(self._chain(cur)) | set(self.tags().values()))
+        listed = sorted(set(self.chain(cur).versions)
+                        | set(self.tags().values()))
         for v in listed:
             try:
                 man = self._manifest(v)
             except FileNotFoundError:
-                continue  # expired
+                continue  # a tag on an expired version
             schema = T.StructType.fromJson(json.loads(man["schema"]))
             rows.append({
                 "version": v,
@@ -3113,14 +2556,14 @@ class SnapshotTable:
                 "parent_snapshot_id": man.get("parent_snapshot_id"),
                 "is_current": v == cur,
                 "n_columns": len(schema.fields),
-                "n_buckets_with_data": len(man.get("files", {})),
-                "n_files": sum(len(fl) for fl in man.get("files", {}).values()),
+                "n_buckets_with_data": len(man["files"]),
+                "n_files": sum(len(fl) for fl in man["files"].values()),
                 "n_rows": sum(man.get("bucket_rows", {}).values()) or None,
                 "n_live_rows": (
                     sum(man["bucket_live_rows"].values())
                     if man.get("bucket_live_rows") is not None else None
                 ),
-                "n_checkpoints": len(man.get("checkpoints", {})),
+                "n_checkpoints": len(man["checkpoints"]),
                 "has_quarantine": bool(man.get("quarantine_dir")),
                 "committed_at_us": man.get("committed_at"),
                 "n_delta_layers": len(man.get("deltas") or []),
@@ -3171,13 +2614,9 @@ class SnapshotTable:
                 warn_fallback_once("files() row counts", e)
                 return None
 
-        def _slot(p: str) -> int | None:
-            m = re.search(r"__slot=(\d+)", p)
-            return int(m.group(1)) if m else None
-
         def _row(b, p, kind, commit):
             return {
-                "bucket": int(b), "slot": _slot(p), "path": p, "kind": kind,
+                "bucket": int(b), "slot": _slot_of(p), "path": p, "kind": kind,
                 "delta_commit": commit, "size_bytes": _size(p),
                 "n_rows": _nrows(p),
                 "stats_json": (json.dumps(stats[p], sort_keys=True, default=str)
@@ -3186,7 +2625,7 @@ class SnapshotTable:
 
         rows = [
             _row(b, p, "base", None)
-            for b, fl in man.get("files", {}).items() for p in fl
+            for b, fl in man["files"].items() for p in fl
         ] + [
             _row(b, p, "delta", int(layer["commit"]))
             for layer in man.get("deltas") or []
@@ -3207,7 +2646,7 @@ class SnapshotTable:
         manifest math, no file IO — the view that tells an operator which
         buckets need compaction before any data is read."""
         man = self._manifest(version)
-        base = man.get("files", {})
+        base = man["files"]
         deltas = man.get("deltas") or []
         bucket_rows = man.get("bucket_rows") or {}
         live = man.get("bucket_live_rows")
@@ -3235,8 +2674,7 @@ class SnapshotTable:
         table). A ref whose manifest was expired still lists, with NULL
         snapshot details."""
         entries = [("main", "branch",
-                    int(self.io.read_text(
-                        os.path.join(self.path, "_current")).strip()))]
+                    self._read_pointer(os.path.join(self.path, "_current")))]
         entries += [(n, "branch", v) for n, v in sorted(self.branches().items())]
         entries += [(n, "tag", v) for n, v in sorted(self.tags().items())]
         rows = []
@@ -3278,7 +2716,7 @@ class SnapshotTable:
         if not total:
             return None
         changed = {
-            r["partition"] for r in man.get("lineage", [])
+            r["partition"] for r in man["lineage"]
             if r["partition"] >= 0 and any(
                 r.get(k) for k in ("n_create", "n_update", "n_delete",
                                    "n_append"))
@@ -3290,13 +2728,14 @@ class SnapshotTable:
         T6; versions dropped by ``expire_snapshots`` are skipped)."""
         rows = []
         cur = self.current_version()
-        listed = sorted(set(self._chain(cur)) | set(self.tags().values()))
+        listed = sorted(set(self.chain(cur).versions)
+                        | set(self.tags().values()))
         for v in listed:
             try:
                 man = self._manifest(v)
             except FileNotFoundError:
-                continue  # expired snapshot
-            for r in man.get("lineage", []):
+                continue  # a tag on an expired version
+            for r in man["lineage"]:
                 # n_append: rows landed as a merge-on-read delta layer
                 # (commits predating the field, and all copy-on-write
                 # commits, default to 0)
@@ -3400,32 +2839,18 @@ class SnapshotTable:
         """
         if to_version is None:
             to_version = self.current_version()
-        if not per_commit:
+        if not per_commit or to_version <= from_version:
             return self._cdf_frame(from_version, to_version)
-        versions = sorted(self._chain(to_version, stop_after=from_version))
-        if not versions:
-            return self._cdf_frame(from_version, to_version)
-        lowest = versions[0]
-        try:
-            low_parent = int(self._manifest(lowest).get(
-                "parent", lowest - 1))
-        except FileNotFoundError:
-            # _chain appends a version BEFORE discovering its manifest is
-            # gone, so the gap can sit at versions[0] itself
+        walk = self.chain(to_version, stop_after=from_version)
+        if walk.expired or walk.end != from_version:
             raise DiffSyncSparkError(
                 f"ancestry expired between v{from_version} and "
                 f"v{to_version} — per-commit feed cannot be reconstructed "
-                f"(v{lowest} already expired)"
-            ) from None
-        if low_parent != from_version:
-            raise DiffSyncSparkError(
-                f"ancestry expired between v{from_version} and "
-                f"v{to_version} — per-commit feed cannot be reconstructed "
-                f"(walk stopped at v{lowest}, parent v{low_parent})"
+                f"(walk stopped at v{walk.end})"
             )
         out = None
         prev = from_version
-        for v in versions:
+        for v in reversed(walk.versions):
             step = self._cdf_frame(prev, v)
             # allowMissingColumns: a column added mid-range is absent from
             # earlier hops' frames and reads NULL there — the same
@@ -3579,7 +3004,7 @@ class SnapshotTable:
         ``{"skipped": True}``. Loses any commit race gracefully: rebase =
         re-read the (new) current snapshot and re-select, bounded by
         ``max_commit_retries``."""
-        return _retrying(lambda _: self._compact_attempt(
+        return retrying(lambda _: self._compact_attempt(
             min_files, buckets, purge_tombstones_older_than, zorder,
             zorder_files_per_bucket,
         ), max_commit_retries)
@@ -3702,8 +3127,8 @@ class SnapshotTable:
         full pair of snapshots and still returns only real row changes.
 
         Loses a commit race like compact: re-read, re-select, retry."""
-        return _retrying(lambda _: self._rebucket_attempt(n_buckets),
-                         max_commit_retries)
+        return retrying(lambda _: self._rebucket_attempt(n_buckets),
+                        max_commit_retries)
 
     def _rebucket_attempt(self, n_buckets: int) -> dict[str, Any]:
         if n_buckets < 1:
@@ -3741,7 +3166,7 @@ class SnapshotTable:
             list(range(n_buckets)), public, f"rebucket_v{new_version}",
         )
         files = written.files
-        self._commit(_next_manifest(
+        self._commit(next_manifest(
             man, new_version, snapshot_id, public, new_stats=written.stats,
             n_buckets=n_buckets, files=files, deltas=None,
             bucket_rows={str(b): n for b, n in written.rows.items()},
@@ -3789,6 +3214,10 @@ class SnapshotTable:
 
         - every referenced data file (base and delta layer) EXISTS;
         - no file is claimed by two buckets or two layers;
+        - every file sits in a ``__slot=S`` dir with ``S`` below its
+          bucket's committed split (the layer's own split for a layer
+          file): lookups prune to the slot a key hashes to, so a file
+          outside the split is a row no lookup can find;
         - the schema parses and its field ids are unique and within the
           manifest's ``last_field_id`` watermark;
         - delta-layer commit numbers do not exceed the snapshot version;
@@ -3815,16 +3244,19 @@ class SnapshotTable:
 
         owner: dict[str, str] = {}
         n_files = 0
-        groups = [(f"bucket {b} (base)", fl)
-                  for b, fl in man.get("files", {}).items()]
+        splits = man.get("bucket_splits", {})
+        groups = [(f"bucket {b} (base)", fl, int(splits.get(b, 1)))
+                  for b, fl in man["files"].items()]
         for layer in man.get("deltas") or []:
             c = int(layer["commit"])
             if c > v:
                 issue("error", "layer_commit_future",
                       f"delta layer commit v{c} exceeds snapshot v{v}")
-            groups += [(f"bucket {b} (layer v{c})", fl)
+            lsplits = layer.get("splits", {})
+            groups += [(f"bucket {b} (layer v{c})", fl,
+                        int(lsplits.get(b, 1)))
                        for b, fl in layer["files"].items()]
-        for where, fl in groups:
+        for where, fl, split in groups:
             for p in fl:
                 n_files += 1
                 if p in owner:
@@ -3833,10 +3265,15 @@ class SnapshotTable:
                 owner[p] = where
                 if not os.path.exists(p):
                     issue("error", "file_missing", f"{where}: {p}")
+                slot = _slot_of(p)
+                if slot is None or slot >= split:
+                    issue("error", "slot_outside_split",
+                          f"{where}: {p} is not in a slot below the "
+                          f"split {split}")
         try:
             schema = T.StructType.fromJson(json.loads(man["schema"]))
             ids_seen: dict[int, str] = {}
-            last = int(man.get("last_field_id") or 0)
+            last = man["last_field_id"]
             for f in schema.fields:
                 fid = (f.metadata or {}).get(_FIELD_ID_KEY)
                 if fid is None:
@@ -3846,7 +3283,7 @@ class SnapshotTable:
                           f"id {fid} on both {ids_seen[fid]!r} and "
                           f"{f.name!r}")
                 ids_seen[fid] = f.name
-                if last and fid > last:
+                if fid > last:
                     issue("error", "field_id_past_watermark",
                           f"{f.name!r} has id {fid} > last_field_id {last}"
                           " — a future evolution could collide")
@@ -3860,21 +3297,12 @@ class SnapshotTable:
         qdir = man.get("quarantine_dir")
         if qdir and not os.path.exists(qdir):
             issue("warn", "quarantine_missing", qdir)
-        chain = self._chain(v)
-        if chain and chain[-1] != 1:
-            # the walk appends a version BEFORE discovering its manifest
-            # is gone, so the gap may sit at chain[-1] itself
-            tail = chain[-1]
-            try:
-                parent = int(self._manifest(tail).get("parent", tail - 1))
-                detail = (f"ancestry walk stops at v{tail} (parent "
-                          f"v{parent} expired)")
-            except FileNotFoundError:
-                reach = chain[-2] if len(chain) > 1 else v
-                detail = (f"v{tail} already expired; chain readable down "
-                          f"to v{reach}")
+        walk = self.chain(v)
+        if walk.expired:
             issue("info", "chain_gap",
-                  detail + " — history/per-commit feeds reach this far")
+                  f"ancestry walk stops at v{walk.versions[-1]} (parent "
+                  f"v{walk.end} expired) — history/per-commit feeds reach "
+                  "this far")
         live_rows = man.get("bucket_live_rows")
         if check_counts and (man.get("bucket_rows") or live_rows is not None):
             # layered buckets are excluded: their manifest counts track
@@ -3882,7 +3310,7 @@ class SnapshotTable:
             # compact() re-establishes a comparable number
             layered = {int(b) for lay in man.get("deltas") or []
                        for b in lay["files"]}
-            plain = [int(b) for b in man.get("files", {})
+            plain = [int(b) for b in man["files"]
                      if int(b) not in layered]
             public = T.StructType.fromJson(json.loads(man["schema"]))
             # bucket with THIS manifest's n_buckets — the current layout
@@ -3908,7 +3336,7 @@ class SnapshotTable:
                               f"bucket {b}: manifest says {want}, "
                               f"scan found {n}")
             if live_rows is not None:
-                holding = {b for b, fl in man.get("files", {}).items() if fl}
+                holding = {b for b, fl in man["files"].items() if fl}
                 holding |= {str(b) for b in layered}
                 for b in sorted(holding - set(live_rows), key=int):
                     issue("error", "bucket_live_rows_missing",
@@ -3927,9 +3355,7 @@ class SnapshotTable:
         anything.
 
         Scope: only dirs matching the per-attempt ``v{N}-{sid}`` naming are
-        candidates — legacy ``v{N}`` dirs (pre-suffix layout) are never
-        touched, since old manifests have no ``quarantine_dir`` key to
-        vouch for them.
+        candidates.
 
         In-flight-writer safety: dirs tagged less than ``min_versions_old``
         versions behind current are never touched. The default (1) is safe
@@ -3964,10 +3390,9 @@ class SnapshotTable:
             ]
             for fl in all_file_lists:
                 for p in fl:
-                    # file layout: .../data/v{N}-{sid}/_bucket=K[/__slot=S]/
-                    # part-*.parquet — find the v{N}-{sid} component by
-                    # pattern, not by a fixed number of dirname hops, so the
-                    # optional slot level can't shift liveness detection
+                    # file layout: .../data/v{N}-{sid}/_bucket=K/__slot=S/
+                    # part-*.parquet — the v{N}-{sid} component is found
+                    # by pattern
                     for comp in os.path.normpath(p).split(os.sep):
                         if _VDIR_RE.match(comp):
                             live_data_dirs.add(comp)
@@ -3982,12 +3407,9 @@ class SnapshotTable:
             (os.path.join(self.path, "quarantine"), live_quar_dirs),
         ):
             for d in self.io.list_dirs(root):
-                if "-" not in d:
-                    continue  # legacy v{N} layout: not ours to judge
-                try:
-                    ver = int(d.split("-", 1)[0].lstrip("v"))
-                except ValueError:
+                if not _VDIR_RE.match(d):
                     continue
+                ver = int(d[1:].split("-", 1)[0])
                 if ver > cur - min_versions_old:  # possible in-flight attempt
                     continue
                 if d not in live:
@@ -4032,13 +3454,13 @@ class SnapshotTable:
         path = os.path.join(self._refs_dir, name)
         if not self.io.exists(path):
             raise DiffSyncSparkError(f"no tag {name!r}")
-        return int(self.io.read_text(path).strip())
+        return self._read_pointer(path)
 
     def tags(self) -> dict[str, int]:
         if not self.io.exists(self._refs_dir):
             return {}
         return {
-            n: int(self.io.read_text(os.path.join(self._refs_dir, n)).strip())
+            n: self._read_pointer(os.path.join(self._refs_dir, n))
             for n in self.io.list_files(self._refs_dir)
         }
 
@@ -4053,18 +3475,18 @@ class SnapshotTable:
         """Metadata-only schema commit with the usual optimistic retry:
         ``mutate(schema, manifest) -> new_schema`` runs against the
         freshly-read manifest each attempt; everything else carries over
-        (:func:`_next_manifest`)."""
+        (:func:`next_manifest`)."""
 
         def attempt(_: int) -> dict[str, Any]:
             man = self._manifest()
             public = T.StructType.fromJson(json.loads(man["schema"]))
-            manifest = _next_manifest(man, self._next_version(man),
-                                      uuid.uuid4().hex, mutate(public, man))
+            manifest = next_manifest(man, self._next_version(man),
+                                     uuid.uuid4().hex, mutate(public, man))
             self._commit(manifest, parent=man["version"])
             return {"version": manifest["version"],
                     "snapshot_id": manifest["snapshot_id"]}
 
-        return _retrying(attempt, max_retries)
+        return retrying(attempt, max_retries)
 
     def add_column(self, name: str, dtype: T.DataType) -> dict[str, Any]:
         """Explicit ADD COLUMN (metadata-only; the implicit path is merge
@@ -4079,15 +3501,12 @@ class SnapshotTable:
                 )
             if name in {f.name for f in public.fields}:
                 raise DiffSyncSparkError(f"column {name!r} already exists")
-            md = None
-            if _schema_has_ids(public):
-                nid = _next_field_id(man, public)
-                if nid > _MAX_USER_FIELD_ID:
-                    raise DiffSyncSparkError("field-id space exhausted")
-                md = {_FIELD_ID_KEY: nid}
-            return T.StructType(
-                public.fields + [T.StructField(name, dtype, True, md)]
-            )
+            nid = _next_field_id(man)
+            if nid > _MAX_USER_FIELD_ID:
+                raise DiffSyncSparkError("field-id space exhausted")
+            return T.StructType(public.fields + [
+                T.StructField(name, dtype, True, {_FIELD_ID_KEY: nid})
+            ])
 
         return self._schema_commit(mutate)
 
@@ -4097,8 +3516,7 @@ class SnapshotTable:
         already-written file resolves under the new name via parquet
         field-id resolution; zero data movement. Identifiers, version
         columns, and the bucketing key cannot rename (their names are the
-        physical layout contract). Legacy tables created before field ids
-        raise — their files carry no ids to resolve by."""
+        physical layout contract)."""
         protected = set(self.model.identifiers) | set(
             self.model.version_cols or ()
         ) | set(self.model.parent_key or ())
@@ -4109,11 +3527,6 @@ class SnapshotTable:
             )
 
         def mutate(public: T.StructType, man: dict) -> T.StructType:
-            if not _schema_has_ids(public):
-                raise DiffSyncSparkError(
-                    "table predates field ids — rename unsupported (files "
-                    "would not resolve); recreate or keep the old name"
-                )
             names = {f.name for f in public.fields}
             if old not in names:
                 raise DiffSyncSparkError(f"no column {old!r}")
@@ -4194,14 +3607,13 @@ class SnapshotTable:
         path = os.path.join(self._branches_dir, name)
         if not self.io.exists(path):
             raise DiffSyncSparkError(f"no branch {name!r}")
-        return int(self.io.read_text(path).strip())
+        return self._read_pointer(path)
 
     def branches(self) -> dict[str, int]:
         if not self.io.exists(self._branches_dir):
             return {}
         return {
-            n: int(self.io.read_text(
-                os.path.join(self._branches_dir, n)).strip())
+            n: self._read_pointer(os.path.join(self._branches_dir, n))
             for n in self.io.list_files(self._branches_dir)
             if not n.startswith(".")  # skip CAS .ptrlock sidecars
         }
@@ -4229,21 +3641,6 @@ class SnapshotTable:
             if tok_pat.fullmatch(f):
                 self.io.remove_file(os.path.join(self._manifest_dir, f))
         self.io.remove_file(os.path.join(self._branches_dir, f".{name}.ptrlock"))
-
-    def _chain(self, head: int, stop_after: int = 0) -> "list[int]":
-        """Version numbers along the parent chain from ``head`` down to
-        (and excluding) ``stop_after``; missing (expired) manifests end
-        the walk. Pre-branch manifests have no ``parent`` field —
-        ``version - 1`` is their parent by construction."""
-        out: list[int] = []
-        v = head
-        while v > stop_after:
-            out.append(v)
-            try:
-                v = int(self._manifest(v).get("parent", v - 1))
-            except FileNotFoundError:
-                break
-        return out
 
     def publish(
         self, name: str, delete_branch: bool = False, max_retries: int = 5
@@ -4275,22 +3672,16 @@ class SnapshotTable:
             pub = main_man.get("published_from")
             if pub and pub.get("branch") == name and pub.get("version") == head:
                 return {"skipped": True, "version": main_cur}
-            chain = self._chain(head, stop_after=main_cur)
-            try:
-                parent_of_last = (
-                    int(self._manifest(chain[-1]).get("parent", chain[-1] - 1))
-                    if chain else head
-                )
-            except FileNotFoundError:
-                # _chain() appends a version BEFORE reading its manifest, so
-                # an expired manifest mid-chain surfaces here — the ancestry
-                # between main and the branch head can no longer be proven
+            walk = self.chain(head, stop_after=main_cur)
+            if walk.expired:
+                # the ancestry between main and the branch head can no
+                # longer be proven
                 raise CommitConflict(
                     f"branch {name!r} (v{head}) ancestry to main v{main_cur} "
                     f"contains expired manifests — cannot verify "
                     f"fast-forward; cut a fresh branch and re-run the audit"
-                ) from None
-            if not chain or parent_of_last != main_cur:
+                )
+            if not walk.versions or walk.end != main_cur:
                 raise CommitConflict(
                     f"branch {name!r} (v{head}) does not descend from main "
                     f"v{main_cur}: cut a fresh branch and re-run the audit"
@@ -4312,7 +3703,7 @@ class SnapshotTable:
                 "snapshot_id": manifest["snapshot_id"],
             }
 
-        return _retrying(attempt, max_retries)
+        return retrying(attempt, max_retries)
 
     def expire_snapshots(self, keep_last: int = 10) -> dict[str, Any]:
         """Drop manifests older than the newest ``keep_last`` versions and

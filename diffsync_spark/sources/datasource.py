@@ -30,10 +30,9 @@ Scope and honesty:
   whole history onto main in one commit — restart the stream from the
   published version (or bootstrap the consumer again); branch commits
   themselves never appear, the reader walks MAIN's parent chain.
-- Planning runs in the driver's Python worker with NO SparkSession, so
-  this module reads manifests standalone; ``tests/test_datasource.py``
-  pins its hydration against ``SnapshotTable._manifest`` to prevent
-  drift.
+- Planning runs in the driver's Python worker with NO SparkSession; it
+  reads manifests through :class:`~diffsync_spark.sinks.manifest.ManifestLog`,
+  the one manifest reader the engine uses too, which needs none.
 - Columns resolve by parquet FIELD ID, by name only for id-less fields
   and files — Spark's own ``fieldId.read`` rule, shared with
   ``SnapshotTable.lookup`` (``sinks/arrow_read.py``).
@@ -46,8 +45,7 @@ diffsync state, ``/root/reference/README.md`` examples) — here the
 from __future__ import annotations
 
 import json
-import os
-from typing import Any, Iterator, Sequence
+from typing import Iterator, Sequence
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -63,43 +61,16 @@ from diffsync_spark.sinks.arrow_read import (
     _project,
     _resolve_columns,
 )
+from diffsync_spark.sinks.manifest import ManifestLog
 
 
 # --------------------------------------------------------------- manifests
 def load_manifest(path: str, version: int | None = None) -> dict:
-    """Standalone manifest read + bm-ref hydration (no SparkSession, no
-    SnapshotTable): the subset of ``SnapshotTable._hydrate`` a reader
-    needs — per-bucket base file lists, delta layers, the schema, and the
-    recorded model declaration."""
-    mdir = os.path.join(path, "manifests")
-    if version is None:
-        with open(os.path.join(path, "_current")) as f:
-            version = int(f.read().strip())
-    with open(os.path.join(mdir, f"v{version}.json")) as f:
-        man = json.load(f)
-
-    bm_cache: dict[str, dict] = {}
-
-    def seg(ref: str) -> dict:
-        fname, sid = ref.split("#", 1)
-        if fname not in bm_cache:
-            with open(os.path.join(mdir, "bm", fname)) as fh:
-                bm_cache[fname] = json.load(fh)["segments"]
-        return bm_cache[fname][sid]
-
-    files = man.get("files") or {}
-    man["files"] = {
-        b: (seg(v)["files"][b] if isinstance(v, str) else v)
-        for b, v in files.items()
-    }
-    for layer in man.get("deltas") or []:
-        lf = layer["files"]
-        if isinstance(lf, str):
-            drop = set(layer.pop("drop", ()))
-            layer["files"] = {
-                b: fl for b, fl in seg(lf)["files"].items() if b not in drop
-            }
-    return man
+    """The hydrated manifest of ``version`` (default: current) of the
+    table at ``path`` — per-bucket base file lists, delta layers, the
+    schema and the recorded model declaration (a :class:`ManifestLog`
+    read over the local filesystem)."""
+    return ManifestLog(path).manifest(version)
 
 
 def _public_schema(man: dict) -> T.StructType:
@@ -240,9 +211,9 @@ class _SnapshotReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        model = self.man.get("model") or {}
-        ids = list(model.get("identifiers") or [])
-        vcols = list(model.get("version_cols") or [])
+        model = self.man["model"]
+        ids = list(model["identifiers"])
+        vcols = list(model["version_cols"])
         has_layers = any(c for _, c in partition.files)
         public_names = [f.name for f in self.schema.fields]
 
@@ -259,12 +230,6 @@ class _SnapshotReader(DataSourceReader):
                     yield from _cast_batches(t, self.schema)
             return
 
-        if not ids:
-            raise ValueError(
-                "merge-on-read fold needs the model declaration in the "
-                "manifest (tables created before round 5 lack it — run "
-                "compact() once from the engine, or read via SnapshotTable)"
-            )
         if all(_file_ids_sorted(p, self.schema, ids, self.batch_rows)
                for p, _ in partition.files):
             yield from self._read_fold_streaming(partition, ids, vcols)
@@ -397,11 +362,11 @@ class _ChangesReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         v = self.options.get("startingversion")
         if v is None:
-            v = load_manifest(self.path)["version"]
+            v = ManifestLog(self.path).current_version()
         return {"version": int(v)}
 
     def latestOffset(self) -> dict:
-        return {"version": load_manifest(self.path)["version"]}
+        return {"version": ManifestLog(self.path).current_version()}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         # Walk MAIN's parent chain, not the raw number range: version
@@ -409,25 +374,21 @@ class _ChangesReader(DataSourceStreamReader):
         # emit unpublished branch layers into main's stream (breaking
         # write-audit-publish isolation) or trip over branch rewrites.
         lo, hi = int(start["version"]), int(end["version"])
-        chain: list[tuple[int, dict]] = []
-        v = hi
-        while v > lo:
-            try:
-                man = load_manifest(self.path, v)
-            except FileNotFoundError:
-                raise ValueError(
-                    f"snapshot v{v} in the streamed range was expired — "
-                    "restart the stream from a retained version"
-                ) from None
-            chain.append((v, man))
-            v = int(man.get("parent", v - 1))
-        if v != lo:
+        log = ManifestLog(self.path)
+        walk = log.chain(hi, stop_after=lo)
+        if walk.expired:
+            raise ValueError(
+                f"snapshot v{walk.end} in the streamed range was expired — "
+                "restart the stream from a retained version"
+            )
+        if walk.end != lo:
             raise ValueError(
                 f"offset v{lo} is not an ancestor of v{hi} on this ref — "
                 "was the stream started from a branch version?"
             )
         parts: list[InputPartition] = []
-        for v, man in reversed(chain):
+        for v in reversed(walk.versions):
+            man = log.manifest(v)
             layer = next((l for l in man.get("deltas") or []
                           if int(l["commit"]) == v), None)
             if layer is not None:

@@ -377,8 +377,6 @@ def pipe_aggregate(
     ``(checkpoint_id, batch_id=upstream_version)`` commit metadata,
     exactly like :func:`pipe_changes`.
     """
-    import json
-
     from pyspark.sql import types as T
 
     from diffsync_spark.errors import DiffSyncSparkError
@@ -398,10 +396,7 @@ def pipe_aggregate(
             )
         batch = fresh.withColumn("op", F.lit("upsert"))
         if dirty is not None:
-            down_schema = T.StructType.fromJson(
-                json.loads(downstream._manifest()["schema"])
-            )
-            payload_fields = [f for f in down_schema.fields
+            payload_fields = [f for f in downstream.schema().fields
                               if f.name not in group_cols]
             gone = dirty.join(fresh, on=group_cols, how="left_anti").select(
                 *group_cols, F.lit("delete").alias("op"),
@@ -429,9 +424,9 @@ def pipe_aggregate(
     ):
         dirty = delta.select(*group_cols).dropDuplicates(group_cols)
         if group_cols == bucket_src:
-            man = upstream._manifest(v_to)
+            n_buckets = upstream.stored_manifest(v_to)["n_buckets"]
             b_col = F.pmod(
-                F.xxhash64(*group_cols), F.lit(man["n_buckets"])
+                F.xxhash64(*group_cols), F.lit(n_buckets)
             ).cast("int")
             buckets = sorted(
                 r[0] for r in

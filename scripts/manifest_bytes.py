@@ -57,17 +57,16 @@ def main() -> None:
         )
         t.merge(batch, checkpoint_id="mb", batch_id=i + 1)
         v = t.current_version()
-        raw = json.loads(
-            t.io.read_text(os.path.join(t._manifest_dir, f"v{v}.json")))
-        manifest_bytes = len(json.dumps(raw))
+        stored = t.stored_manifest(v)
+        manifest_bytes = len(json.dumps(stored))
         bm_bytes = 0
         for fname in {
             r.split("#", 1)[0]
-            for r in raw["files"].values()
-            if isinstance(r, str) and f"v{v}-" in r
+            for r in stored["files"].values()
+            if f"v{v}-" in r
         }:
             bm_bytes += len(t.io.read_text(os.path.join(t._bm_dir, fname)))
-        man = t._manifest(v)  # hydrated: reconstruct the r4 monolith
+        man = t.manifest(v)  # hydrated: reconstruct the r4 monolith
         mono = {k: val for k, val in man.items() if not k.startswith("_")}
         monolithic_bytes = len(json.dumps(mono, default=str))
         n_files = sum(len(fl) for fl in man["files"].values())

@@ -367,7 +367,7 @@ def test_crashed_commit_rolls_forward(spark, tmp_path):
 
     t = _table(spark, tmp_path, n_convs=10)
     base = t.current_version()
-    man = t._manifest(base)
+    man = t.stored_manifest(base)
     ghost_v = base + 5
     ghost = {**man, "version": ghost_v, "parent": base,
              "snapshot_id": "ghost" + "0" * 27,
@@ -384,7 +384,7 @@ def test_crashed_commit_rolls_forward(spark, tmp_path):
                 checkpoint_id="c", batch_id=1)
     assert not r["skipped"]
     assert t.current_version() > ghost_v        # committed ON TOP of ghost
-    assert ghost_v in t._chain(t.current_version())
+    assert ghost_v in t.chain(t.current_version()).versions
     assert t.read().filter("conv_id = 'after-crash'").count() == 1
 
 
@@ -472,8 +472,10 @@ def test_stale_roll_forward_cannot_move_pointer_backwards(spark, tmp_path):
                 return self.stale
             return super().read_text(path)
 
-    stale = SnapshotTable.load(spark, str(tmp_path / "t"), TRANSCRIPT_MODEL,
-                               io=StaleReadIO(t._current_path, str(base)))
+    # the constructor, not load(): load() reads the pointer itself and
+    # would use up the one stale read
+    stale = SnapshotTable(spark, str(tmp_path / "t"), TRANSCRIPT_MODEL,
+                          io=StaleReadIO(t._current_path, str(base)))
     stale._handle_taken_token(token, base)
     # the pointer must still be at base+6 — NOT rolled back to base+5
     assert t.current_version() == base + 6
@@ -535,7 +537,7 @@ def test_reaped_token_fences_the_stalled_writer(spark, tmp_path):
     assert not r["skipped"]
     assert r.get("commit_retries", 0) + r.get("metadata_rebases", 0) >= 1
     cur = t.current_version()
-    assert usurper_v in t._chain(cur)
+    assert usurper_v in t.chain(cur).versions
     # the stalled writer's first-attempt manifest was removed, not left as
     # a roll-forward-able orphan
     assert not t.io.exists(_os.path.join(mdir, f"v{base + 1}.json"))

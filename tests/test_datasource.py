@@ -4,9 +4,8 @@ Batch reads must equal ``SnapshotTable.read()`` on both write modes (the
 executor-side pandas fold vs the engine's Spark fold); the streaming
 changes feed must deliver exactly the layer commits after the offset,
 resume exactly-once from Spark's checkpoint, and refuse copy-on-write
-data commits loudly. ``load_manifest`` (the standalone hydration used in
-the driver's Python worker, where no SparkSession exists) is pinned
-against ``SnapshotTable._manifest`` to prevent drift.
+data commits loudly. Planning reads manifests through the engine's own
+``ManifestLog`` (``load_manifest``), which needs no SparkSession.
 """
 
 from __future__ import annotations
@@ -179,21 +178,21 @@ def test_stream_requires_feed_option_and_batch_rejects_it(spark, tmp_path):
          .option("feed", "changes").load().count())
 
 
-def test_load_manifest_matches_engine_hydration(spark, tmp_path):
-    t = _boot(spark, str(tmp_path / "t"), write_mode="mor")
+def test_batch_read_of_layer_with_drop_list(spark, tmp_path):
+    """A layer partly cleared by a bucket rewrite stays stored as its bm
+    ref plus a drop list; the batch read resolves it as the engine does."""
+    path = str(tmp_path / "t")
+    t = _boot(spark, path, write_mode="mor")
     t1 = T0 + datetime.timedelta(hours=1)
-    t.merge(_chg(spark, [(1, "a", t1, "update")]), checkpoint_id="c",
-            batch_id=1)
+    t.merge(_chg(spark, [(k, f"a{k}", t1, "update") for k in range(20)]),
+            checkpoint_id="c", batch_id=1)
     t.compact(buckets=[0])  # partial clear -> layer ref + drop list
     t.merge(_chg(spark, [(2, "b", t1, "update")]), checkpoint_id="c",
             batch_id=2)
-    ours = load_manifest(str(tmp_path / "t"))
-    theirs = t._manifest()
-    assert ours["files"] == theirs["files"]
-    assert [l["files"] for l in ours.get("deltas") or []] == [
-        l["files"] for l in theirs.get("deltas") or []
-    ]
-    assert ours["model"]["identifiers"] == ["k"]
+    assert any(l.get("drop") for l in t.stored_manifest()["deltas"])  # set-up
+    got = spark.read.format("diffsync_table").option("path", path).load()
+    assert _pairs(got) == _pairs(t.read())
+    assert load_manifest(path)["model"]["identifiers"] == ["k"]
 
 
 def test_stream_ignores_branch_commits(spark, tmp_path):

@@ -1,19 +1,25 @@
-"""The manifest carry rule, pinned over every writer.
+"""The manifest carry rule, pinned over every writer, and the format check.
 
 A commit carries its base's durable table state (checkpoints, model,
-write mode, bloom columns, the field-id watermark) and describes only
-itself in its per-commit fields (lineage, quarantine_dir; only publish()
-sets published_from). Each writer runs right after a publish() whose head
-has a lineage and a quarantine dir, so an inherited per-commit field shows.
+write mode, bloom columns, the field-id watermark, the format version) and
+describes only itself in its per-commit fields (lineage, quarantine_dir;
+only publish() sets published_from). Each writer runs right after a
+publish() whose head has a lineage and a quarantine dir, so an inherited
+per-commit field shows. A manifest of any other format version is refused.
 """
 
 from __future__ import annotations
 
 import datetime
+import json
+import os
 
+import pytest
 from pyspark.sql import types as T
 
+from diffsync_spark.errors import DiffSyncSparkError
 from diffsync_spark.model import ModelSchema
+from diffsync_spark.sinks.manifest import FORMAT_VERSION
 from diffsync_spark.sinks.table import SnapshotTable
 
 MODEL = ModelSchema(
@@ -113,6 +119,32 @@ def test_every_writer_carries_table_state_not_commit_facts(spark, tmp_path):
         if checkpoints:
             want["w"] = i
         assert man["checkpoints"] == want, name
-        for key in ("model", "write_mode", "bloom_cols"):
+        for key in ("model", "write_mode", "bloom_cols", "format_version"):
             assert man[key] == pub[key], (name, key)
         assert man["last_field_id"] == pub["last_field_id"] + new_ids, name
+
+
+@pytest.mark.parametrize("found", [None, FORMAT_VERSION + 1])
+def test_other_format_version_is_refused(spark, tmp_path, found):
+    """A manifest without ``format_version``, or with one this code does
+    not know, is refused by every reader with an error naming both."""
+    path = str(tmp_path / "t")
+    t = _boot(spark, path, "cow")
+    v = t.current_version()
+    assert t.stored_manifest(v)["format_version"] == FORMAT_VERSION  # set-up
+    mpath = os.path.join(path, "manifests", f"v{v}.json")
+    with open(mpath) as f:
+        man = json.load(f)
+    if found is None:
+        del man["format_version"]
+    else:
+        man["format_version"] = found
+    with open(mpath, "w") as f:
+        json.dump(man, f)
+    want = f"format_version {found!r}.*format_version {FORMAT_VERSION}"
+    with pytest.raises(DiffSyncSparkError, match=want):
+        SnapshotTable.load(spark, path, MODEL)
+    with pytest.raises(DiffSyncSparkError, match=want):
+        t.read(version=v)
+    with pytest.raises(Exception, match=want):
+        spark.read.format("diffsync_table").option("path", path).load()

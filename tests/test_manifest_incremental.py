@@ -103,26 +103,6 @@ def test_commit_metadata_bytes_flat_in_table_size(spark, tmp_path):
     assert max(sizes[2:]) <= sizes[1] * 1.25, sizes
 
 
-def test_legacy_inline_manifest_reads_and_migrates(spark, tmp_path):
-    """A pre-incremental manifest (inline file lists) must read unchanged,
-    and the first commit on top of it migrates every bucket into a bm."""
-    t, df = _table(spark, tmp_path)
-    v = t.current_version()
-    raw = _raw_manifest(t, v)
-    # rewrite the current manifest in the LEGACY shape (inline lists)
-    man = t._manifest(v)
-    legacy = {k: v2 for k, v2 in man.items() if not k.startswith("_")}
-    legacy["files"] = {b: list(fl) for b, fl in man["files"].items()}
-    t.io.write_atomic(
-        os.path.join(t._manifest_dir, f"v{v}.json"), json.dumps(legacy))
-    t2 = SnapshotTable.load(spark, str(tmp_path / "t"), TRANSCRIPT_MODEL)
-    assert t2.read().count() == t.read().count()
-    t2.merge(_upsert(df, 1), checkpoint_id="c", batch_id=1)
-    raw2 = _raw_manifest(t2, t2.current_version())
-    assert all(isinstance(r, str) for r in raw2["files"].values())
-    assert t2.read().filter("text like '% r1'").count() == 3
-
-
 def test_expire_gc_keeps_referenced_bm_files(spark, tmp_path):
     t, df = _table(spark, tmp_path)
     for i in range(1, 7):

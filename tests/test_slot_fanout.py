@@ -124,15 +124,3 @@ def test_compact_preserves_fanout_and_gc_spares_live_slots(spark, tmp_path):
     assert tbl.remove_orphans(min_versions_old=0)["removed_dirs"] == []
     assert tbl.read().count() == 120_000
     assert tbl.read(version=boot_version).count() == 120_000
-
-
-def test_lookup_files_legacy_flat_layout_falls_back():
-    """Pre-slot manifests (no bucket_splits, flat file paths) read the whole
-    bucket — no spark needed, pure manifest math."""
-    man = {
-        "n_buckets": 4,
-        "files": {"2": ["/t/data/v3-abc/_bucket=2/part-0.parquet",
-                        "/t/data/v3-abc/_bucket=2/part-1.parquet"]},
-    }
-    got = SnapshotTable._lookup_files(None, man, 2, -12345)
-    assert got == man["files"]["2"]
