@@ -120,7 +120,7 @@ def log_merge(result: dict, table_path: str) -> None:
             for k in (
                 "snapshot_id", "version", "checkpoint_id", "batch_id",
                 "n_create", "n_update", "n_delete", "n_quarantined",
-                "n_buckets_touched", "skipped",
+                "n_buckets_touched", "write_regime", "skipped",
             )
             if k in result
         },

@@ -72,7 +72,7 @@ from diffsync_spark.sinks.arrow_read import (
     _lww_fold_chunk,
     _read_key_rows,
 )
-from diffsync_spark.sinks import keyhash
+from diffsync_spark.sinks import arrow_write, keyhash
 from diffsync_spark.sinks.fsio import LocalCommitIO
 from diffsync_spark.sinks.manifest import ManifestLog, next_manifest, retrying
 
@@ -89,9 +89,11 @@ def _prof(label: str, t0: float) -> None:
     commits unlabelled); a copy-on-write merge adds pre_stats, stats_pass,
     stored_frame_build and mid_to_write_commit before it, a snapshot sync
     snapshot_write_job, quarantine_write and discard_unchanged after it; a
-    merge-on-read append goes through the same step (observe_build,
-    write_job, footer_pass), then quarantine_write and commit; merge()
-    reports merge_total."""
+    merge-on-read append written by Spark goes through the same step
+    (observe_build, write_job, footer_pass), then quarantine_write and
+    commit; one written on the driver reports collect, driver_write,
+    footer_pass, quarantine_write and commit; merge() reports
+    merge_total."""
     if os.environ.get("DIFFSYNC_PROFILE_MERGE"):
         import sys as _sys
 
@@ -185,6 +187,62 @@ def _footer_stats(md, want: set) -> dict[str, list]:
             agg[name] = ([min(cur[0], lo), max(cur[1], hi)]
                          if cur else [lo, hi])
     return {c: v for c, v in agg.items() if v}
+
+
+def _input_files(frame: DataFrame) -> set[str]:
+    """The data files ``frame`` reads, as URL-encoded URIs, found on the
+    driver with no job: its file relations' listings (``inputFiles()``)
+    and the file scans under its RDD-backed leaves. A ``foreachBatch``
+    micro-batch is such a leaf: Spark hands the function the batch's
+    planned RDD, whose lineage ends in the scan of the micro-batch's
+    files."""
+    files = set(frame.inputFiles())
+    leaves = frame._jdf.queryExecution().optimizedPlan().collectLeaves()
+    todo = [leaves.apply(i).rdd() for i in range(leaves.size())
+            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"]
+    seen: set[int] = set()
+    while todo:
+        rdd = todo.pop()
+        if rdd.id() in seen:
+            continue
+        seen.add(rdd.id())
+        if rdd.getClass().getSimpleName() == "FileScanRDD":
+            parts = rdd.filePartitions()
+            for i in range(parts.size()):
+                files.update(pf.urlEncodedPath()
+                             for pf in parts.apply(i).files())
+        deps = rdd.dependencies()
+        todo.extend(deps.apply(i).rdd() for i in range(deps.size()))
+    return files
+
+
+def _decoded_bytes(frame: DataFrame) -> int:
+    """A driver-side estimate of ``frame``'s size once decoded, for the
+    parquet files it reads (:func:`_input_files`): per file, the larger of
+    its footer's row count times Spark's default row width of ``frame``'s
+    schema (the width the optimizer gives a row of unknown size: 8 bytes
+    plus each column's ``defaultSize``, 20 for a string) and its row
+    groups' uncompressed bytes. A compressed file's bytes track neither: a
+    few KB of parquet can hold a million repeated rows. Files with no
+    readable parquet footer count 0 here (the optimizer's estimate counts
+    their bytes)."""
+    try:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+    except ImportError as e:
+        warn_fallback_once("decoded size estimate", e)
+        return 0
+    width = 8 + frame._jdf.schema().defaultSize()
+    total = 0
+    for p in _input_files(frame):
+        try:
+            md = pq.read_metadata(p)
+        except (OSError, ValueError, pa.ArrowException):
+            continue
+        raw = sum(md.row_group(i).total_byte_size
+                  for i in range(md.num_row_groups))
+        total += max(md.num_rows * width, raw)
+    return total
 
 
 def _lineage_row(checkpoint_id: str | None, batch_id: int | None,
@@ -586,7 +644,8 @@ class SnapshotTable(ManifestLog):
         folded = self._fold(fold_in)
         return plain.unionByName(folded) if plain is not None else folded
 
-    def _fits_one_partition(self, *frames: DataFrame) -> bool:
+    def _fits_one_partition(self, *frames: DataFrame,
+                            decoded: bool = False) -> bool:
         """Whether a write's or fold's inputs are small enough to run as ONE
         task. The optimizer's size estimates of ``frames`` (plan
         statistics, read on the driver with no job: a file scan estimates
@@ -605,13 +664,27 @@ class SnapshotTable(ManifestLog):
         slower, while the repo benchmark's writes and folds (under
         0.5 MB each) committed and scanned ~13% faster on one partition.
 
-        When they fit, callers ``coalesce(1)`` their inputs instead of
-        repartitioning them: the one partition satisfies every window,
-        join and bucket fan-out above it, so the plan has no Exchange and
-        runs as one Spark job. Above the budget the plans are unchanged.
-        At the small batches of a CDC tail the cost of a write is its
-        per-query fixed cost (jobs, stages, AQE re-planning between them),
-        not its data volume."""
+        Callers ``coalesce(1)`` their inputs when they fit, instead of
+        repartitioning them. The one partition satisfies every window, join
+        and bucket fan-out above it, so the plan has no Exchange and runs
+        as one Spark job. Above the budget the plans are unchanged. At the
+        small batches of a CDC tail the cost of a write is its per-query
+        fixed cost (jobs, stages, AQE re-planning between them), not its
+        data volume.
+
+        The merge-on-read append (:meth:`_append_commit`) asks with
+        ``decoded=True``. A batch that fits is collected to the driver with
+        one ``toArrow()`` and written there, so it must fit once decoded
+        as well. Each frame then counts the larger of its optimizer
+        estimate and :func:`_decoded_bytes`, which sizes its parquet inputs
+        by their footers' row counts and uncompressed bytes. A few KB of
+        compressed parquet can decode to a million rows, and such a batch
+        takes the shuffled Spark write instead. The estimate is an
+        estimate: a column of long values repeated in every row, which
+        parquet's dictionary stores once, decodes larger than it. A rows x
+        width sweep (``scripts/append_regime_sweep.py``) found the driver
+        faster than the shuffled write at every point up to the budget, so
+        the append has only those two regimes."""
         jvm = self.spark._jvm
         budget = min(
             jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -619,9 +692,12 @@ class SnapshotTable(ManifestLog):
             self.spark._jsparkSession.sessionState().conf()
             .autoBroadcastJoinThreshold(),
         )
-        return sum(
-            f._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            for f in frames
+        ests = [int(str(f._jdf.queryExecution().optimizedPlan().stats()
+                        .sizeInBytes())) for f in frames]
+        if sum(ests) > budget:
+            return False
+        return not decoded or sum(
+            max(est, _decoded_bytes(f)) for est, f in zip(ests, frames)
         ) <= budget
 
     def read_raw(
@@ -1039,15 +1115,18 @@ class SnapshotTable(ManifestLog):
         ``(checkpoint_id, batch_id)`` is a no-op (exactly-once).
 
         On a merge-on-read table that already holds data, an LWW merge
-        appends the batch's winners as a delta layer in one write query
-        (see :meth:`_append_commit`); a snapshot merge is one write query
-        too; every other merge runs one stats pass over the batch
-        (quarantine count, touched buckets) and then the copy-on-write join
-        and bucket rewrite (:meth:`_write_commit`). Inputs that fit one
-        partition (10 MB by default, see :meth:`_fits_one_partition`) run
-        each of these queries with no Exchange: the append and the
-        snapshot merge as one Spark job, the copy-on-write merge as two
-        (stats pass, write).
+        appends the batch's winners as a delta layer (see
+        :meth:`_append_commit`); a snapshot merge is one write query; every
+        other merge runs one stats pass over the batch (quarantine count,
+        touched buckets) and then the copy-on-write join and bucket rewrite
+        (:meth:`_write_commit`). Inputs that fit one partition (10 MB by
+        default, see :meth:`_fits_one_partition`) run with no Exchange:
+        the append is collected with one ``toArrow()`` and written on the
+        driver (its one Spark job; it must fit once decoded too, and
+        tables with ``bloom_cols`` keep the shuffled Spark write), the
+        snapshot merge is one Spark job, the copy-on-write merge two
+        (stats pass, write). The result's ``write_regime`` says which ran:
+        ``"driver"`` (appends only), ``"one_partition"`` or ``"shuffle"``.
 
         ``expectations`` — declarative data contracts on ingest (the Delta
         Live Tables ``EXPECT`` analog): ``{name: predicate}`` where
@@ -1756,11 +1835,13 @@ class SnapshotTable(ManifestLog):
             self._attempt_dir(new_version, snapshot_id), touched, evolved,
             f"merge_v{new_version}",
         )
-        return self._commit_rewrite(
+        res = self._commit_rewrite(
             man, new_version, snapshot_id, touched, splits, written, evolved,
             n_quarantined, checkpoint_id, batch_id,
             sum((batch_rows or {}).values()),
         )
+        res["write_regime"] = "one_partition" if one else "shuffle"
+        return res
 
     def _attempt_dir(self, new_version: int, snapshot_id: str) -> str:
         """Per-attempt unique data dir: a concurrent writer racing on the
@@ -2175,6 +2256,7 @@ class SnapshotTable(ManifestLog):
         )
         res["n_expectation_failed"] = (
             m["n_exp"] if exp_fails is not None else 0)
+        res["write_regime"] = "one_partition" if one else "shuffle"
         diff = {f"n_{o}": m[f"n_{o}"] for o in _OP_CLASSES}
         diff["n_create"] += n_null
         if not flags.keep_noop:
@@ -2204,28 +2286,40 @@ class SnapshotTable(ManifestLog):
         record (``(ts, _seq, __commit)`` total-orders it against base rows
         and other layers at read time, :meth:`_fold`).
 
-        ``batch`` carries the ``__valid`` and ``_bucket`` columns. The merge
-        is ONE write query with no pass over the batch before it. A batch
-        that fits one partition (:meth:`_fits_one_partition`) is coalesced
-        to it and :func:`lww_dedup` runs there: no Exchange, one Spark job.
-        A larger one is repartitioned by the fan-out key with no fixed
-        partition count (AQE merges partitions) and :func:`lww_dedup`
-        clusters on the same key, so the plan has one Exchange. The slot
+        ``batch`` carries the ``__valid`` and ``_bucket`` columns. The slot
         plan comes from the manifest's ``bucket_rows`` (the :meth:`compact`
-        rule); quarantine and input counts are an ``Observation`` on the
-        write, and the quarantine rows a follow-up job written before the
-        commit. The layer is written through the shared write step
-        (:meth:`_write_buckets`, observing no bucket): touched buckets, row
-        counts and file stats come from its footer pass. A batch with no
-        valid rows commits its checkpoint and quarantine lineage, and no
-        layer.
+        rule). The write takes one of two regimes, reported as the
+        result's ``write_regime``:
+
+        - ``"driver"``: a batch that fits one partition once decoded
+          (:meth:`_fits_one_partition` with ``decoded=True``, 10 MB by
+          default, which bounds the collect) is projected by Spark —
+          validity and expectation flags, the cast payload, ``_seq``,
+          ``_deleted``, bucket and slot, with no Exchange — and collected
+          with one ``toArrow()``, the append's one Spark job. The driver
+          counts the flags, keeps the LWW winners (:func:`arrow_write.
+          lww_winners`, :func:`lww_dedup`'s order) and writes one parquet
+          file per (bucket, slot) with pyarrow (:func:`arrow_write.
+          write_slot_files`): no Spark write job, no ``_SUCCESS`` file.
+        - ``"shuffle"``: a larger batch, or any batch on a table with
+          ``bloom_cols`` (pyarrow writes no parquet-mr bloom filters) or
+          under a session codec pyarrow lacks, is repartitioned by the
+          fan-out key with no fixed partition count (AQE merges partitions)
+          and :func:`lww_dedup` clusters on the same key, so the plan has
+          one Exchange. Quarantine and input counts are an ``Observation``
+          on the write.
+
+        The Spark regime writes through the shared write step
+        (:meth:`_write_buckets`, observing no bucket); both regimes take
+        touched buckets, row counts and file stats from the one footer pass
+        (:meth:`_layer_footers`) and writes quarantined rows with a
+        follow-up Spark job before the commit. A batch with no valid rows
+        commits its checkpoint and quarantine lineage, and no layer.
 
         Live row counts for the layered buckets become UNKNOWN (computing a
         layer's net effect is exactly the read this mode defers), so
         ``count_rows()`` falls back to a scan until ``compact()`` folds the
         layers and re-observes."""
-        from pyspark.sql import Observation
-
         ids = list(self.model.identifiers)
         splits = self._plan_splits(
             {int(b): n for b, n in man.get("bucket_rows", {}).items()}
@@ -2245,65 +2339,53 @@ class SnapshotTable(ManifestLog):
                 F.xxhash64(*ids),
                 F.coalesce(split_map[F.col(BUCKET)], F.lit(1)),
             ).cast("int")
-        obs = Observation(f"append_v{new_version}")
-        metrics = [F.count_if(~F.col("__valid")).alias("n_bad"),
-                   F.count_if(F.col("__valid")).alias("n_input")]
-        if exp_fails is not None:
-            metrics.append(F.count_if(exp_fails).alias("n_exp"))
-        # __valid rides along unused: the delta projection below drops it.
-        # A batch that fits one partition is coalesced instead: the window
-        # needs no Exchange then (see _fits_one_partition)
-        fanned = (
-            batch.observe(obs, *metrics)
-            .filter(F.col("__valid"))
-            .withColumn(SLOT, slot)
-        )
-        fanned = (fanned.coalesce(1) if self._fits_one_partition(batch)
-                  else fanned.repartition(*fan))
-        winners = lww_dedup(fanned, self.model, cluster_cols=fan)
         # all but the per-commit literal is schema-stable — cached across
         # a replay's micro-batches (see _expr_cache)
-        _dkey = ("mor_delta", evolved.json(), tuple(winners.columns))
+        _dkey = ("mor_delta", evolved.json(), tuple(batch.columns))
         if _dkey not in self._expr_cache:
             self._expr_cache[_dkey] = ([
                 *[F.col(k) for k in ids],
                 *[
                     (F.col(f.name).try_cast(f.dataType)
-                     if f.name in winners.columns
+                     if f.name in batch.columns
                      else F.lit(None).cast(f.dataType)).alias(f.name)
                     for f in evolved.fields if f.name not in ids
                 ],
-                (F.col("seq") if "seq" in winners.columns else F.lit(-1))
+                (F.col("seq") if "seq" in batch.columns else F.lit(-1))
                 .cast("long").alias(META_SEQ),
                 (F.lower(F.col("op")) == DELETE_OP).alias(META_DELETED),
             ],)
         (_dsel,) = self._expr_cache[_dkey]
-        # write-ordered files (see _fanout_frame); the window's sort on
-        # (bucket, slot, ids, ...) already provides this order
-        delta = winners.select(
-            *_dsel,
-            F.lit(new_version).cast("long").alias(META_COMMIT),
-            F.col(BUCKET), F.col(SLOT),
-        ).sortWithinPartitions(BUCKET, SLOT, *ids)
-        written = self._write_buckets(
-            delta, man, self._attempt_dir(new_version, snapshot_id), [],
-            evolved, f"append_v{new_version}")
-        m = obs.get
-        n_quarantined = m["n_bad"]
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec")
+        regime = (
+            "driver" if (not man.get("bloom_cols")
+                         and codec in arrow_write.ARROW_CODECS
+                         and self._fits_one_partition(batch, decoded=True))
+            else "shuffle"
+        )
+        data_dir = self._attempt_dir(new_version, snapshot_id)
+        if regime == "driver":
+            files, rows, stats, counts = self._driver_append(
+                batch, _dsel, slot, exp_fails, evolved, new_version,
+                data_dir, codec)
+        else:
+            files, rows, stats, counts = self._spark_append(
+                batch, _dsel, slot, fan, exp_fails, evolved, man,
+                new_version, data_dir)
+        n_quarantined = counts["n_bad"]
 
         _t0 = time.perf_counter()
         if n_quarantined:
             self._write_quarantine(batch, exp_reason, new_version, snapshot_id)
         _prof("quarantine_write", _t0)
 
-        touched = sorted(int(b) for b in written.files)
+        touched = sorted(int(b) for b in files)
         row = functools.partial(_lineage_row, checkpoint_id, batch_id,
                                 snapshot_id)
         # create/update/delete cannot be classified without reading the
         # base — the whole point of this path; the applied row count is
         # recorded honestly as n_append (None when a footer was unreadable)
-        lineage_rows = [row(bk, n_append=written.rows.get(bk))
-                        for bk in touched]
+        lineage_rows = [row(bk, n_append=rows.get(bk)) for bk in touched]
         if n_quarantined:
             lineage_rows.append(row(-1, n_quarantined=n_quarantined,
                                     n_append=0))
@@ -2323,18 +2405,18 @@ class SnapshotTable(ManifestLog):
         # our manifest version), so the fold's total order is unchanged.
         def build(base: dict, version: int) -> dict:
             deltas = list(base.get("deltas") or [])
-            if written.files:
+            if files:
                 deltas.append({
                     "commit": version,
-                    "files": written.files,
-                    "splits": {b: splits.get(int(b), 1) for b in written.files},
+                    "files": files,
+                    "splits": {b: splits.get(int(b), 1) for b in files},
                 })
             bucket_rows = dict(base.get("bucket_rows", {}))
-            for bk, n in written.rows.items():
+            for bk, n in rows.items():
                 bucket_rows[str(bk)] = bucket_rows.get(str(bk), 0) + n
             return next_manifest(
                 base, version, snapshot_id, evolved, checkpoint_id, batch_id,
-                lineage_rows, quarantine_dir, written.stats, deltas=deltas,
+                lineage_rows, quarantine_dir, stats, deltas=deltas,
                 bucket_rows=bucket_rows,
                 # a layered bucket's live rows are unknown until compact()
                 # folds it and re-observes (see docstring)
@@ -2353,14 +2435,113 @@ class SnapshotTable(ManifestLog):
             "version": manifest["version"],
             "touched_buckets": touched,
             "metadata_rebases": n_rebases,
+            "write_regime": regime,
             # valid batch rows that entered the MERGE (post-quarantine,
             # pre-LWW-dedup) — the denominator for pre-filter reduction
-            "n_input": m["n_input"],
-            "n_append": sum(written.rows.values()),
+            "n_input": counts["n_input"],
+            "n_append": sum(rows.values()),
             "n_quarantined": n_quarantined,
-            "n_expectation_failed": m["n_exp"] if exp_fails is not None else 0,
+            "n_expectation_failed": (counts["n_exp"] if exp_fails is not None
+                                     else 0),
             "n_delta_layers": len(manifest.get("deltas") or []),
         }
+
+    def _spark_append(
+        self, batch: DataFrame, dsel: list, slot, fan: tuple, exp_fails,
+        evolved: T.StructType, man: dict, new_version: int, data_dir: str,
+    ) -> tuple[dict, dict, dict, dict]:
+        """The append's Spark write (:meth:`_append_commit`'s ``shuffle``
+        regime): :func:`lww_dedup` after a repartition by ``fan``, the
+        ``dsel`` projection, then :meth:`_write_buckets`. Returns the
+        footer pass's files, rows and stats, and the observed counts."""
+        from pyspark.sql import Observation
+
+        obs = Observation(f"append_v{new_version}")
+        metrics = [F.count_if(~F.col("__valid")).alias("n_bad"),
+                   F.count_if(F.col("__valid")).alias("n_input")]
+        if exp_fails is not None:
+            metrics.append(F.count_if(exp_fails).alias("n_exp"))
+        # __valid rides along unused: the delta projection below drops it
+        fanned = (
+            batch.observe(obs, *metrics)
+            .filter(F.col("__valid"))
+            .withColumn(SLOT, slot)
+        )
+        winners = lww_dedup(fanned.repartition(*fan), self.model,
+                            cluster_cols=fan)
+        # write-ordered files (see _fanout_frame); the window's sort on
+        # (bucket, slot, ids, ...) already provides this order
+        delta = winners.select(
+            *dsel,
+            F.lit(new_version).cast("long").alias(META_COMMIT),
+            F.col(BUCKET), F.col(SLOT),
+        ).sortWithinPartitions(BUCKET, SLOT, *self.model.identifiers)
+        written = self._write_buckets(
+            delta, man, data_dir, [], evolved, f"append_v{new_version}")
+        return written.files, written.rows, written.stats, obs.get
+
+    def _driver_append(
+        self, batch: DataFrame, dsel: list, slot, exp_fails,
+        evolved: T.StructType, new_version: int, data_dir: str, codec: str,
+    ) -> tuple[dict, dict, dict, dict]:
+        """The append's driver write (:meth:`_append_commit`'s ``driver``
+        regime): one Spark projection of the whole batch — ``dsel``, the
+        validity and expectation flags, bucket and slot, with no Exchange —
+        collected by one ``toArrow()``; the flags are counted, the LWW
+        winners kept and the files written on the driver. The LWW order is
+        :func:`lww_dedup`'s, over the batch's own version and ``seq``
+        values (a cast one rides along when the stored type differs).
+        Returns the same tuple as :meth:`_spark_append`."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        _t0 = time.perf_counter()
+        self.model.validate_frame(batch)
+        version_col = self.model.version_cols[0]
+        types = {f.name: f.dataType for f in evolved.fields}
+        extra, order = [], []
+        for src, own in ((version_col, version_col), ("seq", META_SEQ)):
+            if src == "seq" and src not in batch.columns:
+                continue
+            if (src in batch.columns and batch.schema[src].dataType
+                    == types.get(own, T.LongType())):
+                order.append(own)
+            else:
+                order.append(f"__ord_{src}")
+                extra.append(F.col(src).alias(order[-1]))
+        flags = [F.col("__valid")]
+        if exp_fails is not None:
+            flags.append(exp_fails.alias("__exp"))
+        tbl = batch.select(*dsel, *flags, F.col(BUCKET), slot.alias(SLOT),
+                           *extra).toArrow()
+        _prof("collect", _t0)
+
+        _t0 = time.perf_counter()
+        valid = tbl.column("__valid")
+        n_input = pc.sum(valid).as_py() or 0
+        counts = {"n_input": n_input, "n_bad": tbl.num_rows - n_input}
+        if exp_fails is not None:
+            counts["n_exp"] = pc.sum(tbl.column("__exp")).as_py() or 0
+        winners = arrow_write.lww_winners(
+            tbl.filter(valid), [BUCKET, SLOT, *self.model.identifiers], order)
+        out_names = [f.name for f in tbl.schema][:len(dsel)]
+        winners = winners.append_column(
+            META_COMMIT, pa.array([new_version] * winners.num_rows,
+                                  pa.int64()))
+        field_ids = {f.name: int(f.metadata[_FIELD_ID_KEY])
+                     for f in evolved.fields
+                     if _FIELD_ID_KEY in (f.metadata or {})}
+        field_ids.update(_META_FIELD_IDS)
+        schema = arrow_write.file_schema(
+            winners.select([*out_names, META_COMMIT]).schema, field_ids)
+        arrow_write.write_slot_files(winners, data_dir, BUCKET, SLOT, schema,
+                                     codec)
+        _prof("driver_write", _t0)
+        _t0 = time.perf_counter()
+        files, rows, stats = self._layer_footers(
+            data_dir, self._stat_cols(evolved))
+        _prof("footer_pass", _t0)
+        return files, rows, stats, counts
 
     def apply_diff(self, diff_df: DataFrame, checkpoint_id: str = "diff",
                    batch_id: int | None = None) -> dict[str, Any]:

@@ -211,6 +211,14 @@ def stream_replay(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
+        if stateful_prefilter and state_ttl:
+            # the TTL's processing-time timeout would keep the bounded query
+            # running empty batches (see stateful_lww_filter); the setting
+            # is session-wide, so the block holds only the start()
+            from diffsync_spark.streaming.stateful import no_data_batches_off
+
+            with no_data_batches_off(spark):
+                return writer.start()
     return writer.start()
 
 

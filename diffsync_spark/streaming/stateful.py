@@ -23,6 +23,8 @@ winner selection is vectorized pandas over the (small) duplicate group.
 
 from __future__ import annotations
 
+import contextlib
+import threading
 from typing import Iterator
 
 import pandas as pd
@@ -78,6 +80,12 @@ def stateful_lww_filter(
     Eviction is always safe — a later duplicate for an evicted key simply
     flows through and loses the LWW comparison at the sink; the filter is an
     optimization, never the correctness anchor.
+
+    A processing-time timeout makes Spark ask for another micro-batch after
+    every batch, so a ``trigger(availableNow=True)`` query over a filter with
+    a TTL runs empty batches forever. Start such a query inside
+    :func:`no_data_batches_off`: timed-out keys are then evicted in the
+    batches that carry data.
     """
     version_col = model.version_cols[0]
     out_schema = stream.schema
@@ -116,3 +124,35 @@ def stateful_lww_filter(
                          if state_ttl else GroupStateTimeout.NoTimeout),
         )
     )
+
+
+# serializes no_data_batches_off's set / start / restore across threads
+_NO_DATA_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def no_data_batches_off(spark):
+    """Start streaming queries in this block without no-data micro-batches
+    (``spark.sql.streaming.noDataMicroBatches.enabled``, which a query
+    reads from its session's conf when it starts); the session's setting
+    is restored on exit. This lets an ``availableNow`` query over
+    :func:`stateful_lww_filter` with a ``state_ttl`` end once its input
+    is drained.
+
+    The setting is session-wide while the block runs. Blocks in different
+    threads take one process-wide lock, so their saves and restores never
+    interleave and the session is always left as it was. A query another
+    thread starts on the same session outside such a block, while one
+    runs, also starts without no-data batches: keep the block to the
+    ``start()`` call, as ``stream_replay`` does."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    with _NO_DATA_LOCK:
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "false")
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)

@@ -2,16 +2,20 @@
 
     python3 scripts/ab_pairs.py --parent ../parent --change . \\
         --workload snapshot_sync --seeds 801-810 --seconds 6 --out ab.json
+    python3 scripts/ab_pairs.py --parent ../parent --change . \\
+        --workload mor_tail --seeds 901-903 --trace 1 --out ab_trace.json
     python3 scripts/ab_pairs.py --report ab.json
 
 Each seed is one pair: ``perfbench/run.py --workload W --seed S --seconds
-T --trace 0`` runs once in each checkout, one after the other, and the
+T --trace X`` runs once in each checkout, one after the other, and the
 side that goes first alternates from pair to pair, so a drift of the host
 does not favour either side. The parent checkout can be any copy of the
 parent commit (``git archive <commit> | tar -x -C ../parent``).
 
 The table has one row per end-to-end metric of ``BENCHMARK.json`` (read
-from the change checkout): the median and quartiles (q1-q3) of each side,
+from the change checkout), or with ``--trace 1`` (traced runs, whose
+result objects carry the per-layer metrics) one row per ``per_layer``
+metric, so a change can show the phase it moves: the median and quartiles (q1-q3) of each side,
 the change of the median in percent, the pairs the change won (by the
 metric's ``better`` direction), and whether the median gap exceeds the
 parent's interquartile range. Below it are the failed/attempted operation
@@ -40,12 +44,14 @@ def _seeds(spec: str) -> list[int]:
     return out
 
 
-def _run(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+def _run(checkout: str, workload: str, seed: int, seconds: float,
+         trace: int) -> dict:
     """One benchmark run; its result object, or a failure record."""
     t0 = time.perf_counter()
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds),
+         "--trace", str(trace)],
         cwd=checkout, capture_output=True, text=True)
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     try:
@@ -110,6 +116,8 @@ def main(argv=None) -> int:
     ap.add_argument("--workload")
     ap.add_argument("--seeds", help="e.g. 801-810 or 801,803-805")
     ap.add_argument("--seconds", type=float, default=6)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: traced runs, reporting the per-layer metrics")
     ap.add_argument("--out", help="JSON file for the series")
     ap.add_argument("--report", help="print the table of a saved series")
     a = ap.parse_args(argv)
@@ -120,9 +128,9 @@ def main(argv=None) -> int:
     if not (a.parent and a.workload and a.seeds):
         ap.error("--parent, --workload and --seeds are required")
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        metrics = json.load(f)["per_layer" if a.trace else "end_to_end"]
     series = {"workload": a.workload, "seconds": a.seconds,
-              "metrics": metrics, "pairs": []}
+              "trace": a.trace, "metrics": metrics, "pairs": []}
     sides = {"parent": os.path.abspath(a.parent),
              "change": os.path.abspath(a.change)}
     for i, seed in enumerate(_seeds(a.seeds)):
@@ -130,7 +138,8 @@ def main(argv=None) -> int:
         pair = {"seed": seed, "first": order[0], "parent": {}, "change": {}}
         series["pairs"].append(pair)
         for side in order:
-            pair[side] = _run(sides[side], a.workload, seed, a.seconds)
+            pair[side] = _run(sides[side], a.workload, seed, a.seconds,
+                              a.trace)
             print(f"seed {seed} {side}: "
                   f"{pair[side].get('error') or 'ok'} "
                   f"({pair[side]['wall_s']} s)", file=sys.stderr, flush=True)

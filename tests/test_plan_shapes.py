@@ -515,8 +515,12 @@ def test_rewrites_write_no_op_class_column(spark, tmp_path):
 
 
 def test_small_mor_append_is_one_job(spark, tmp_path):
-    """A merge-on-read LWW append whose batch fits one partition runs the
-    LWW window and the bucket fan-out on it: no Exchange, one Spark job."""
+    """A merge-on-read LWW append whose batch fits one partition is
+    written on the driver: one Spark job (the ``toArrow()`` collect of
+    the batch's projection), no Spark write plan, and a layer dir with
+    only parquet files (no ``_SUCCESS`` or ``.crc`` files)."""
+    import os
+
     t, _ = _kv_table(spark, tmp_path, "one_mor_write", "mor")
     plans = _write_plans(t)
     t.merge(_parquet(spark.createDataFrame(_rows(16), _CDC),
@@ -527,8 +531,14 @@ def test_small_mor_append_is_one_job(spark, tmp_path):
         spark, "one-mor-merge", lambda: t.merge(up, checkpoint_id="c",
                                                 batch_id=2))
     assert res["n_append"] == 16 and res["n_quarantined"] == 0
+    assert res["write_regime"] == "driver"
     assert jobs == 1
-    assert "Exchange" not in plans[-1] and "Window" in plans[-1]
+    assert plans == []
+    layer = t._manifest()["deltas"][-1]["files"]
+    layer_dir = os.path.dirname(os.path.dirname(os.path.dirname(
+        next(iter(layer.values()))[0])))
+    names = [f for _, _, fs in os.walk(layer_dir) for f in fs]
+    assert names and all(f.endswith(".parquet") for f in names), names
 
 
 def test_small_snapshot_sync_is_one_job(spark, tmp_path):

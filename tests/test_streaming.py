@@ -130,6 +130,33 @@ def test_stream_prefilter_identical_state_less_input(spark, tmp_path, target_df,
     assert 0 < in_filt < in_plain  # real reduction, with rows still flowing
 
 
+def test_stream_prefilter_with_ttl_ends(spark, tmp_path, target_df,
+                                        changelog_pdf):
+    """An availableNow ``stream_replay`` through the pre-filter with a
+    state TTL ends once the feed is drained (the TTL's processing-time
+    timeout would keep it running empty batches), and lands the same
+    state as a plain replay of the feed."""
+    from diffsync_spark.streaming.replay import replay_batches
+
+    log_dir = str(tmp_path / "chg")
+    _write_changelog_files(spark, changelog_pdf, log_dir, n_files=2)
+    tables = []
+    for name in ("ttl", "plain"):
+        t = SnapshotTable.create(spark, str(tmp_path / name),
+                                 TRANSCRIPT_MODEL, schema=target_df.schema,
+                                 n_buckets=4)
+        t.merge(target_df.withColumn("op", F.lit("insert")), mode="force",
+                checkpoint_id="boot", batch_id=0)
+        tables.append(t)
+    q = stream_replay(tables[0], log_dir, CHANGELOG_DDL,
+                      str(tmp_path / "ckpt"), max_files_per_trigger=1,
+                      stateful_prefilter=True, state_ttl="1 millisecond")
+    assert q.awaitTermination(120)
+    replay_batches(tables[1], spark.read.parquet(log_dir), n_batches=2,
+                   checkpoint_id="r")
+    pd.testing.assert_frame_equal(_state(tables[0]), _state(tables[1]))
+
+
 def test_two_streams_one_table(spark, tmp_path, target_df, changelog_pdf):
     """Two Structured Streaming replays (distinct checkpoints, disjoint
     event slices) feed ONE table concurrently — the multi-worker shared
@@ -222,7 +249,10 @@ def test_stateful_filter_ttl_eviction_is_safe(spark, tmp_path, target_df,
     but the merged final state must be IDENTICAL to a plain replay (the
     filter is an optimization; the sink is the correctness anchor)."""
     from diffsync_spark.streaming.replay import replay_batches
-    from diffsync_spark.streaming.stateful import stateful_lww_filter
+    from diffsync_spark.streaming.stateful import (
+        no_data_batches_off,
+        stateful_lww_filter,
+    )
 
     chg_dir = str(tmp_path / "chg")
     _write_changelog_files(spark, changelog_pdf, chg_dir, n_files=4)
@@ -235,12 +265,15 @@ def test_stateful_filter_ttl_eviction_is_safe(spark, tmp_path, target_df,
               .option("maxFilesPerTrigger", 1).parquet(chg_dir))
     filtered = stateful_lww_filter(stream, TRANSCRIPT_MODEL,
                                    state_ttl="1 millisecond")
-    q = (filtered.writeStream.foreachBatch(
-            lambda df, bid: ta.merge(df, checkpoint_id="s", batch_id=bid,
-                                     mode="lww"))
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    # the TTL's processing-time timeout asks for a batch after every batch;
+    # without no-data batches the bounded query ends once drained
+    with no_data_batches_off(spark):
+        q = (filtered.writeStream.foreachBatch(
+                lambda df, bid: ta.merge(df, checkpoint_id="s", batch_id=bid,
+                                         mode="lww"))
+             .option("checkpointLocation", str(tmp_path / "ck"))
+             .trigger(availableNow=True).start())
+    assert q.awaitTermination(180)
 
     tb = SnapshotTable.create(spark, str(tmp_path / "b"), TRANSCRIPT_MODEL,
                               schema=target_df.schema, n_buckets=4)
@@ -251,6 +284,47 @@ def test_stateful_filter_ttl_eviction_is_safe(spark, tmp_path, target_df,
     a = ta.read().orderBy("conv_id", "turn_idx").toPandas().reset_index(drop=True)
     b = tb.read().orderBy("conv_id", "turn_idx").toPandas().reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_no_data_batches_off_is_thread_safe(spark):
+    """Threads that enter ``no_data_batches_off`` on one session at once
+    each see no-data batches off inside the block, and the session's
+    setting is restored after the last one leaves."""
+    import sys
+    import threading
+
+    from diffsync_spark.streaming.stateful import no_data_batches_off
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    seen: list[str] = []
+    errors: list[BaseException] = []
+
+    def worker():
+        try:
+            for _ in range(15):
+                with no_data_batches_off(spark):
+                    seen.append(spark.conf.get(key))
+        except BaseException as e:  # re-raised on the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+        if prev is not None:
+            spark.conf.set(key, prev)
+    assert not errors, errors
+    assert seen == ["false"] * 8 * 15
+    assert spark.conf.get(key, None) == prev
 
 
 def test_session_window_stats(spark, tmp_path):
